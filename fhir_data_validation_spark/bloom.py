@@ -128,7 +128,9 @@ class KeyIndex:
         delta scans ONCE — ``n_delta`` rides the same aggregation as a
         count of delta rows (a separate ``count()`` re-executed the
         whole upstream, e.g. an Iceberg incremental scan, a second time
-        — round-5 review batch 9)."""
+        — round-5 review batch 9). The merged blocks are cached; the
+        cache of this index's own merge (from an earlier ``add``) is
+        released, so a chain of ``add`` calls keeps only its last."""
         self._check_type(df, col)
         block, masks = _probe_exprs(F.col(col), self.n_blocks, self.k)
         delta = (df.where(F.col(col).isNotNull())
@@ -144,6 +146,11 @@ class KeyIndex:
         from pyspark import StorageLevel
         merged_all = merged_all.persist(StorageLevel.MEMORY_AND_DISK)
         n_delta = (merged_all.agg(F.sum("_n")).collect()[0][0] or 0)
+        # the collect materialized the new merge: the previous one (a
+        # chain of add() calls) is no longer read and leaves the cache
+        previous = getattr(self, "_persisted", None)
+        if previous is not None:
+            previous.unpersist()
         merged = merged_all.drop("_n")
         out = KeyIndex(merged, self.n_blocks, self.k, self.bits_per_key,
                        self.n_items + int(n_delta), self.key_type)

@@ -21,8 +21,9 @@ from __future__ import annotations
 
 import json
 import re
+import threading
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -137,10 +138,37 @@ class CompiledPlan:
     # (Phase B.2: ENUM_VALIDATION_SKIPPED — transparency without guessing);
     # each is a dict matching the violations schema, zero distributed cost
     notices: list = field(default_factory=list)
+    # input-independent Column trees of the validate path, see memo()
+    _memo: dict = field(default_factory=dict, repr=False, compare=False)
+    _memo_lock: Any = field(default_factory=threading.RLock, repr=False,
+                            compare=False)
 
     @property
     def rule_ids(self) -> list[str]:
         return [p.rule.id for p in self.predicates] + [d.rule.id for d in self.dataset_plans]
+
+    @property
+    def row_rule_ids(self) -> tuple[str, ...]:
+        """Ids of the per-row predicate rules (their violations carry a
+        row's group even when its key is NULL)."""
+        return tuple(p.rule.id for p in self.predicates)
+
+    def memo(self, key: Any, build: Callable[[], Any]) -> Any:
+        """``build()``'s value for ``key``, built on first use and shared by
+        every later validate against this plan.
+
+        For the input-independent ``Column`` trees of the validate path
+        (fused-pass filters and violation structs, verdict expressions,
+        dataset-plan expressions, and frames derived from the dims alone):
+        building them is driver-side py4j work that would otherwise repeat
+        per call. Only name-bound ``F.col`` trees belong here, never
+        ``df[...]`` (bound to one DataFrame).
+        Filled lazily, not by ``compile_ruleset``, and under a lock:
+        concurrent batches (``ResumableRun``) get the same objects."""
+        with self._memo_lock:
+            if key not in self._memo:
+                self._memo[key] = build()
+            return self._memo[key]
 
     def needs_dedupe(self) -> bool:
         """A5 dedup is only needed when two rules can emit the same

@@ -21,7 +21,13 @@ Execution model (SURVEY §3.4 / §4.3), re-expressing the reference pipeline
 4. **Verdicts** — per-(group, rule) pass/fail aggregation
    (``FinalizeSummary``, ``ValidationPipeline.cs:755-770``), including rules
    with zero violations; pass ⇔ zero error-severity violations
-   (``Controllers/ValidateController.cs:70``).
+   (``Controllers/ValidateController.cs:70``). One aggregation with no
+   join: rows per group exploded over the rule ids, unioned with one row
+   per violation, grouped once (see :func:`build_verdicts`).
+
+Every input-independent ``Column`` tree of these steps is built on the
+first validate against a compiled plan and reused after that
+(:meth:`CompiledPlan.memo`); a warm call only assembles DataFrames.
 
 The engine never mutates input rows (zero-mutation guarantee,
 ``docs/01_architecture_spec.md:28-29``): violations and verdicts are new
@@ -30,9 +36,11 @@ DataFrames; the input is only read.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .compiler import CompiledPlan, EngineConfig, compile_ruleset
@@ -52,6 +60,8 @@ class ValidationResult:
     # NULL-KEY row's violation (doc_id null, rule per-row) apart from a
     # genuine dataset-level row (round-5 review batch 9)
     row_rule_ids: tuple[str, ...] = ()
+    # violations per (severity, rule_type), see _counts()
+    _count_memo: dict | None = field(default=None, repr=False, compare=False)
 
     def unpersist(self) -> None:
         """Release the cached violations (batch runners call this once a
@@ -59,10 +69,23 @@ class ValidationResult:
         if self._persisted is not None:
             self._persisted.unpersist()
 
+    def _counts(self) -> dict[tuple[str, str], int]:
+        """Violations per (severity, rule_type): one aggregation over the
+        violations, run on first use and shared by :meth:`passed` and
+        :meth:`response`."""
+        if self._count_memo is None:
+            self._count_memo = {
+                (r["severity"], r["rule_type"]): r["n"]
+                for r in (self.violations
+                          .groupBy("severity", "rule_type")
+                          .agg(F.count(F.lit(1)).alias("n"))
+                          .collect())}
+        return self._count_memo
+
     def passed(self) -> bool:
         """Run-level pass/fail: no error-severity violations anywhere."""
-        return self.violations.where(
-            F.col("severity") == Severity.ERROR).limit(1).count() == 0
+        return not any(n for (sev, _), n in self._counts().items()
+                       if sev == Severity.ERROR)
 
     def contract_report(self, limit: int = 20) -> list[dict]:
         """Audit this run's violations against the frozen per-errorCode
@@ -157,9 +180,11 @@ class ValidationResult:
         """S5 response assembly: the reference's ``ValidationResponse``
         payload (``Models/ValidationResponse.cs:9-85``) — error list
         (bounded by ``max_errors``; total counts stay exact), severity +
-        stage summary, metadata — computed in ONE aggregation pass plus one
-        bounded collect. At corpus scale the full violations table stays in
-        the violations DataFrame/sink; this is the API-shaped digest.
+        stage summary, metadata — computed from the one aggregation
+        :meth:`passed` also reads, plus one bounded collect (none when
+        there are no violations). At corpus scale the full violations
+        table stays in the violations DataFrame/sink; this is the
+        API-shaped digest.
 
         ``explain=True`` attaches a structured ``{what, how, confidence}``
         explanation to each returned error (the reference's authoring-mode
@@ -172,15 +197,12 @@ class ValidationResult:
         issues of ALL severities and partition ``totalErrors`` exactly;
         only ``errorCount`` (and ``isValid``, keyed off it) is
         severity='error'-scoped. Pinned by test_response_assembly."""
-        counts = (self.violations
-                  .groupBy("severity", "rule_type")
-                  .agg(F.count(F.lit(1)).alias("n"))
-                  .collect())
         by_sev: dict[str, int] = {}
         by_type: dict[str, int] = {}
-        for r in counts:
-            by_sev[r["severity"]] = by_sev.get(r["severity"], 0) + r["n"]
-            by_type[r["rule_type"]] = by_type.get(r["rule_type"], 0) + r["n"]
+        for (sev, rule_type), n in self._counts().items():
+            by_sev[sev] = by_sev.get(sev, 0) + n
+            by_type[rule_type] = by_type.get(rule_type, 0) + n
+        total = sum(by_sev.values())
         # Stage buckets mirroring ValidationSummary (ValidationResponse.cs:53-66):
         #   lintErrorCount — raw-ingest JSON lint findings (rule_type "Ingest",
         #     the PERMISSIVE corrupt-record lane: the analog of the reference's
@@ -200,27 +222,29 @@ class ValidationResult:
         # error_code / element index so per-element violations of one
         # rule on one doc don't tie at the truncation boundary and flap
         # run-to-run (round-5 review batch 9)
-        sev_rank = (F.when(F.col("severity") == Severity.ERROR, 0)
-                    .when(F.col("severity") == Severity.WARNING, 1)
-                    .otherwise(2))
-        d = F.col("detail")
-        errors = [
-            {"resourceId": r["doc_id"], "ruleId": r["rule_id"],
-             "ruleType": r["rule_type"], "errorCode": r["error_code"],
-             "severity": r["severity"], "source": r["source"],
-             "fieldPath": r["column"], "details": dict(r["detail"] or {})}
-            for r in (self.violations
-                      .orderBy(sev_rank, "rule_id", "doc_id", "column",
-                               "error_code",
-                               d["index"].cast("int"),
-                               d["innerIndex"].cast("int"), d["value"])
-                      .limit(max_errors).collect())]
+        errors = []
+        if total:
+            sev_rank = (F.when(F.col("severity") == Severity.ERROR, 0)
+                        .when(F.col("severity") == Severity.WARNING, 1)
+                        .otherwise(2))
+            d = F.col("detail")
+            errors = [
+                {"resourceId": r["doc_id"], "ruleId": r["rule_id"],
+                 "ruleType": r["rule_type"], "errorCode": r["error_code"],
+                 "severity": r["severity"], "source": r["source"],
+                 "fieldPath": r["column"],
+                 "details": dict(r["detail"] or {})}
+                for r in (self.violations
+                          .orderBy(sev_rank, "rule_id", "doc_id", "column",
+                                   "error_code",
+                                   d["index"].cast("int"),
+                                   d["innerIndex"].cast("int"), d["value"])
+                          .limit(max_errors).collect())]
         if explain:
             from .explanations import explain_violation
             for e in errors:
                 e["explanation"] = explain_violation(
                     e["errorCode"], e["fieldPath"], e["details"])
-        total = sum(by_sev.values())
         summary = {
             "totalErrors": total,
             "errorCount": by_sev.get(Severity.ERROR, 0),
@@ -250,6 +274,8 @@ class ValidationEngine:
         self.config = config or EngineConfig()
         self._plan: CompiledPlan | None = None
         self._plan_schema: str | None = None
+        # batch runners validate from several threads: one compile per schema
+        self._compile_lock = threading.Lock()
 
     def compile(self, df: DataFrame) -> CompiledPlan:
         """Compile against the input schema (pre-flight; raises
@@ -261,11 +287,12 @@ class ValidationEngine:
         full rule set) that would otherwise repeat per batch in
         ResumableRun / streaming foreachBatch loops."""
         key = df.schema.json()
-        if self._plan is None or self._plan_schema != key:
-            self._plan = compile_ruleset(self.ruleset, df.schema, self.config,
-                                         self.dims)
-            self._plan_schema = key
-        return self._plan
+        with self._compile_lock:
+            if self._plan is None or self._plan_schema != key:
+                self._plan = compile_ruleset(self.ruleset, df.schema,
+                                             self.config, self.dims)
+                self._plan_schema = key
+            return self._plan
 
     def validate(self, df: DataFrame) -> ValidationResult:
         # NOTE: do not .persist() the dims here — caching a dim replaces its
@@ -287,8 +314,7 @@ class ValidationEngine:
         return ValidationResult(violations=violations.drop("stage"),
                                 verdicts=verdicts, _persisted=violations,
                                 key_col=self.config.key_col,
-                                row_rule_ids=tuple(
-                                    p.rule.id for p in plan.predicates))
+                                row_rule_ids=plan.row_rule_ids)
 
     # -- internals ---------------------------------------------------------
 
@@ -312,6 +338,91 @@ class ValidationEngine:
         return out
 
 
+class _FusedChunk(NamedTuple):
+    """The input-independent Column trees of one fused-pass chunk."""
+    any_cond: Column          # the full-scan filter: OR of the conditions
+    fired_bits: Column        # bit b set ⇔ the chunk's rule b fired
+    fired_cols: list          # key, group, exploded violation struct
+    plain_cols: list          # the violation row of a whole-row finding
+    # per-element fan-out (params.perElement): (whole-row filter,
+    # per-element filter, fan-out select, final select); None when no
+    # rule of the chunk has elements
+    per_element: tuple | None
+
+
+def _fused_chunks(plan: CompiledPlan) -> list[_FusedChunk]:
+    """Chunk the per-row rules and build each chunk's Column trees."""
+    cfg = plan.config
+    # HOF-bearing predicates (VectorCheck norm lane, …) are CodegenFallback:
+    # chunk them separately so the main rules' shared scan filter stays
+    # inside whole-stage codegen
+    friendly = [p for p in plan.predicates if not p.hof]
+    fallback = [p for p in plan.predicates if p.hof]
+    chunks = ([friendly[i:i + CHUNK]
+               for i in range(0, len(friendly), CHUNK)]
+              + [fallback[i:i + CHUNK]
+                 for i in range(0, len(fallback), CHUNK)])
+    out = []
+    for chunk in chunks:
+        # the full-input stage keeps the plain OR filter (short-circuiting,
+        # codegen); the surviving (violating) rows then get a fired-rule
+        # bitmask — still in the codegen scan stage, but over O(bad rows)
+        # only — so the post-exchange interpreted side guards each struct
+        # with a bit test instead of re-evaluating the rule conditions
+        # (CHUNK=40 < 63 bits)
+        any_cond = chunk[0].condition
+        for p in chunk[1:]:
+            any_cond = any_cond | p.condition
+        fired_bits = F.lit(0).cast("long")
+        for b, p in enumerate(chunk):
+            fired_bits = fired_bits.bitwiseOR(
+                F.when(p.condition, F.lit(1 << b).cast("long"))
+                 .otherwise(F.lit(0).cast("long")))
+        arr = F.array_compact(F.array(*[
+            p.violation_struct(
+                F.col("_fdv_fired")
+                 .bitwiseAND(F.lit(1 << b).cast("long")) != 0)
+            for b, p in enumerate(chunk)]))
+        fired_cols = [F.col(cfg.key_col).cast("string").alias("doc_id"),
+                      F.col(cfg.group_col).cast("string").alias("source"),
+                      F.explode(arr).alias("v")]
+        base = [F.col(c) for c in ("doc_id", "v.rule_id", "v.rule_type",
+                                   "v.error_code", "v.severity", "source",
+                                   "v.column")]
+        plain_cols = [*base, F.col("v.detail").alias("detail"),
+                      F.col("v.stage")]
+        per_element = None
+        if any(p.elements is not None for p in chunk):
+            # per-element fan-out: one violation per bad element with its
+            # index — runs on fired rows only, O(bad elements)
+            # (FhirPathRuleEngine.cs:446-478)
+            fan_out = [*base, F.col("v.detail").alias("_detail"),
+                       F.col("v.stage").alias("stage"),
+                       F.explode("v.elements").alias("e")]
+            final = [*[F.col(c) for c in ("doc_id", "rule_id", "rule_type",
+                                          "error_code", "severity", "source",
+                                          "column")],
+                     F.map_concat(
+                         F.col("_detail"),
+                         F.create_map(
+                             F.lit("index"), F.col("e.i").cast("string"),
+                             F.lit("value"), F.col("e.v")),
+                         # innerIndex only for nested a[*].b[*].c paths
+                         # (composite (i, j) element addressing);
+                         # single-level details keep their exact shape
+                         F.map_filter(
+                             F.create_map(F.lit("innerIndex"),
+                                          F.col("e.j").cast("string")),
+                             lambda _k, v: v.isNotNull()))
+                      .alias("detail"),
+                     F.col("stage")]
+            per_element = (F.col("v.elements").isNull(),
+                           F.col("v.elements").isNotNull(), fan_out, final)
+        out.append(_FusedChunk(any_cond, fired_bits, fired_cols, plain_cols,
+                               per_element))
+    return out
+
+
 def predicate_violations(df: DataFrame, plan: CompiledPlan) -> DataFrame:
     """The fused one-scan pass over all per-row rules.
 
@@ -332,7 +443,9 @@ def predicate_violations(df: DataFrame, plan: CompiledPlan) -> DataFrame:
     their input columns — bounded by bad data, not input size.
 
     Chunked at ``CHUNK`` rules per filter to keep each generated codegen
-    body bounded (SURVEY §7.3a); chunks share the scan via union.
+    body bounded (SURVEY §7.3a); chunks share the scan via union. The
+    chunks' Column trees are built once per compiled plan
+    (:meth:`CompiledPlan.memo`); a call only assembles the DataFrames.
     """
     cfg = plan.config
     if not plan.predicates:
@@ -363,79 +476,19 @@ def predicate_violations(df: DataFrame, plan: CompiledPlan) -> DataFrame:
     except ValueError:
         conf_width = df.sparkSession.sparkContext.defaultParallelism or 200
     width = cfg.violation_partitions or conf_width
-    # HOF-bearing predicates (VectorCheck norm lane, …) are CodegenFallback:
-    # chunk them separately so the main rules' shared scan filter stays
-    # inside whole-stage codegen
-    friendly = [p for p in plan.predicates if not p.hof]
-    fallback = [p for p in plan.predicates if p.hof]
-    chunks = ([friendly[i:i + CHUNK]
-               for i in range(0, len(friendly), CHUNK)]
-              + [fallback[i:i + CHUNK]
-                 for i in range(0, len(fallback), CHUNK)])
     parts = []
-    for chunk in chunks:
-        # the full-input stage keeps the plain OR filter (short-circuiting,
-        # codegen); the surviving (violating) rows then get a fired-rule
-        # bitmask — still in the codegen scan stage, but over O(bad rows)
-        # only — so the post-exchange interpreted side guards each struct
-        # with a bit test instead of re-evaluating the rule conditions
-        # (CHUNK=40 < 63 bits)
-        any_cond = chunk[0].condition
-        for p in chunk[1:]:
-            any_cond = any_cond | p.condition
-        fired_bits = F.lit(0).cast("long")
-        for b, p in enumerate(chunk):
-            fired_bits = fired_bits.bitwiseOR(
-                F.when(p.condition, F.lit(1 << b).cast("long"))
-                 .otherwise(F.lit(0).cast("long")))
-        violating = (df.where(any_cond)
-                       .withColumn("_fdv_fired", fired_bits)
-                       .repartition(width))
-        arr = F.array_compact(F.array(*[
-            p.violation_struct(
-                F.col("_fdv_fired")
-                 .bitwiseAND(F.lit(1 << b).cast("long")) != 0)
-            for b, p in enumerate(chunk)]))
-        fired = (violating
-                 .select(F.col(cfg.key_col).cast("string").alias("doc_id"),
-                         F.col(cfg.group_col).cast("string").alias("source"),
-                         F.explode(arr).alias("v")))
-        base = ["doc_id", "v.rule_id", "v.rule_type", "v.error_code",
-                "v.severity", "source", "v.column"]
-        has_elements = any(p.elements is not None for p in chunk)
-        plain = fired.where(F.col("v.elements").isNull()) if has_elements \
-            else fired
-        plain = plain.select(*base, F.col("v.detail").alias("detail"),
-                             "v.stage")
-        parts.append(plain)
-        if has_elements:
-            # per-element fan-out (params.perElement): one violation per bad
-            # element with its index — runs on fired rows only, O(bad
-            # elements) (FhirPathRuleEngine.cs:446-478)
-            per_el = (fired.where(F.col("v.elements").isNotNull())
-                      .select(*base, F.col("v.detail").alias("_detail"),
-                              F.col("v.stage").alias("stage"),
-                              F.explode("v.elements").alias("e"))
-                      .select("doc_id", "rule_id", "rule_type", "error_code",
-                              "severity", "source", "column",
-                              F.map_concat(
-                                  F.col("_detail"),
-                                  F.create_map(
-                                      F.lit("index"),
-                                      F.col("e.i").cast("string"),
-                                      F.lit("value"), F.col("e.v")),
-                                  # innerIndex only for nested a[*].b[*].c
-                                  # paths (composite (i, j) element
-                                  # addressing); single-level details keep
-                                  # their exact shape
-                                  F.map_filter(
-                                      F.create_map(
-                                          F.lit("innerIndex"),
-                                          F.col("e.j").cast("string")),
-                                      lambda _k, v: v.isNotNull()))
-                               .alias("detail"),
-                              "stage"))
-            parts.append(per_el)
+    for c in plan.memo("engine.fused_chunks", lambda: _fused_chunks(plan)):
+        fired = (df.where(c.any_cond)
+                 .withColumn("_fdv_fired", c.fired_bits)
+                 .repartition(width)
+                 .select(*c.fired_cols))
+        if c.per_element is None:
+            parts.append(fired.select(*c.plain_cols))
+            continue
+        whole_row, per_element, fan_out, final = c.per_element
+        parts.append(fired.where(whole_row).select(*c.plain_cols))
+        parts.append(fired.where(per_element).select(*fan_out)
+                     .select(*final))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -488,69 +541,86 @@ def dedupe_violations(violations: DataFrame) -> DataFrame:
     return best
 
 
+class _VerdictColumns(NamedTuple):
+    """The input-independent Column trees of :func:`build_verdicts`."""
+    group: Column         # partition_key of an input row
+    rows: Column          # rows per group
+    grid: list            # (group, rows) → one zero-count row per rule id
+    events: list          # one row per violation
+    keys: list
+    aggs: list
+    out: list
+
+
+def _verdict_columns(plan: CompiledPlan) -> _VerdictColumns:
+    # NULL group values (input rows and violation sources alike) become a
+    # sentinel partition of their own
+    null_key = "<null>"
+    # a NULL-KEY row's per-row violation carries doc_id NULL but is NOT
+    # dataset-level: it must count under ITS group's verdict (it carries
+    # source), not drift to the <dataset> row while the group reports
+    # passed (round-5 review batch 9). Per-row rules are exactly
+    # plan.predicates; dataset plans and notices stay run-level.
+    row_ids = list(plan.row_rule_ids)
+    is_row_level = F.col("doc_id").isNotNull()
+    if row_ids:
+        is_row_level = is_row_level | F.col("rule_id").isin(row_ids)
+    # the cast and the CASE WHENs below (not coalesce) keep rule_id and
+    # partition_key nullable, as the verdict schema declares them
+    rule_ids = F.array(*[F.lit(r) for r in plan.rule_ids]).cast(
+        "array<string>")
+    group = F.col(plan.config.group_col).cast("string")
+    source = F.col("source")
+    no_count = F.lit(None).cast("int")
+    return _VerdictColumns(
+        group=F.when(group.isNull(), F.lit(null_key)).otherwise(group)
+               .alias("partition_key"),
+        rows=F.count(F.lit(1)).alias("rows"),
+        grid=[F.col("partition_key"), F.explode(rule_ids).alias("rule_id"),
+              F.col("rows"), no_count.alias("_violation"),
+              no_count.alias("_error"), F.lit(False).alias("_run_level")],
+        events=[F.when(~is_row_level, F.lit("<dataset>"))
+                 .when(source.isNull(), F.lit(null_key)).otherwise(source)
+                 .alias("partition_key"),
+                F.col("rule_id"), F.lit(None).cast("long").alias("rows"),
+                F.lit(1).alias("_violation"),
+                F.when(F.col("severity") == Severity.ERROR, 1)
+                 .alias("_error"),
+                (~is_row_level).alias("_run_level")],
+        keys=[F.col("partition_key"), F.col("rule_id"), F.col("_run_level")],
+        aggs=[F.max("rows").alias("rows"),
+              F.count("_violation").alias("violations"),
+              F.count("_error").alias("errors")],
+        out=[F.col("partition_key"), F.col("rule_id"), F.col("rows"),
+             F.col("violations"), F.col("errors"),
+             (F.col("errors") == 0).alias("passed")])
+
+
 def build_verdicts(df: DataFrame, violations: DataFrame,
                    plan: CompiledPlan) -> DataFrame:
     """Per-(partition_key, rule) pass/fail table (A4 re-keyed per partition).
 
     partition_key is the *stable* group value (``source``), not
     ``spark_partition_id()``, so verdicts survive repartitioning and feed the
-    lineage/resume path deterministically (SURVEY §7.3c). Rules with zero
-    violations still get a row: group-rows × rule-ids is built by
-    crossJoin of two tiny aggregates, then violation counts are left-joined.
+    lineage/resume path deterministically (SURVEY §7.3c).
+
+    One aggregation, no join. The input's rows per group are exploded
+    over the plan's rule ids (every rule gets a row per group, violations
+    or not), one row per violation is unioned in, and a single
+    ``groupBy(partition_key, rule_id, run-level flag)`` takes the rows and
+    counts the violations and errors:
+
+    * a violation whose group is absent from the input (a declared but
+      missing group, GroupShare closed world; a value-keyed rule's NULL
+      source) still gets its row, with ``rows`` NULL;
+    * a dataset-level violation (no doc_id, not from a per-row rule)
+      counts under the run-level ``<dataset>`` row; the flag keeps that
+      row apart from a data group literally named ``<dataset>``.
     """
-    cfg = plan.config
-    spark = df.sparkSession
-    # NULL group values become a sentinel partition: a join on NULL keys
-    # would silently drop those verdict rows (SQL NULL ≠ NULL).
-    null_key = "<null>"
-    rows_per_group = (df.groupBy(F.coalesce(F.col(cfg.group_col).cast("string"),
-                                            F.lit(null_key))
-                                 .alias("partition_key"))
-                        .agg(F.count(F.lit(1)).alias("rows")))
-    rule_ids = spark.createDataFrame(
-        [(rid,) for rid in plan.rule_ids], "rule_id string")
-    grid = rows_per_group.crossJoin(F.broadcast(rule_ids))
-
-    # a NULL-KEY row's per-row violation carries doc_id NULL but is NOT
-    # dataset-level: it must count under ITS group's verdict (it carries
-    # source), not drift to the <dataset> row while the group reports
-    # passed (round-5 review batch 9). Per-row rules are exactly
-    # plan.predicates; dataset plans and notices stay run-level.
-    row_ids = [p.rule.id for p in plan.predicates]
-    is_row_level = F.col("doc_id").isNotNull()
-    if row_ids:
-        is_row_level = is_row_level | F.col("rule_id").isin(row_ids)
-    per_group = (violations
-                 .where(is_row_level)
-                 .groupBy(F.coalesce(F.col("source"), F.lit(null_key))
-                          .alias("partition_key"),
-                          F.col("rule_id"))
-                 .agg(F.count(F.lit(1)).alias("violations"),
-                      F.count(F.when(F.col("severity") == Severity.ERROR, 1))
-                       .alias("errors")))
-    # FULL outer: a violation's source may name a partition absent from
-    # df — a declared-but-missing group (GroupShare closed world) or a
-    # value-keyed rule with source '*' (→ '<null>' with no null groups
-    # in the data). A left join would silently drop those rows and
-    # report the failing rule as passed.
-    verdicts = (grid.join(per_group, ["partition_key", "rule_id"], "full")
-                    .select("partition_key", "rule_id", "rows",
-                            F.coalesce("violations", F.lit(0)).alias("violations"),
-                            F.coalesce("errors", F.lit(0)).alias("errors"))
-                    .withColumn("passed", F.col("errors") == 0))
-
-    # dataset-level violations (no doc_id, non-per-row rule) → a
-    # run-level verdict row
-    run_level = (violations.where(~is_row_level)
-                 .groupBy("rule_id")
-                 .agg(F.count(F.lit(1)).alias("violations"),
-                      F.count(F.when(F.col("severity") == Severity.ERROR, 1))
-                       .alias("errors"))
-                 .select(F.lit("<dataset>").alias("partition_key"), "rule_id",
-                         F.lit(None).cast("long").alias("rows"),
-                         "violations", "errors",
-                         (F.col("errors") == 0).alias("passed")))
-    return verdicts.unionByName(run_level)
+    c = plan.memo("engine.verdicts", lambda: _verdict_columns(plan))
+    grid = df.groupBy(c.group).agg(c.rows).select(*c.grid)
+    return (grid.unionByName(violations.select(*c.events))
+            .groupBy(*c.keys).agg(*c.aggs).select(*c.out))
 
 
 def validate(df: DataFrame, ruleset: RuleSet,

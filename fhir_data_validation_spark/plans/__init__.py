@@ -12,11 +12,11 @@ from __future__ import annotations
 
 import json
 import math
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import ErrorCode, RuleConfigurationError, Severity
@@ -436,7 +436,9 @@ def _reference_bloom_lane(pairs: DataFrame, dim: DataFrame, on: str,
                 .select(*base, *viol_cols(code), *tail))
     if mode == "approx":
         return definite
-    keys = dim.select(F.col(on).alias("_refkey")).dropDuplicates()
+    # no dedup of the dim keys: a left-anti join's output does not depend
+    # on duplicates on the build side, and the dedup costs a shuffle
+    keys = dim.select(F.col(on).alias("_refkey"))
     if rule.params.get("broadcast", True):
         keys = F.broadcast(keys)
     confirmed = (probed.where(F.col("_kidx_might"))
@@ -497,8 +499,10 @@ def reference_plan(df: DataFrame, rule: RuleDefinition, stage: int,
             return _reference_bloom_lane(pairs, dim, on, rule, severity,
                                          stage, viol_cols)
         # dim key stays natively typed: the join condition compares with
-        # Spark's coercion (double 42.0 == bigint 42 matches, as pre-sweep)
-        keys = dim.select(F.col(on).alias("_refkey")).dropDuplicates()
+        # Spark's coercion (double 42.0 == bigint 42 matches, as pre-sweep).
+        # No dedup: duplicate dim keys cannot change a left-anti join's
+        # output, and the dedup costs a shuffle
+        keys = dim.select(F.col(on).alias("_refkey"))
         if rule.params.get("broadcast", True):
             keys = F.broadcast(keys)
         missing = pairs.join(keys, on=F.col("_val") == F.col("_refkey"),
@@ -511,7 +515,9 @@ def reference_plan(df: DataFrame, rule: RuleDefinition, stage: int,
                          F.col("_val").cast("string"))
              .alias("detail"))
 
-    # J2 lane: one broadcast LEFT join yields both misses and type mismatches
+    # J2 lane: one broadcast LEFT join yields both misses and type
+    # mismatches; here duplicate dim rows would multiply the output rows,
+    # so the keys are deduplicated
     keys = (dim.select(F.col(on).alias("_refkey"),
                        F.col(type_col).alias("_reftype")).dropDuplicates())
     if rule.params.get("broadcast", True):
@@ -919,13 +925,13 @@ def codemaster_plan(df: DataFrame, rule: RuleDefinition, stage: int,
 
 # ------------------------------------------- RequiredResources (A1 cardinality)
 
-def _requirement_counts(df: DataFrame, group_col: str,
-                        reqs: list[dict[str, Any]],
-                        rule: RuleDefinition | None = None) -> DataFrame:
-    """The A1/A2/A3 aggregation core: ONE conditional hash-aggregation pass
-    reducing the input to a row per group — ``_total`` plus a
-    ``count(when(where, 1))`` per requirement (map-side combine; shuffle =
-    O(groups)). Shared by :func:`required_resources_plan` and the public
+def _requirement_aggs(group_col: str, reqs: list[dict[str, Any]],
+                      rule: RuleDefinition | None = None):
+    """The A1/A2/A3 aggregation core: the grouping key and aggregates of
+    ONE conditional hash-aggregation pass reducing the input to a row per
+    group — ``_total`` plus a ``count(when(where, 1))`` per requirement
+    (map-side combine; shuffle = O(groups)). Shared by
+    :func:`required_resources_plan` and the public
     :func:`group_cardinality_counts`."""
     aggs = [F.count(F.lit(1)).alias("_total")]
     for i, req in enumerate(reqs):
@@ -933,8 +939,7 @@ def _requirement_counts(df: DataFrame, group_col: str,
         for w in req.get("where", []):
             cond = cond & _where_predicate(rule, w)
         aggs.append(F.count(F.when(cond, 1)).alias(f"_req_{i}"))
-    return (df.groupBy(F.col(group_col).cast("string").alias("_grp"))
-            .agg(*aggs))
+    return F.col(group_col).cast("string").alias("_grp"), aggs
 
 
 def group_cardinality_counts(df: DataFrame, group_col: str,
@@ -944,10 +949,11 @@ def group_cardinality_counts(df: DataFrame, group_col: str,
     ``(source, actual, expected_min, expected_max, passed)``.
 
     Same dataflow as :func:`required_resources_plan` (shared
-    :func:`_requirement_counts` stage + single-row rollup, fully lazy); this
+    :func:`_requirement_aggs` stage + single-row rollup, fully lazy); this
     is the dashboard/contract-query face of the rule, where the plan emits
     the consolidated 0-or-1-row violation."""
-    counts = _requirement_counts(df, group_col, requirements)
+    key, aggs = _requirement_aggs(group_col, requirements)
+    counts = df.groupBy(key).agg(*aggs)
     roll = []
     for i, req in enumerate(requirements):
         roll.append(F.coalesce(
@@ -984,10 +990,19 @@ def required_resources_plan(df: DataFrame, rule: RuleDefinition, stage: int,
     against the declared requirements and assembles the reference's
     consolidated ``{expected, actual, missing, outOfRange, unexpected}``
     detail with Catalyst JSON/array functions. Violation volume: 0 or 1 rows.
+    The expressions are built once per compiled plan (``plan.memo``).
     """
-    group = plan.config.group_col
+    key, aggs, roll, bad, out = plan.memo(
+        ("plans.RequiredResources", rule.id),
+        lambda: _required_resources_columns(rule, stage, plan))
+    return df.groupBy(key).agg(*aggs).agg(*roll).where(bad).select(*out)
+
+
+def _required_resources_columns(rule: RuleDefinition, stage: int, plan):
+    """(group key, per-group aggregates, rollup, violation filter, output
+    select) of :func:`required_resources_plan`."""
     reqs: list[dict[str, Any]] = rule.params["requirements"]
-    counts = _requirement_counts(df, group, reqs, rule)
+    key, aggs = _requirement_aggs(plan.config.group_col, reqs, rule)
 
     declared = sorted({r["source"] for r in reqs})
     # single-row rollup: per-requirement observed count + observed-group map
@@ -1002,7 +1017,6 @@ def required_resources_plan(df: DataFrame, rule: RuleDefinition, stage: int,
     roll.append(F.sort_array(F.collect_list(
         F.when(F.col("_grp").isNotNull() & ~F.col("_grp").isin(declared),
                F.col("_grp")))).alias("_unexpected"))
-    rollup = counts.agg(*roll)
 
     missing_e, oor_e = [], []
     for i, req in enumerate(reqs):
@@ -1034,13 +1048,13 @@ def required_resources_plan(df: DataFrame, rule: RuleDefinition, stage: int,
         F.lit("outOfRange"), F.to_json(oor, json_opts),
         F.lit("unexpected"), F.to_json(unexpected),
     )
-    return (rollup.where(bad)
-            .select(F.lit(None).cast("string").alias("doc_id"),
-                    *_viol_cols(rule, stage,
-                                rule.error_code
-                                or ErrorCode.RESOURCE_REQUIREMENT_VIOLATION),
-                    F.lit(None).cast("string").alias("source"),
-                    detail.alias("detail")))
+    out = [F.lit(None).cast("string").alias("doc_id"),
+           *_viol_cols(rule, stage,
+                       rule.error_code
+                       or ErrorCode.RESOURCE_REQUIREMENT_VIOLATION),
+           F.lit(None).cast("string").alias("source"),
+           detail.alias("detail")]
+    return key, aggs, roll, bad, out
 
 
 def _where_predicate(rule: RuleDefinition | None, w: dict[str, Any]):
@@ -2091,16 +2105,12 @@ def drift_plan(df: DataFrame, rule: RuleDefinition, stage: int,
     KS exceeds its asymptotic critical value at ksAlpha.
 
     Baseline dim schema: (source, column_name, bucket, count) — F6 in
-    FIXTURES.md.
+    FIXTURES.md. The expressions and the baseline side, which do not
+    depend on the input, are built once per compiled plan (``plan.memo``).
     """
-    col = rule.column
-    width = float(rule.params.get("bucketWidth", 64))
-    psi_max = float(rule.params.get("psiMax", 0.2))
-    ks_alpha = float(rule.params.get("ksAlpha", 0.01))
-    mode = rule.params.get("mode", "numeric")
-    group = plan.config.group_col
-
-    if mode == "tokenFrequency":
+    c = plan.memo(("plans.Drift", rule.id),
+                  lambda: _drift_columns(rule, stage, plan))
+    if c.histogram is None:
         # north-star token-frequency drift: the histogram key is the token
         # id itself (explode + partial-agg count — at 10^12 sequences the
         # explode is the big shuffle; params.sampleFraction computes RATES
@@ -2113,16 +2123,40 @@ def drift_plan(df: DataFrame, rule: RuleDefinition, stage: int,
         # merge buckets off-ANSI) for ids >= 2^31 — the baseline dim is
         # widened to bigint below instead
         current = (grouped_token_counts(
-                       df, col, group_col=group,
+                       df, rule.column, group_col=plan.config.group_col,
                        sample_fraction=float(frac) if frac else None)
                    .withColumnRenamed("group", "source")
                    .withColumn("bucket", F.col("bucket").cast("bigint")))
-    elif mode == "numeric":
-        current = (df.where(F.col(col).isNotNull())
-                   .groupBy(F.col(group).alias("source"),
-                            F.floor(F.col(col) / width).cast("bigint")
-                            .alias("bucket"))
-                   .agg(F.count(F.lit(1)).alias("cnt")))
+    else:
+        present, keys, cnt = c.histogram
+        current = df.where(present).groupBy(*keys).agg(cnt)
+    stats = drift_compare(current, c.baseline, ks_alpha=c.ks_alpha)
+    return stats.where(c.bad).select(*c.out)
+
+
+class _DriftColumns(NamedTuple):
+    """The input-independent parts of :func:`drift_plan`."""
+    histogram: tuple | None    # numeric mode: (filter, keys, count agg)
+    baseline: DataFrame        # the baseline dim's histogram of the column
+    ks_alpha: float
+    bad: Column                # drift verdict over the compared stats
+    out: list                  # violation select list
+
+
+def _drift_columns(rule: RuleDefinition, stage: int, plan) -> _DriftColumns:
+    col = rule.column
+    width = float(rule.params.get("bucketWidth", 64))
+    psi_max = float(rule.params.get("psiMax", 0.2))
+    ks_alpha = float(rule.params.get("ksAlpha", 0.01))
+    mode = rule.params.get("mode", "numeric")
+    if mode == "numeric":
+        histogram = (F.col(col).isNotNull(),
+                     [F.col(plan.config.group_col).alias("source"),
+                      F.floor(F.col(col) / width).cast("bigint")
+                      .alias("bucket")],
+                     F.count(F.lit(1)).alias("cnt"))
+    elif mode == "tokenFrequency":
+        histogram = None
     else:
         raise RuleConfigurationError(
             rule.id, ErrorCode.RULE_CONFIGURATION_ERROR,
@@ -2132,14 +2166,12 @@ def drift_plan(df: DataFrame, rule: RuleDefinition, stage: int,
                 .select(F.col("source"), F.col("bucket").cast("bigint"),
                         F.col("count").alias("cnt")))
     jsd_max = rule.params.get("jsdMax")
-    stats = drift_compare(current, baseline, ks_alpha=ks_alpha)
     viol_cond = F.col("psi") > psi_max
     if mode != "tokenFrequency":  # KS needs an ordered support
         viol_cond = viol_cond | (F.col("ks") > F.col("ks_crit"))
     if jsd_max is not None:  # JSD is support-order-free: valid in any mode
         viol_cond = viol_cond | (F.col("jsd") > float(jsd_max))
-    bad = stats.where(viol_cond)
-    return bad.select(
+    out = [
         F.lit(None).cast("string").alias("doc_id"),
         *_viol_cols(rule, stage, rule.error_code or ErrorCode.DISTRIBUTION_DRIFT),
         F.col("source"),
@@ -2153,7 +2185,8 @@ def drift_plan(df: DataFrame, rule: RuleDefinition, stage: int,
             F.lit("nCurrent"), F.col("n_current").cast("string"),
             F.lit("nBaseline"), F.col("n_baseline").cast("string"),
         ).alias("detail"),
-    )
+    ]
+    return _DriftColumns(histogram, baseline, ks_alpha, viol_cond, out)
 
 
 # ---------------------------------- HeavyHitters (dominance over open domain)

@@ -271,9 +271,10 @@ def main(argv=None) -> int:
         return 2
 
     config = EngineConfig(key_col=args.key_col, group_col=args.group_col)
+    engine = ValidationEngine(ruleset, dims=dims, config=config)
     run = None
     if args.no_resume:
-        res = ValidationEngine(ruleset, dims=dims, config=config).validate(df)
+        res = engine.validate(df)
         res.violations.write.mode("overwrite").parquet(
             f"{args.output}/violations")
         res.verdicts.write.mode("overwrite").parquet(
@@ -307,9 +308,12 @@ def main(argv=None) -> int:
 
     if args.quarantine:
         from fhir_data_validation_spark.engine import ValidationResult
+        # the per-row rule ids let split() quarantine NULL-key rows whose
+        # own violations carry a NULL doc_id
         clean, quar = ValidationResult(
             violations=violations, verdicts=verdicts,
-            key_col=args.key_col).split(df)
+            key_col=args.key_col,
+            row_rule_ids=engine.compile(df).row_rule_ids).split(df)
         quar.write.mode("overwrite").parquet(f"{args.output}/quarantine")
         clean.write.mode("overwrite").parquet(f"{args.output}/clean")
         # count the WRITTEN parquet (footer metadata, near-free) — calling

@@ -52,6 +52,25 @@ def test_add_delta_equals_rebuild_over_union(spark):
     assert grown.n_blocks == rebuilt.n_blocks
 
 
+def test_chained_add_keeps_only_last_merge_cached(spark):
+    """Three chained add() calls leave only the last merge in the cache;
+    the result still equals a rebuild over the union."""
+    from pyspark import StorageLevel
+    keys = [f"k-{i}" for i in range(900)]
+    idx = KeyIndex.build(_keys(spark, keys[:300]), "k", n_items=900)
+    chain = [idx]
+    for lo in (300, 500, 700):
+        chain.append(chain[-1].add(_keys(spark, keys[lo:lo + 200]), "k"))
+    cached = [c._persisted.storageLevel != StorageLevel.NONE
+              for c in chain[1:]]
+    assert cached == [False, False, True]
+    rebuilt = KeyIndex.build(_keys(spark, keys), "k", n_items=900)
+    assert (sorted(chain[-1].blocks.collect())
+            == sorted(rebuilt.blocks.collect()))
+    assert chain[-1].n_items == 900 + 600
+    chain[-1].unpersist()
+
+
 def test_save_load_round_trip(spark, tmp_path):
     members = [f"m-{i}" for i in range(500)]
     idx = KeyIndex.build(_keys(spark, members), "k")

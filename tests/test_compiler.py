@@ -199,3 +199,45 @@ def test_scope_misuse_is_loud(spark):
     with pytest.raises(RuleConfigurationError):
         ValidationEngine(rs, config=EngineConfig(
             key_col="doc_id", group_col="source")).validate(df)
+
+
+def test_plan_memo_builds_once_under_contention():
+    """CompiledPlan.memo under more threads than cores and a short switch
+    interval: every key is built exactly once and every caller gets the
+    same object (a lost check-then-act would build twice)."""
+    import sys
+    import threading
+    import time
+
+    from pyspark.sql.types import StructType
+
+    from fhir_data_validation_spark.compiler import CompiledPlan, EngineConfig
+    from fhir_data_validation_spark.model import RuleSet
+    plan = CompiledPlan(ruleset=RuleSet(version="1", rules=()),
+                        config=EngineConfig(), schema=StructType())
+    builds: dict[int, int] = {}
+    got: list[tuple[int, object]] = []
+
+    def build(key):
+        builds[key] = builds.get(key, 0) + 1
+        time.sleep(0.001)            # widen the check-then-act window
+        return object()
+
+    def worker():
+        for key in range(20):
+            got.append((key, plan.memo(key, lambda k=key: build(k))))
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert builds == {k: 1 for k in range(20)}
+    assert len(got) == 16 * 20
+    first = dict(got)
+    assert all(v is first[k] for k, v in got)

@@ -3,6 +3,7 @@ seeded-corruption table (FIXTURES.md F2) — the reference's exact-assertion
 pattern (FhirPathRuleEngineTests.cs:76-114) over the Spark engine."""
 
 import json
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -1502,3 +1503,237 @@ def test_ingest_violations_pass_details_contract(spark, tmp_path):
     assert viols[0]["error_code"] == "INVALID_PRIMITIVE"
     assert validate_details(viols[0]["error_code"],
                             dict(viols[0]["detail"])) == []
+
+
+def _verdict_table(res) -> Counter:
+    """The verdict rows as a multiset, so a duplicated row shows."""
+    return Counter((r["partition_key"], r["rule_id"], r["rows"],
+                    r["violations"], r["errors"], r["passed"])
+                   for r in res.verdicts.collect())
+
+
+def test_verdicts_match_hand_computed_tables(spark):
+    """The one-aggregation verdicts against hand-computed tables: a NULL
+    group, a data group literally named <dataset> next to the run-level
+    <dataset> row, a violation whose source is absent from the input
+    (GroupShare, closed world), a rule set with zero per-row predicates,
+    and one with zero rules at all (only a compile-time notice)."""
+    from pyspark.sql.types import (BooleanType, LongType, StringType,
+                                   StructField, StructType)
+    from fhir_data_validation_spark.model import RuleSet
+    df = spark.createDataFrame(
+        [("a", "web", 1), ("b", None, -1), ("c", "<dataset>", -2),
+         ("d", "<dataset>", 3)],
+        "doc_id string, source string, n int")
+    rs = RuleSet.parse({"rules": [
+        {"id": "R1", "type": "Range", "column": "n", "params": {"min": 0}},
+        {"id": "CRD", "type": "RequiredResources",
+         "params": {"requirements": [{"source": "books", "min": 1}]}}]})
+    res = ValidationEngine(rs).validate(df)
+    assert _verdict_table(res) == Counter({
+        ("web", "R1", 1, 0, 0, True), ("web", "CRD", 1, 0, 0, True),
+        ("<null>", "R1", 1, 1, 1, False), ("<null>", "CRD", 1, 0, 0, True),
+        # the data group named <dataset> and the run-level row stay apart
+        ("<dataset>", "R1", 2, 1, 1, False),
+        ("<dataset>", "CRD", 2, 0, 0, True),
+        ("<dataset>", "CRD", None, 1, 1, False)})
+    # the verdict schema, nullability included, is part of the contract
+    assert res.verdicts.schema == StructType([
+        StructField("partition_key", StringType(), True),
+        StructField("rule_id", StringType(), True),
+        StructField("rows", LongType(), True),
+        StructField("violations", LongType(), False),
+        StructField("errors", LongType(), False),
+        StructField("passed", BooleanType(), False)])
+    res.unpersist()
+
+    # GroupShare flags the declared but absent group 'books' with a NULL
+    # source: its row has no input rows behind it; a warning counts as a
+    # violation but not as an error
+    df2 = spark.createDataFrame(
+        [("a", "web", 1), ("b", "web", 5), ("c", "wiki", 5)],
+        "doc_id string, source string, n int")
+    rs2 = RuleSet.parse({"rules": [
+        {"id": "W", "type": "Range", "column": "n", "severity": "warning",
+         "params": {"min": 2}},
+        {"id": "SHR", "type": "GroupShare", "column": "source",
+         "params": {"shares": {"books": {"min": 0.1}}, "defaultMax": 1.0}}]})
+    res2 = ValidationEngine(rs2).validate(df2)
+    assert _verdict_table(res2) == Counter({
+        ("web", "W", 2, 1, 0, True), ("web", "SHR", 2, 0, 0, True),
+        ("wiki", "W", 1, 0, 0, True), ("wiki", "SHR", 1, 0, 0, True),
+        ("<null>", "SHR", None, 1, 1, False)})
+    res2.unpersist()
+
+    # zero per-row predicates: only dataset plans
+    df3 = spark.createDataFrame(
+        [("a", "web"), ("a", "web"), ("c", None)],
+        "doc_id string, source string")
+    rs3 = RuleSet.parse({"rules": [
+        {"id": "U", "type": "Unique", "column": "doc_id"},
+        {"id": "CRD", "type": "RequiredResources",
+         "params": {"requirements": [{"source": "web", "min": 3}]}}]})
+    res3 = ValidationEngine(rs3).validate(df3)
+    assert _verdict_table(res3) == Counter({
+        ("web", "U", 2, 1, 1, False), ("web", "CRD", 2, 0, 0, True),
+        ("<null>", "U", 1, 0, 0, True), ("<null>", "CRD", 1, 0, 0, True),
+        ("<dataset>", "CRD", None, 1, 1, False)})
+    res3.unpersist()
+
+    # zero rules: an unresolvable value set compiles to a notice only
+    rs4 = RuleSet.parse({"rules": [
+        {"id": "ENUM", "type": "Enum", "column": "source",
+         "params": {"valueSet": "http://x/vs", "binding": "required"}}]})
+    res4 = ValidationEngine(rs4).validate(df3)
+    assert _verdict_table(res4) == Counter(
+        {("<dataset>", "ENUM", None, 1, 0, True)})
+    res4.unpersist()
+
+
+def _memo_recorder(plan):
+    """Wrap ``plan.memo`` to record every value it hands out and count the
+    builds per key."""
+    import threading
+    handed: list[tuple[object, object]] = []
+    builds: dict[object, int] = {}
+    inner = plan.memo
+    lock = threading.Lock()
+
+    def memo(key, build):
+        def counted():
+            with lock:
+                builds[key] = builds.get(key, 0) + 1
+            return build()
+        value = inner(key, counted)
+        with lock:
+            handed.append((key, value))
+        return value
+    plan.memo = memo
+    return handed, builds
+
+
+def test_validate_reuses_cached_columns(spark):
+    """A second validate() on the same engine reuses the very Column
+    objects the first one built: the fused-pass chunks, the verdict
+    expressions and the RequiredResources and Drift plans'
+    expressions. Two threads validating at once share them too, and
+    each is built once."""
+    import threading
+    engine_args = dict(
+        ruleset=default_token_ruleset(with_drift=True),
+        dims={"sources_dim": sources_dim(spark),
+              "stats_baseline": stats_baseline(token_table(spark, 500))})
+    df = dirty_token_table(spark, 500).drop("_row_id")
+    engine = ValidationEngine(**engine_args)
+    handed, builds = _memo_recorder(engine.compile(df))
+    engine.validate(df).unpersist()
+    first = dict(handed)
+    assert {"engine.fused_chunks", "engine.verdicts",
+            ("plans.RequiredResources", "CRD-001"),
+            ("plans.Drift", "DRF-001")} <= set(first)
+    handed.clear()
+    engine.validate(df).unpersist()
+    assert handed and all(v is first[k] for k, v in handed)
+    assert set(builds.values()) == {1}
+    # a compiled plan never builds these trees itself
+    assert ValidationEngine(**engine_args).compile(df)._memo == {}
+
+    fresh = ValidationEngine(**engine_args)
+    handed2, builds2 = _memo_recorder(fresh.compile(df))
+    errors = []
+
+    def run():
+        try:
+            fresh.validate(df).unpersist()
+        except Exception as exc:  # surfaced below
+            errors.append(exc)
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads) and not errors
+    by_key: dict = {}
+    for k, v in handed2:
+        by_key.setdefault(k, []).append(v)
+    assert "engine.fused_chunks" in by_key
+    assert all(len(vs) == 2 and vs[0] is vs[1] for vs in by_key.values())
+    assert set(builds2.values()) == {1}
+
+
+def test_passed_and_response_share_one_aggregation(spark):
+    """passed() and response() read one memoized (severity, rule_type)
+    aggregation; response() on a result with no violations runs no
+    Spark job at all, and the payload matches a dirty run's counts."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return set(tracker.getJobIdsForGroup(None))
+    engine = ValidationEngine(default_token_ruleset(),
+                              dims={"sources_dim": sources_dim(spark)})
+    clean = engine.validate(token_table(spark, 300))
+    assert clean.passed() is True
+    before = jobs()
+    resp = clean.response(max_errors=5)
+    assert jobs() == before
+    assert resp["isValid"] is True and resp["errors"] == []
+    assert resp["summary"]["totalErrors"] == 0
+    clean.unpersist()
+
+    dirty = engine.validate(dirty_token_table(spark, 1000).drop("_row_id"))
+    resp = dirty.response(max_errors=5)
+    before = jobs()
+    assert dirty.passed() is False
+    assert jobs() == before
+    assert resp["summary"]["totalErrors"] == dirty.violations.count()
+    assert len(resp["errors"]) == 5 and resp["errorsTruncated"] is True
+    dirty.unpersist()
+
+
+def test_reference_dim_with_duplicate_keys(spark):
+    """A dim that repeats its keys: the exact and the Bloom-prefilter
+    Reference lanes (no dim-side dedup) report each missing reference
+    once, and the expectedTypes lane (which keeps its dedup) does not
+    multiply rows either."""
+    from fhir_data_validation_spark.model import RuleSet
+    df = spark.createDataFrame(
+        [("a", "web"), ("b", "wiki"), ("c", "junk"), ("d", "junk"),
+         ("e", "web")], "doc_id string, source string")
+    dim = spark.createDataFrame(
+        [("web", "site"), ("web", "site"), ("wiki", "site"),
+         ("wiki", "site"), ("wiki", "site")], "source string, kind string")
+    for params in ({}, {"bloom": True},
+                   {"expectedTypes": ["site"], "typeColumn": "kind"}):
+        rs = RuleSet.parse({"rules": [
+            {"id": "REF", "type": "Reference", "column": "source",
+             "params": {"dim": "d", "on": "source", **params}}]})
+        res = ValidationEngine(rs, dims={"d": dim}).validate(df)
+        got = sorted((r["doc_id"], r["error_code"])
+                     for r in res.violations.collect())
+        assert got == [("c", "REFERENCE_NOT_FOUND"),
+                       ("d", "REFERENCE_NOT_FOUND")], params
+        res.unpersist()
+
+
+@pytest.mark.parametrize("resume", [False, True])
+def test_cli_quarantine_routes_null_key_rows(spark, tmp_path, resume):
+    """--quarantine must ship a NULL-key row with a per-row error to
+    quarantine/, not clean/, on the one-shot and the resumable path (the
+    CLI used to rebuild the result without the per-row rule ids)."""
+    from jobs.run_validation import main
+    src = str(tmp_path / "in")
+    spark.createDataFrame(
+        [("d1", 5, "web"), (None, 0, "web"), ("d3", 7, "web")],
+        "doc_id string, n_tok int, source string").write.parquet(src)
+    rules = tmp_path / "rules.json"
+    rules.write_text(json.dumps({"rules": [
+        {"id": "R1", "type": "Range", "column": "n_tok",
+         "params": {"min": 1}}]}))
+    out = tmp_path / "out"
+    rc = main(["--input", src, "--rules", str(rules), "--quarantine",
+               "--output", str(out)] + ([] if resume else ["--no-resume"]))
+    assert rc == 1
+    quar = spark.read.parquet(str(out / "quarantine")).collect()
+    clean = spark.read.parquet(str(out / "clean")).collect()
+    assert [(r["doc_id"], r["n_tok"]) for r in quar] == [(None, 0)]
+    assert sorted(r["doc_id"] for r in clean) == ["d1", "d3"]

@@ -6,7 +6,9 @@ properties are plan shapes, not constants — pin them.
   contains CodegenFallback HOFs — measured 10×).
 * dataset plans: column pruning — Unique/Reference scans must not read
   ``tokens`` (the dominant bytes at corpus scale).
-* Reference: broadcast (not sort-merge) anti-join for small dims.
+* Reference: broadcast (not sort-merge) anti-join for small dims, with
+  no dedup of the dim keys.
+* verdicts: one aggregation, no join.
 * stats: partial (map-side) aggregation before the shuffle.
 """
 
@@ -85,6 +87,29 @@ def test_reference_uses_broadcast_join(spark, corpus, plan):
     s = explain_str(ref.execute(corpus, plan))
     assert "BroadcastHashJoin" in s or "BroadcastExchange" in s
     assert "SortMergeJoin" not in s
+
+
+def test_reference_anti_join_skips_dim_dedup(spark, corpus, plan):
+    """The exact lane's left-anti join takes the dim keys as they are:
+    duplicates on the build side cannot change its output, so there is
+    no aggregation (and no shuffle) to deduplicate them."""
+    ref = next(dp for dp in plan.dataset_plans if dp.rule.type == "Reference")
+    s = explain_str(ref.execute(corpus, plan), mode="simple")
+    assert "LeftAnti" in s
+    assert "HashAggregate" not in s and "Exchange hashpartitioning" not in s
+
+
+def test_verdicts_plan_has_no_join(spark, corpus, plan, tmp_path):
+    """Verdicts are one aggregation: the rows per group exploded over the
+    rule ids, unioned with one row per violation, grouped once — no
+    crossJoin against a rule-id frame and no outer join."""
+    from fhir_data_validation_spark.engine import build_verdicts
+    path = str(tmp_path / "violations")
+    predicate_violations(corpus, plan).write.parquet(path)
+    s = explain_str(build_verdicts(corpus, spark.read.parquet(path), plan),
+                    mode="simple")
+    assert "Join" not in s and "CartesianProduct" not in s, s
+    assert "Generate" in s and "Union" in s
 
 
 def test_drift_scan_reads_only_needed_columns(spark, corpus, plan):
