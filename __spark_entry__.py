@@ -1912,13 +1912,15 @@ def q_a3_where_counting(spark: SparkSession, sf: str) -> DataFrame:
 def q_c5_drift(spark: SparkSession, sf: str) -> DataFrame:
     """C5 value-oracled: PSI + two-sample KS per returnflag between the
     early-linenumber and late-linenumber quantity distributions, via the
-    engine's ``drift_compare`` (JVM histogram reduce → Arrow pass). The
+    engine's ``drift_compare`` (JVM histogram reduce → one Catalyst
+    aggregation and ``aggregate`` fold over the sorted buckets). The
     oracle recomputes both statistics in SQL (full-outer bucket join,
     eps-clamped PSI, windowed-cumsum KS).
 
     Float determinism: all four statistics reduce exact integer bucket
-    counts in bucket order through identical chains (Arrow pass vs SQL
-    cumsum) — bit-exact (oracle_check --exact green).
+    counts in bucket order through identical chains (ordered fold vs SQL
+    cumsum), and the outputs are rounded to 4 dp (oracle_check --exact
+    green).
     """
     from fhir_data_validation_spark.plans import drift_compare
     li = load_table(spark, sf, "lineitem")

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from .compiler import CompiledPlan, EngineConfig, compile_ruleset
 from .errors import Severity, Stage
 from .model import RuleSet
+from .session import local_frame
 
 CHUNK = 40  # max fused rules per projection — caps codegen size (SURVEY §7.3a)
 
@@ -328,10 +329,10 @@ class ValidationEngine:
         if plan.notices:
             # compile-time notices (ENUM_VALIDATION_SKIPPED): a handful of
             # literal dataset-level rows, zero distributed cost
-            parts.append(df.sparkSession.createDataFrame(
-                plan.notices, VIOLATION_SCHEMA))
+            parts.append(local_frame(df.sparkSession, plan.notices,
+                                     VIOLATION_SCHEMA))
         if not parts:
-            return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
+            return local_frame(df.sparkSession, [], VIOLATION_SCHEMA)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -80,8 +80,8 @@ _SCALE_NOTES = {
     "FunctionalDependency": "map-side partial min/max/count per "
                             "determinant group",
     "HeavyHitters": "distributed Misra-Gries partials, bounded shuffle",
-    "Drift": "histogram partials merge map-side; Arrow stage sees only "
-             "reduced buckets",
+    "Drift": "histogram partials merge map-side; the statistics fold "
+             "sees only reduced buckets",
 }
 
 

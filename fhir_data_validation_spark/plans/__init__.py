@@ -14,13 +14,12 @@ import json
 import math
 from typing import Any, NamedTuple
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import ErrorCode, RuleConfigurationError, Severity
 from ..model import RuleDefinition
+from ..session import local_frame
 from ..stats import GROUP_ALL
 
 VIOLATION_SCHEMA = (
@@ -1455,14 +1454,12 @@ def group_share_plan(df: DataFrame, rule: RuleDefinition, stage: int,
 
     counts = (scoped.groupBy(F.col(rule.column).cast("string").alias("_g"))
                     .agg(F.count(F.lit(1)).alias("_n")))
-    spark = df.sparkSession
-    decl = spark.createDataFrame(
+    decl = local_frame(
+        df.sparkSession,
         [(str(g), (None if b.get("min") is None else float(b["min"])),
           (None if b.get("max") is None else float(b["max"])))
-         for g, b in shares.items()] or [("<none>", None, None)],
+         for g, b in shares.items()],
         "_dg string, _min double, _max double")
-    if not shares:
-        decl = decl.where(F.lit(False))
     # declared ∪ observed on the reduced frame; the total rides in as a
     # broadcast single-row cross join (computed FROM the counts — no
     # second scan of the input)
@@ -1591,14 +1588,12 @@ def distinct_band_plan(df: DataFrame, rule: RuleDefinition, stage: int,
     else:
         counts = scoped.agg(cnt.alias("_d")).select(
             F.lit("<dataset>").alias("_g"), "_d")
-    spark = df.sparkSession
-    decl = spark.createDataFrame(
+    decl = local_frame(
+        df.sparkSession,
         [(str(g), (None if b.get("min") is None else int(b["min"])),
           (None if b.get("max") is None else int(b["max"])))
-         for g, b in bands.items()] or [("<none>", None, None)],
+         for g, b in bands.items()],
         "_dg string, _min long, _max long")
-    if not bands:
-        decl = decl.where(F.lit(False))
     merged = counts.join(decl, on=F.col("_g") == F.col("_dg"), how="full")
     grp = F.coalesce(F.col("_g"), F.col("_dg"))
     d = F.coalesce(F.col("_d"), F.lit(0))  # declared-but-absent: 0 distinct
@@ -2030,13 +2025,98 @@ DRIFT_RESULT_SCHEMA = ("source string, psi double, ks double, ks_crit double, "
                        "n_current long, n_baseline long")
 
 
+def _dbl(x: float) -> str:
+    """A SQL double literal that round-trips ``x`` exactly."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def _drift_fold_sql(ks_alpha: float) -> str:
+    """The statistics of :func:`drift_compare` as one SQL expression over
+    a source's sorted ``h = array<struct<bucket, c, b>>`` (current and
+    baseline counts) and its totals ``n_current`` / ``n_baseline``.
+
+    One ``aggregate`` fold walks the buckets in order. Runs of one bucket
+    merge into the pending entry; a new bucket flushes the pending one
+    into the running PSI, KS (cumulative counts), the two JSD halves and
+    chi-square. A sentinel bucket after the last one flushes it. The fold
+    runs only when both totals are positive: otherwise every statistic is
+    NULL (and ANSI division by zero never runs)."""
+    eps = _dbl(1e-6)
+    p0, q0 = "(a.c / n_current)", "(a.b / n_baseline)"
+    p, q = f"greatest({p0}, {eps})", f"greatest({q0}, {eps})"
+    m = f"(0.5D * ({p0} + {q0}))"
+    dev = f"(a.c - {q0} * n_current)"
+    flush = (
+        "'cc', a.cc + a.c, 'cb', a.cb + a.b, "
+        f"'psi', a.psi + ({p} - {q}) * ln({p} / {q}), "
+        "'ks', greatest(a.ks, abs((a.cc + a.c) / n_current "
+        "- (a.cb + a.b) / n_baseline)), "
+        f"'jp', a.jp + IF({p0} > 0, {p0} * log2({p0} / {m}), 0D), "
+        f"'jq', a.jq + IF({q0} > 0, {q0} * log2({q0} / {m}), 0D), "
+        f"'chi', a.chi + IF(a.b > 0, {dev} * {dev} / ({q0} * n_current), 0D)")
+    keep = ("'cc', a.cc, 'cb', a.cb, 'psi', a.psi, 'ks', a.ks, "
+            "'jp', a.jp, 'jq', a.jq, 'chi', a.chi")
+    fold = (
+        "aggregate(concat(h, array(named_struct("
+        "'bucket', CAST(NULL AS BIGINT), 'c', 0L, 'b', 0L))), "
+        "named_struct('k', CAST(NULL AS BIGINT), 'c', 0L, 'b', 0L, "
+        "'cc', 0L, 'cb', 0L, 'psi', 0D, 'ks', 0D, 'jp', 0D, 'jq', 0D, "
+        "'chi', 0D), "
+        "(a, x) -> IF(a.k <=> x.bucket, "
+        f"named_struct('k', a.k, 'c', a.c + x.c, 'b', a.b + x.b, {keep}), "
+        f"named_struct('k', x.bucket, 'c', x.c, 'b', x.b, {flush})), "
+        "a -> named_struct('psi', a.psi, 'ks', a.ks, "
+        "'jsd', 0.5D * a.jp + 0.5D * a.jq, 'chi2', a.chi))")
+    ks_c = math.sqrt(-0.5 * math.log(ks_alpha / 2.0))
+    crit = (f"{_dbl(ks_c)} * sqrt((CAST(n_current AS DOUBLE) + n_baseline) "
+            "/ (CAST(n_current AS DOUBLE) * n_baseline))")
+    both = "n_current > 0 AND n_baseline > 0"
+    return (f"CASE WHEN {both} THEN named_struct('stats', {fold}, "
+            f"'ks_crit', {crit}) END")
+
+
+def drift_comparer(ks_alpha: float = 0.01):
+    """:func:`drift_compare` for one ``ks_alpha`` with its ``Column``
+    trees built once: a function ``(current, baseline) -> stats``, which
+    the Drift rule's compiled plan keeps in ``plan.memo``."""
+    zero = F.lit(0).cast("bigint")
+    # a NULL bucket is no bucket: its rows count on neither side
+    n = (F.when(F.col("bucket").isNull(), zero)
+         .otherwise(F.coalesce(F.col("cnt").cast("bigint"), zero)))
+    keys = [F.col("source").cast("string").alias("source"),
+            F.col("bucket").cast("bigint").alias("bucket")]
+    cur_cols = [*keys, n.alias("c"), zero.alias("b")]
+    base_cols = [*keys, zero.alias("c"), n.alias("b")]
+    aggs = [F.expr("array_sort(collect_list(struct(bucket, c, b)))")
+            .alias("h"),
+            F.sum("c").alias("n_current"), F.sum("b").alias("n_baseline")]
+    s = F.expr(_drift_fold_sql(ks_alpha)).alias("_s")
+    # DRIFT_RESULT_SCHEMA, every field nullable
+    out = ["source", F.col("_s.stats.psi").alias("psi"),
+           F.col("_s.stats.ks").alias("ks"),
+           F.col("_s.ks_crit").alias("ks_crit"),
+           F.col("_s.stats.jsd").alias("jsd"),
+           F.col("_s.stats.chi2").alias("chi2"), "n_current", "n_baseline"]
+
+    def compare(current: DataFrame, baseline: DataFrame) -> DataFrame:
+        return (current.select(*cur_cols)
+                .unionByName(baseline.select(*base_cols))
+                .groupBy("source").agg(*aggs)
+                .select("source", "n_current", "n_baseline", s)
+                .select(*out))
+    return compare
+
+
 def drift_compare(current: DataFrame, baseline: DataFrame,
                   ks_alpha: float = 0.01) -> DataFrame:
     """PSI, two-sample KS, Jensen-Shannon divergence, and chi-square
-    between two reduced histograms (each ``(source, bucket, cnt)``): one
-    Arrow ``applyInPandas`` pass per source over already-aggregated data —
-    no per-row Python anywhere. Output: ``(source, psi, ks, ks_crit, jsd,
-    chi2, n_current, n_baseline)``.
+    between two reduced histograms (each ``(source, bucket, cnt)``), all
+    in Catalyst: the two sides union into one ``groupBy(source)`` that
+    collects each source's sorted ``(bucket, current, baseline)`` counts,
+    and one ``aggregate`` fold over them computes the four statistics
+    (duplicate buckets merge inside the fold). No Python worker runs.
+    Output: ``(source, psi, ks, ks_crit, jsd, chi2, n_current,
+    n_baseline)``.
 
     Statistic conventions: PSI over eps-clamped rates (industry form —
     sensitive to mass appearing in empty buckets); JSD in bits (base 2,
@@ -2046,67 +2126,32 @@ def drift_compare(current: DataFrame, baseline: DataFrame,
     PSI/JSD's job — the classical statistic is undefined there); KS on the
     bucket-ordered CDFs (meaningful only for ordered supports).
 
+    A source present on one side only gets NULL statistics (its other
+    total is 0), so no threshold ever flags it.
+
     The shared comparison core of the Drift rule (C5) and
     :func:`~..stats.snapshot_drift`."""
-    merged = (current.select("source", F.col("bucket").cast("bigint"),
-                             "cnt").withColumn("side", F.lit("cur"))
-              .unionByName(
-                  baseline.select("source", F.col("bucket").cast("bigint"),
-                                  "cnt").withColumn("side", F.lit("base"))))
-    ks_c = math.sqrt(-0.5 * math.log(ks_alpha / 2.0))
-
-    def _drift(pdf: pd.DataFrame) -> pd.DataFrame:
-        src = pdf["source"].iloc[0]
-        piv = (pdf.pivot_table(index="bucket", columns="side", values="cnt",
-                               aggfunc="sum", fill_value=0)
-                  .sort_index())
-        cur = piv["cur"].to_numpy(dtype=np.float64) if "cur" in piv else np.zeros(len(piv))
-        base = piv["base"].to_numpy(dtype=np.float64) if "base" in piv else np.zeros(len(piv))
-        n_cur, n_base = cur.sum(), base.sum()
-        if n_cur == 0 or n_base == 0:
-            nan = float("nan")
-            return pd.DataFrame([{"source": src, "psi": nan, "ks": nan,
-                                  "ks_crit": nan, "jsd": nan, "chi2": nan,
-                                  "n_current": int(n_cur), "n_baseline": int(n_base)}])
-        eps = 1e-6
-        p0, q0 = cur / n_cur, base / n_base
-        p = np.maximum(p0, eps)
-        q = np.maximum(q0, eps)
-        psi = float(np.sum((p - q) * np.log(p / q)))
-        ks = float(np.max(np.abs(np.cumsum(cur) / n_cur - np.cumsum(base) / n_base)))
-        crit = ks_c * math.sqrt((n_cur + n_base) / (n_cur * n_base))
-        m = 0.5 * (p0 + q0)
-        jsd = float(
-            0.5 * np.sum(np.where(p0 > 0, p0 * np.log2(
-                np.where(p0 > 0, p0, 1.0) / np.where(m > 0, m, 1.0)), 0.0))
-            + 0.5 * np.sum(np.where(q0 > 0, q0 * np.log2(
-                np.where(q0 > 0, q0, 1.0) / np.where(m > 0, m, 1.0)), 0.0)))
-        supported = base > 0
-        expected = q0[supported] * n_cur
-        chi2 = float(np.sum((cur[supported] - expected) ** 2 / expected))
-        return pd.DataFrame([{"source": src, "psi": psi, "ks": ks,
-                              "ks_crit": crit, "jsd": jsd, "chi2": chi2,
-                              "n_current": int(n_cur),
-                              "n_baseline": int(n_base)}])
-
-    return merged.groupBy("source").applyInPandas(_drift,
-                                                  DRIFT_RESULT_SCHEMA)
+    return drift_comparer(ks_alpha)(current, baseline)
 
 
 def drift_plan(df: DataFrame, rule: RuleDefinition, stage: int,
                plan) -> DataFrame:
     """Distribution drift vs a persisted baseline histogram (SURVEY §2.8 C5).
 
-    Two-phase: (1) JVM-side partial+final hash aggregation reduces the input
-    to per-(source, bucket) counts — shuffle size = O(groups × buckets), not
-    O(rows); (2) an Arrow-batched ``applyInPandas`` stage computes PSI and the
-    two-sample KS statistic per source over the *reduced* histograms (numpy,
-    vectorized — no per-row Python anywhere). Violation when PSI > psiMax or
-    KS exceeds its asymptotic critical value at ksAlpha.
+    Two-phase, all in Catalyst: (1) JVM-side partial+final hash
+    aggregation reduces the input to per-(source, bucket) counts — shuffle
+    size = O(groups × buckets), not O(rows); (2) :func:`drift_compare`
+    computes PSI, the two-sample KS statistic, JSD and chi-square per
+    source in one aggregation and one ``aggregate`` fold over the
+    *reduced* histograms. Violation when PSI > psiMax or KS exceeds its
+    asymptotic critical value at ksAlpha (or JSD > jsdMax). A source on
+    one side only has NULL statistics and never flags (RequiredResources
+    covers a vanished source).
 
     Baseline dim schema: (source, column_name, bucket, count) — F6 in
-    FIXTURES.md. The expressions and the baseline side, which do not
-    depend on the input, are built once per compiled plan (``plan.memo``).
+    FIXTURES.md. The expressions, the comparison and the baseline side,
+    which do not depend on the input, are built once per compiled plan
+    (``plan.memo``).
     """
     c = plan.memo(("plans.Drift", rule.id),
                   lambda: _drift_columns(rule, stage, plan))
@@ -2130,7 +2175,7 @@ def drift_plan(df: DataFrame, rule: RuleDefinition, stage: int,
     else:
         present, keys, cnt = c.histogram
         current = df.where(present).groupBy(*keys).agg(cnt)
-    stats = drift_compare(current, c.baseline, ks_alpha=c.ks_alpha)
+    stats = c.compare(current, c.baseline)
     return stats.where(c.bad).select(*c.out)
 
 
@@ -2138,7 +2183,7 @@ class _DriftColumns(NamedTuple):
     """The input-independent parts of :func:`drift_plan`."""
     histogram: tuple | None    # numeric mode: (filter, keys, count agg)
     baseline: DataFrame        # the baseline dim's histogram of the column
-    ks_alpha: float
+    compare: Any               # drift_comparer(ksAlpha)
     bad: Column                # drift verdict over the compared stats
     out: list                  # violation select list
 
@@ -2186,7 +2231,8 @@ def _drift_columns(rule: RuleDefinition, stage: int, plan) -> _DriftColumns:
             F.lit("nBaseline"), F.col("n_baseline").cast("string"),
         ).alias("detail"),
     ]
-    return _DriftColumns(histogram, baseline, ks_alpha, viol_cond, out)
+    return _DriftColumns(histogram, baseline, drift_comparer(ks_alpha),
+                         viol_cond, out)
 
 
 # ---------------------------------- HeavyHitters (dominance over open domain)

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(app_name: str = "fhir-data-validation-spark",
@@ -57,3 +58,26 @@ def get_spark(app_name: str = "fhir-data-validation-spark",
         .config("spark.sql.parquet.columnarReaderBatchSize", "2048")
         .getOrCreate()
     )
+
+
+def local_frame(spark: SparkSession, rows,
+                schema: str | StructType) -> DataFrame:
+    """A small literal frame planned as a ``LocalRelation``: the rows
+    travel to the JVM as one Arrow table, so reading the frame starts no
+    Python worker, unlike ``createDataFrame(list)``'s pickled-RDD scan.
+
+    ``rows`` are tuples in ``schema`` order or dicts keyed by field name.
+    ``schema`` (a DDL string or ``StructType``, nullability included) is
+    the frame's schema exactly; an empty ``rows`` gives an empty frame of
+    that schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = [tuple(r.get(n) for n in schema.names) if isinstance(r, dict)
+            else r for r in rows]
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow))

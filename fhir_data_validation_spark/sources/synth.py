@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 VOCAB_SIZE = 50257
 MAX_N_TOK = 8192
 SOURCES = ("web", "books", "code", "wiki")  # skew: 70/15/10/5
@@ -114,8 +116,9 @@ def sources_dim(spark: SparkSession) -> DataFrame:
     """F3: the closed-world source dimension (J1/J2 + A1 requirements)."""
     rows = [("web", "corpus", 1, None), ("books", "corpus", 1, None),
             ("code", "corpus", 1, None), ("wiki", "corpus", 1, None)]
-    return spark.createDataFrame(
-        rows, "source string, expected_type string, min_docs int, max_docs int")
+    return local_frame(
+        spark, rows,
+        "source string, expected_type string, min_docs int, max_docs int")
 
 
 def vocab_dim(spark: SparkSession, vocab: int = VOCAB_SIZE) -> DataFrame:

@@ -170,9 +170,9 @@ def snapshot_drift(table, column: str, from_snapshot: int,
     drifts per-token-id histograms of an array column (PSI only — token ids
     are categorical, KS needs an ordered support; gate on ``psi``).
     Each side is one JVM histogram reduction over its pinned snapshot, the
-    comparison one Arrow pass over the reduced data
+    comparison one Catalyst aggregation over the reduced data
     (:func:`~.plans.drift_compare`). Output:
-    ``(source, psi, ks, ks_crit, n_current, n_baseline)``."""
+    ``(source, psi, ks, ks_crit, jsd, chi2, n_current, n_baseline)``."""
     from .plans import drift_compare
 
     def hist(snapshot_id):

@@ -9,7 +9,8 @@ baseline once per micro-batch, via ``foreachBatch``.
 100-TB shape: each micro-batch reduces to a per-(source, bucket) histogram
 with one JVM map-side-combined aggregation — shuffle size O(groups ×
 buckets), never O(rows), and the stream never buffers; the comparison is one
-Arrow pass over the reduced histograms (≤ |sources| result rows per epoch).
+Catalyst aggregation over the reduced histograms (≤ |sources| result rows
+per epoch).
 The baseline is a reduced frame the caller builds once (e.g. from a pinned
 Iceberg snapshot via ``stats.histogram``) — persist it; every epoch reuses
 it.
@@ -63,6 +64,7 @@ def drift_stream_foreach_batch(
     collected once and reused for both the sink write and the gate.
 
     Returns the started ``StreamingQuery``."""
+    from ..session import local_frame
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -94,7 +96,7 @@ def drift_stream_foreach_batch(
         # write-scoped dynamic overwrite: a session-level conf flip would
         # silently change overwrite semantics for every OTHER partitioned
         # write in the application (round-5 review batch 8)
-        (spark.createDataFrame(rows, out.schema)
+        (local_frame(spark, rows, out.schema)
          .coalesce(1)
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")

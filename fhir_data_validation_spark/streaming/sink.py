@@ -66,13 +66,22 @@ class IcebergStreamSink:
     date for a reprocess) to scope the guard per run: a new run_id
     starts its epoch history at -1 and nothing is skipped. Reusing a
     run_id across two queries has the same double-skip semantics as
-    reusing a name."""
+    reusing a name.
+
+    ``resume_unscoped=True`` (with a ``run_id``) says the checkpoint is
+    being RESUMED and may predate run scoping: when the run has no marker
+    of its own, the guard reads the unscoped ``sink.{name}.epoch`` marker
+    a sink without ``run_id`` wrote, so the in-flight epoch it committed
+    is not appended twice. Set it only for a checkpoint Spark has already
+    committed batches to (:func:`write_stream_to_table` checks this); on
+    a fresh checkpoint it would skip epochs up to that marker."""
 
     def __init__(self, table: PyIcebergTable, name: str = "sink",
                  mode: str = "append",
                  key: str | list[str] | None = None,
                  branch: str = "main",
-                 run_id: str | None = None):
+                 run_id: str | None = None,
+                 resume_unscoped: bool = False):
         if mode not in ("append", "upsert"):
             raise ValueError(f"mode must be 'append' or 'upsert', "
                              f"got {mode!r}")
@@ -89,6 +98,12 @@ class IcebergStreamSink:
         scope = name if run_id is None else f"{name}-{run_id}"
         self._summary_key = f"sink-{scope}-epoch"
         self._prop_key = f"sink.{scope}.epoch"
+        # guard keys read in order: this run's, then (resuming a run_id)
+        # the unscoped keys a sink without run_id wrote
+        self._guard_keys = [(self._prop_key, self._summary_key)]
+        if run_id is not None and resume_unscoped:
+            self._guard_keys.append((f"sink.{name}.epoch",
+                                     f"sink-{name}-epoch"))
         self._last: int | None = None   # in-memory fast path per process
 
     def last_epoch(self) -> int:
@@ -99,18 +114,26 @@ class IcebergStreamSink:
         rows live on in the kept one), and reading it is O(1), not a scan
         of every snapshot summary. The per-snapshot summary marker is
         still written for provenance, and stands in as a fallback for
-        tables whose commits predate the property."""
+        tables whose commits predate the property.
+
+        With ``resume_unscoped`` a run that has no marker of its own
+        falls back to the unscoped ``sink.{name}.epoch`` marker; the
+        fallback stops once the run commits under its own key."""
         if self._last is not None:
             return self._last
         meta = self.table._load_meta()
-        prop = meta.get("properties", {}).get(self._prop_key)
-        if prop is not None:
-            self._last = int(prop)
-            return self._last
-        epochs = [int(s["summary"][self._summary_key])
-                  for s in meta.get("snapshots", [])
-                  if self._summary_key in s.get("summary", {})]
-        self._last = max(epochs, default=-1)
+        props = meta.get("properties", {})
+        self._last = -1
+        for prop_key, summary_key in self._guard_keys:
+            if prop_key in props:
+                self._last = int(props[prop_key])
+                break
+            epochs = [int(s["summary"][summary_key])
+                      for s in meta.get("snapshots", [])
+                      if summary_key in s.get("summary", {})]
+            if epochs:
+                self._last = max(epochs)
+                break
         return self._last
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -129,6 +152,17 @@ class IcebergStreamSink:
         self._last = int(epoch_id)
 
 
+def _has_committed_batch(spark, checkpoint_dir: str) -> bool:
+    """Whether Spark's commit log under ``checkpoint_dir`` records at
+    least one finished batch (files ``commits/<batchId>``)."""
+    from ..fsutil import exists, list_files
+    commits = f"{checkpoint_dir.rstrip('/')}/commits"
+    if not exists(spark, commits):
+        return False
+    return any(f["path"].rsplit("/", 1)[-1].isdigit()
+               for f in list_files(spark, commits))
+
+
 def write_stream_to_table(stream_df: DataFrame, table: PyIcebergTable,
                           checkpoint_dir: str, name: str = "sink",
                           available_now: bool = True,
@@ -145,14 +179,22 @@ def write_stream_to_table(stream_df: DataFrame, table: PyIcebergTable,
     ``run_id``), so pointing a new run at a fresh checkpoint — where
     Spark restarts ``epoch_id`` at 0 — re-ingests from the new source
     position instead of silently skipping the first N batches against
-    the old run's high-water mark."""
+    the old run's high-water mark. A checkpoint Spark has already
+    committed batches to is a resume: there the guard also reads the
+    unscoped marker of a sink without ``run_id``, so resuming a
+    checkpoint written before run scoping does not re-append its
+    in-flight epoch. Limit: if that older run crashed inside its first
+    batch (nothing committed yet), the resume appends that batch again,
+    the one-epoch replay of an unguarded sink."""
     import hashlib
     ckpt_id = hashlib.sha1(
         checkpoint_dir.rstrip("/").encode()).hexdigest()[:12]
+    resuming = _has_committed_batch(stream_df.sparkSession, checkpoint_dir)
     writer = (stream_df.writeStream
               .foreachBatch(IcebergStreamSink(table, name, mode=mode,
                                               key=key, branch=branch,
-                                              run_id=ckpt_id))
+                                              run_id=ckpt_id,
+                                              resume_unscoped=resuming))
               .option("checkpointLocation", checkpoint_dir)
               .queryName(f"iceberg-{name}"))
     if available_now:

@@ -25,6 +25,12 @@ from fhir_data_validation_spark.sources.synth import (sources_dim,
                                                       token_table)
 
 
+# physical operators that start Python workers: pandas / Arrow UDF stages
+# and the pickled-RDD scan of createDataFrame(list)
+PYTHON_OPERATORS = ("FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython",
+                    "BatchEvalPython", "ExistingRDD")
+
+
 def explain_str(df, mode="formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -117,11 +123,11 @@ def test_drift_scan_reads_only_needed_columns(spark, corpus, plan):
     assert drift
     s = explain_str(drift[0].execute(corpus, plan))
     # the drift scan reads only (source, n_tok) — histograms reduce BEFORE
-    # the Arrow stage, which must see O(groups × buckets), not rows
+    # the comparison, which must see O(groups × buckets), not rows
     read = [ln for ln in s.splitlines() if "ReadSchema" in ln
             and "tokens" not in ln.split("ReadSchema")[1]]
     assert read
-    assert "MapInPandas" in s or "FlatMapGroupsInPandas" in s
+    assert not any(op in s for op in PYTHON_OPERATORS), s
     assert s.index("HashAggregate") < s.index("Scan parquet")  # agg below scan in root-first print means agg AFTER scan
 
 
@@ -374,3 +380,28 @@ def test_heavy_hitters_shuffle_bounded_by_summary(spark, corpus):
     # it must contain no Exchange/Sort (the raw rows flow straight in)
     below_map = s[s.index("MapInPandas"): s.index("Scan ")]
     assert "Exchange" not in below_map and "Sort" not in below_map
+
+
+def test_validate_path_runs_no_python(spark, corpus):
+    """validate() with the drift rule runs without a Python worker: the
+    executed plans of the violations and the verdicts hold no pandas /
+    Arrow UDF operator and no pickled-RDD scan, and the built-in source
+    dim is a LocalRelation."""
+    from fhir_data_validation_spark.sources.synth import stats_baseline
+    dim = sources_dim(spark)
+    s = explain_str(dim, mode="extended")
+    assert "LocalRelation" in s and "LocalTableScan" in s
+    assert not any(op in s for op in PYTHON_OPERATORS), s
+    engine = ValidationEngine(
+        default_token_ruleset(with_drift=True),
+        dims={"sources_dim": dim,
+              "stats_baseline": stats_baseline(token_table(spark, 1000))})
+    res = engine.validate(corpus)
+    try:
+        for df in (res.violations, res.verdicts):
+            df.collect()
+            s = df._jdf.queryExecution().executedPlan().toString()
+            assert "isFinalPlan=true" in s or "AdaptiveSparkPlan" not in s
+            assert not any(op in s for op in PYTHON_OPERATORS), s
+    finally:
+        res.unpersist()

@@ -796,6 +796,89 @@ def test_sink_fresh_run_id_does_not_skip_epoch_zero(spark, tmp_path):
     assert table.read().count() == 4
 
 
+def test_sink_resume_falls_back_to_unscoped_guard(spark, tmp_path):
+    """A checkpoint written by a sink without run_id left its epoch under
+    the unscoped sink.{name}.epoch key. Resumed by a sink scoped with a
+    run_id (resume_unscoped=True), the replayed in-flight epoch must
+    skip, not append a second time; the next epoch commits, and from then
+    on the run's own key decides."""
+    from fhir_data_validation_spark.sources.iceberg_py import PyIcebergTable
+    from fhir_data_validation_spark.streaming import IcebergStreamSink
+    df = spark.createDataFrame([("d1", 3, "web")],
+                               "doc_id string, n_tok int, source string")
+    table = PyIcebergTable.create(spark, str(tmp_path / "tbl"), df.schema)
+    legacy = IcebergStreamSink(table, name="s")
+    for epoch in (0, 1, 2):
+        legacy(df, epoch)
+    assert table.read().count() == 3
+    resumed = IcebergStreamSink(table, name="s", run_id="ckpt-a",
+                                resume_unscoped=True)
+    assert resumed.last_epoch() == 2
+    resumed(df, 2)                       # crash replay of epoch 2
+    assert table.read().count() == 3
+    resumed(df, 3)
+    assert table.read().count() == 4
+    props = table._load_meta()["properties"]
+    assert props["sink.s-ckpt-a.epoch"] == "3"
+    assert IcebergStreamSink(table, name="s", run_id="ckpt-a",
+                             resume_unscoped=True).last_epoch() == 3
+
+
+def test_sink_fresh_run_id_ignores_unscoped_guard(spark, tmp_path):
+    """A fresh run_id on a table that carries an unscoped marker starts
+    at -1: its epoch 0 commits, nothing is skipped against the marker a
+    sink without run_id left."""
+    from fhir_data_validation_spark.sources.iceberg_py import PyIcebergTable
+    from fhir_data_validation_spark.streaming import IcebergStreamSink
+    df = spark.createDataFrame([("d1", 3, "web")],
+                               "doc_id string, n_tok int, source string")
+    table = PyIcebergTable.create(spark, str(tmp_path / "tbl"), df.schema)
+    legacy = IcebergStreamSink(table, name="s")
+    for epoch in (0, 1, 2):
+        legacy(df, epoch)
+    fresh = IcebergStreamSink(table, name="s", run_id="ckpt-b")
+    assert fresh.last_epoch() == -1
+    fresh(df, 0)
+    assert table.read().count() == 4
+
+
+def test_write_stream_resumes_unscoped_checkpoint(spark, tmp_path):
+    """write_stream_to_table over a checkpoint a sink without run_id
+    wrote: a batch that sink committed but Spark did not (its commits/
+    entry lost in a crash) replays and must not append twice. A fresh
+    checkpoint on the same table still ingests its first batch."""
+    import os
+    from fhir_data_validation_spark.sources.iceberg_py import PyIcebergTable
+    from fhir_data_validation_spark.streaming import (IcebergStreamSink,
+                                                      write_stream_to_table)
+    schema = "doc_id string, n_tok int, source string"
+    src = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    first = spark.createDataFrame([("d1", 3, "web")], schema)
+    first.write.parquet(src)
+    table = PyIcebergTable.create(spark, str(tmp_path / "tbl"),
+                                  first.schema)
+
+    def legacy_run():
+        (spark.readStream.schema(first.schema).parquet(src).writeStream
+         .foreachBatch(IcebergStreamSink(table, name="t"))
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start().awaitTermination(120))
+    legacy_run()                                  # epoch 0
+    spark.createDataFrame([("d2", 4, "web")], schema) \
+        .write.mode("append").parquet(src)
+    legacy_run()                                  # epoch 1
+    assert table.read().count() == 2
+    for f in ("1", ".1.crc"):                     # crash before commit
+        os.remove(os.path.join(ckpt, "commits", f))
+    write_stream_to_table(spark.readStream.schema(first.schema).parquet(src),
+                          table, ckpt, name="t").awaitTermination(120)
+    assert table.read().count() == 2              # epoch 1 not re-appended
+
+    write_stream_to_table(spark.readStream.schema(first.schema).parquet(src),
+                          table, str(tmp_path / "ckpt2"),
+                          name="t").awaitTermination(120)
+    assert table.read().count() == 4              # fresh run ingests all
 def test_audit_and_publish_refuses_branch_advanced_mid_audit(spark,
                                                              tmp_path):
     """round-5 review regressions (batch 8): commits staged AFTER the

@@ -4,11 +4,13 @@ column names, and order-insensitive value content."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so an A/B copy tests its own package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod
 from fhir_data_validation_spark.session import get_spark
 from fhir_data_validation_spark.sources.tables import TABLES
