@@ -1904,10 +1904,14 @@ def outlier_bounds(df: DataFrame, column: str, method: str = "zscore",
     if method == "zscore" and exact:
         # decimal(19,0) holds ANY bigint (max ~9.2e18, 19 digits) and
         # its square fits decimal(38,0) (max ~8.5e37), so the casts can
-        # never overflow; the SUMS still can on extreme data (~1e8 rows
-        # of ~1e15 values), so they are try_sum — NULL on overflow
-        # instead of an ANSI crash — and each group falls back to the
-        # avg/stddev moments computed IN THE SAME single aggregation.
+        # never overflow. The numerator below cannot exceed decimal(38,0)
+        # (< 1e38) either: the lane is exact only while n·Σx² < 1e38,
+        # which implies |Σx| < 1e19 — about 1e4 rows of ~1e15 values, or
+        # two rows of 5e18 (two of 4999999999999999999 stay exact). Past
+        # that the try_* ops give NULL instead of an ANSI crash, and
+        # each group falls back to the avg/stddev moments computed IN
+        # THE SAME single aggregation — while DuckDB's hugeint oracle
+        # stays exact, so the two engines may then differ.
         # Exact groups stay bit-identical; overflowing groups degrade to
         # the engine-deterministic (not cross-engine) fences rather than
         # failing the run or silently dropping rows (round-5 review).

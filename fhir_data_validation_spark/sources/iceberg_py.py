@@ -1072,8 +1072,7 @@ class PyIcebergTable:
     def _fkey(p: str) -> str:
         # input_file_name() returns a percent-encoded qualified URI while
         # manifest paths are plain — key both sides by the last two path
-        # segments (unique: every commit prefixes a fresh uuid), the same
-        # convention _manifest_entries uses
+        # segments (unique: every commit prefixes a fresh uuid)
         return "/".join(p.rsplit("/", 2)[-2:])
 
     def _cow_candidates(self, meta: dict, live: list,
@@ -1800,9 +1799,10 @@ class PyIcebergTable:
         WITHOUT copying them — the pure-Python analog of Iceberg's
         ``add_files`` procedure. The files stay where they are (Iceberg
         data files may live at any absolute path); manifests, per-file
-        stats and the skip index are built from one listing + one Spark
-        stats job. The caller must not mutate or delete the registered
-        files afterwards (snapshot immutability is theirs to keep).
+        stats and the skip index are built from one listing plus each
+        file's parquet footer — no Spark job runs. The caller must not
+        mutate or delete the registered files afterwards (snapshot
+        immutability is theirs to keep).
 
         Unpartitioned tables only: external layouts don't carry the
         table's partition tree."""
@@ -2209,71 +2209,30 @@ class PyIcebergTable:
             e["data_file"]["file_path"] = dst
         fs.delete(jvm.org.apache.hadoop.fs.Path(tmp_dir), True)
 
-    @staticmethod
-    def _norm_path(p: str, decode: bool = False) -> str:
-        """Scheme-stripped path — the common form of an FS listing path
-        (``file:/tmp/x``) and a bare path (``/tmp/x``). An
-        ``input_file_name()`` URI is additionally percent-ENCODED relative
-        to what the filesystem shows (Hive-escaped partition dirs get a
-        second round of encoding), so that side passes ``decode=True`` for
-        exactly ONE unquote — decoding the listing side too would corrupt
-        paths whose on-disk names legitimately contain ``%``."""
-        if decode:
-            p = _url_decode(p)
-        head = p.split("/", 1)[0]
-        if head.endswith(":"):
-            p = p.split(":", 1)[1]
-        return "/" + p.lstrip("/")
-
     def _manifest_entries(self, files_dir: str, snapshot_id: int, seq: int,
                           pfs: "list[_PartField] | None",
                           schema: T.StructType) -> list[dict]:
         pfs = pfs or []
-        files = _list_files(self.spark, files_dir, ".parquet")
-        if not files:
-            # empty input (a routine no-new-data delta batch): commit an
-            # empty snapshot — the parquet re-read below would fail with an
-            # obscure 'Unable to infer schema' on the file-less staging dir
-            return []
-        # per-file row counts AND column bounds in ONE Spark job (works on
-        # any filesystem; basePath keeps partition columns). Bounds cover
-        # the top-level atomic columns and feed the skip index — the
-        # engine-level analog of Iceberg's lower_bounds/upper_bounds.
-        # pin the stats scan to the DECLARED schema: schema inference
-        # would type identity-partition DIRECTORY values by their lexical
-        # shape ('001' -> int), recording bounds that later make a
-        # legitimate string stats_filter uncomparable
-        reader = self.spark.read.schema(schema)
-        if pfs:
-            reader = reader.option("basePath", files_dir)
-        # decimals are excluded from the skip index: its sidecar is plain
-        # JSON (Decimal does not serialize) and the bounds comparison
-        # contract is declared-type values — a decimal filter still works,
-        # it just never prunes on that column
+        # per-file row counts AND column bounds come from each file's
+        # parquet footer, where the writer already recorded them (the
+        # Iceberg spec's record_count / lower_bounds / upper_bounds) — no
+        # Spark job re-reads what was just written. Bounds cover the
+        # top-level atomic columns and feed the skip index. Decimals are
+        # excluded: the index sidecar is plain JSON (Decimal does not
+        # serialize) — a decimal filter still works, it just never prunes
+        # on that column
         bound_cols = [f.name for f in schema.fields
                       if isinstance(f.dataType, (T.NumericType,
                                                  T.StringType))
                       and not isinstance(f.dataType, T.DecimalType)]
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for c in bound_cols:
-            aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-        # key by the FULL normalized path: partitionBy writes the SAME
-        # part-file basename into every partition dir, and with a nested
-        # (multi-field) layout even the last TWO segments collide across
-        # sibling branches — only the whole path is unique pre-promotion
-        stats_rows = (reader.parquet(files_dir)
-                      .groupBy(F.input_file_name().alias("f"))
-                      .agg(*aggs)
-                      .collect())
-        counts = {self._norm_path(r["f"], decode=True): r["n"]
-                  for r in stats_rows}
-        bounds = {self._norm_path(r["f"], decode=True):
-                  {c: [r[f"_lo_{c}"], r[f"_hi_{c}"]]
-                   for c in bound_cols if r[f"_lo_{c}"] is not None}
-                  for r in stats_rows}
+        # an empty listing (a routine no-new-data delta batch) commits an
+        # empty snapshot
+        files = sorted(_list_files(self.spark, files_dir, ".parquet"),
+                       key=lambda x: x["path"])
         entries = []
-        for fi in sorted(files, key=lambda x: x["path"]):
-            base = self._norm_path(fi["path"])
+        for fi, md in zip(files, _parquet_footers(self.spark, files_dir,
+                                                  files)):
+            bounds = _footer_bounds(md, bound_cols)
             partition: dict[str, Any] = {}
             for pf in pfs:
                 # take the DEEPEST matching segment: the partition dirs
@@ -2286,6 +2245,10 @@ class PyIcebergTable:
                 partition[pf.name] = (None
                                       if raw == "__HIVE_DEFAULT_PARTITION__"
                                       else pf.parse_raw(raw))
+                # a partition column lives in the directory, not the file:
+                # its bound is the directory value itself
+                if partition[pf.name] is not None:
+                    bounds[pf.name] = [partition[pf.name]] * 2
             entries.append({
                 "status": 1,                       # ADDED
                 "snapshot_id": snapshot_id,
@@ -2298,13 +2261,14 @@ class PyIcebergTable:
                 "file_sequence_number": None,
                 # engine-side skip stats, NOT written into the (spec-shaped)
                 # manifest Avro — popped before serialization
-                "_bounds": bounds.get(base, {}),
+                "_bounds": {c: bounds[c] for c in bound_cols
+                            if c in bounds},
                 "data_file": {
                     "content": 0,                  # DATA
                     "file_path": fi["path"],
                     "file_format": "PARQUET",
                     "partition": partition,
-                    "record_count": int(counts.get(base, 0)),
+                    "record_count": md.num_rows,
                     "file_size_in_bytes": int(fi["length"]),
                 }})
         return entries
@@ -3303,6 +3267,74 @@ def _spark_schema(ice_schema: dict) -> T.StructType:
     return T.StructType([
         T.StructField(f["name"], _spark_type(f["type"]), not f["required"])
         for f in ice_schema["fields"]])
+
+
+def _spark_order(v: Any) -> tuple:
+    # Spark orders NaN above every other double (parquet-mr's footer
+    # statistics agree: a chunk holding NaN records max NaN)
+    return (v != v, v)
+
+
+def _parquet_footers(spark: SparkSession, root: str, files: list[dict]):
+    """Yield each listed parquet file's footer metadata (pyarrow
+    ``FileMetaData``): two small reads per file through the Hadoop
+    FileSystem (any scheme Spark reaches) — the 8-byte tail, then the
+    footer it points at — and no scan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    fs, _, jvm = _jfs(spark, root)
+    # resolve the JVM classes once: every py4j attribute hop is a call
+    path_of = jvm.org.apache.hadoop.fs.Path
+    read = jvm.org.apache.commons.io.IOUtils.toByteArray
+    for fi in files:
+        stream = fs.open(path_of(fi["path"]))
+        try:
+            # tail = <footer length: int32 LE> b"PAR1"
+            stream.seek(fi["length"] - 8)
+            tail = bytes(read(stream, 8))
+            n = struct.unpack("<i", tail[:4])[0]
+            stream.seek(fi["length"] - 8 - n)
+            footer = bytes(read(stream, n))
+        finally:
+            stream.close()
+        yield pq.read_metadata(pa.BufferReader(b"PAR1" + footer + tail))
+
+
+def _orders_nan(created_by: str | None) -> bool:
+    """Whether a writer folds NaN into float min/max the way Spark orders
+    it. parquet-mr does (checked against 1.16; releases before 1.12 are
+    not relied on). parquet-cpp / Arrow leaves NaN out, so another
+    writer's max is no upper bound for a chunk that may hold NaN."""
+    m = re.match(r"parquet-mr version (\d+)\.(\d+)", created_by or "")
+    return bool(m) and (int(m[1]), int(m[2])) >= (1, 12)
+
+
+def _footer_bounds(md, cols: list[str]) -> dict[str, list]:
+    """{column: [min, max]} over a file's row groups. An all-NULL chunk
+    contributes nothing; a chunk with values but no min/max (parquet-mr
+    omits them past 4 KB) leaves its column with no bound — a file
+    without a bound is never skipped, so that only costs pruning. A
+    float chunk from a writer that leaves NaN out of its max gets max
+    NaN, as Spark would compute it if the chunk holds one."""
+    lo: dict[str, Any] = {}
+    hi: dict[str, Any] = {}
+    unbounded: set[str] = set()
+    nan_blind = not _orders_nan(md.created_by)
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for j in range(rg.num_columns):
+            ch = rg.column(j)
+            c, st = ch.path_in_schema, ch.statistics
+            if c not in cols:
+                continue
+            if st is not None and st.has_min_max:
+                lo[c] = min(lo.get(c, st.min), st.min, key=_spark_order)
+                hi[c] = max(hi.get(c, st.max), st.max, key=_spark_order)
+                if nan_blind and ch.physical_type in ("FLOAT", "DOUBLE"):
+                    hi[c] = float("nan")
+            elif st is None or st.null_count != ch.num_values:
+                unbounded.add(c)
+    return {c: [lo[c], hi[c]] for c in lo if c not in unbounded}
 
 
 def _url_decode(s: str) -> str:

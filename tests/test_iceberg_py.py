@@ -2486,3 +2486,325 @@ def test_schema_diff_by_field_id(spark, tmp_path):
     # reversed direction flips add/drop
     rev = {r["change"] for r in t.schema_diff(s2, s1).collect()}
     assert "added" in rev and "dropped" in rev
+
+
+# ------------------------------------ manifest stats from parquet footers ---
+
+def _local_path(uri, decode=False):
+    """Scheme-less path of a listing path (``file:/x``) or of an
+    ``input_file_name()`` URI (``file:///x``, percent-encoded once more
+    than the listing — ``decode=True`` undoes that)."""
+    from urllib.parse import unquote, urlparse
+    return urlparse(unquote(uri) if decode else uri).path
+
+
+def _spark_file_stats(spark, files_dir, pfs, schema):
+    """{path: (record count, bounds)} from ONE Spark aggregation over the
+    staged files keyed by ``input_file_name()`` — how commits computed
+    per-file stats before they read parquet footers, kept here as the
+    oracle. Zero-row files have no group and read as (0, {})."""
+    import glob
+    if not glob.glob(f"{files_dir}/**/*.parquet", recursive=True):
+        return {}
+    reader = spark.read.schema(schema)
+    if pfs:
+        reader = reader.option("basePath", files_dir)
+    cols = [f.name for f in schema.fields
+            if isinstance(f.dataType, (T.NumericType, T.StringType))
+            and not isinstance(f.dataType, T.DecimalType)]
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
+    rows = (reader.parquet(files_dir)
+            .groupBy(F.input_file_name().alias("f")).agg(*aggs).collect())
+    return {_local_path(r["f"], decode=True):
+            (r["n"], {c: [r[f"_lo_{c}"], r[f"_hi_{c}"]] for c in cols
+                      if r[f"_lo_{c}"] is not None})
+            for r in rows}
+
+
+def _same(a, b):
+    """Exact equality of stats values: types must match ('001' is not 1),
+    dict keys must come in the same order (the skip-index JSON is
+    order-sensitive), NaN equals NaN. The sign of a zero bound is not
+    compared: Spark's min/max keeps whichever zero it meets first while
+    the footer records -0.0 / +0.0, and every bound comparison treats the
+    two as equal."""
+    if isinstance(a, dict):
+        return (isinstance(b, dict) and list(a) == list(b)
+                and all(_same(a[k], b[k]) for k in a))
+    if isinstance(a, (list, tuple)):
+        return (type(a) is type(b) and len(a) == len(b)
+                and all(map(_same, a, b)))
+    return type(a) is type(b) and (a == b or (a != a and b != b))
+
+
+@pytest.fixture()
+def stats_oracle(spark, monkeypatch):
+    """Checks every commit's new manifest entries against the Spark
+    aggregation over the same staged files, before promotion moves them.
+    Returns copies of the checked entry lists (staged paths, bounds not
+    yet popped by the commit), one per commit."""
+    import copy
+    import os
+    real = PyIcebergTable._manifest_entries
+    checked = []
+
+    def manifest_entries(self, files_dir, snapshot_id, seq, pfs, schema):
+        entries = real(self, files_dir, snapshot_id, seq, pfs, schema)
+        want = _spark_file_stats(spark, files_dir, pfs, schema)
+        got = [_local_path(e["data_file"]["file_path"]) for e in entries]
+        staged = sorted(os.path.join(d, f)
+                        for d, _, fs in os.walk(files_dir)
+                        for f in fs if f.endswith(".parquet"))
+        assert sorted(got) == staged
+        for p, e in zip(got, entries):
+            n, bounds = want.get(p, (0, {}))
+            assert e["data_file"]["record_count"] == n, p
+            assert e["data_file"]["file_size_in_bytes"] == \
+                os.path.getsize(p), p
+            assert _same(e["_bounds"], bounds), (p, e["_bounds"], bounds)
+        checked.append(copy.deepcopy(entries))
+        return entries
+
+    monkeypatch.setattr(PyIcebergTable, "_manifest_entries",
+                        manifest_entries)
+    return checked
+
+
+def test_footer_stats_add_files_of_synth_corpus(spark, tmp_path,
+                                                stats_oracle):
+    """add_files of a seeded corrupted token corpus (strings with NULLs,
+    an int column, an array column without bounds): counts, sizes and
+    skip-index bounds equal the Spark aggregation's."""
+    from fhir_data_validation_spark.sources.synth import dirty_token_table
+    ext = str(tmp_path / "corpus")
+    df = dirty_token_table(spark, 3000, seed=7).drop("_row_id")
+    df.repartition(4).write.parquet(ext)
+    t = PyIcebergTable.create(spark, str(tmp_path / "c"),
+                              spark.read.parquet(ext).schema)
+    t.add_files(ext)
+    [entries] = stats_oracle
+    assert len(entries) == 4
+    assert sum(e["data_file"]["record_count"] for e in entries) == 3000
+    assert all(set(e["_bounds"]) == {"doc_id", "n_tok", "source"}
+               for e in entries)
+
+
+def test_footer_stats_typed_columns_nan_negative_zero_all_null(
+        spark, tmp_path, stats_oracle):
+    """Appends of long/int/short/byte/float/double/string columns, a
+    double column holding NaN and -0.0 (Spark and parquet-mr both order
+    NaN above every number) and an all-NULL column (no bound)."""
+    nan = float("nan")
+    sch = T.StructType([T.StructField(n, t) for n, t in [
+        ("l", T.LongType()), ("i", T.IntegerType()),
+        ("s", T.ShortType()), ("b", T.ByteType()),
+        ("f", T.FloatType()), ("d", T.DoubleType()),
+        ("z", T.DoubleType()), ("str", T.StringType()),
+        ("nul", T.LongType())]])
+    t = PyIcebergTable.create(spark, str(tmp_path / "typed"), sch)
+    t.append(spark.createDataFrame(
+        [(1, -2, 3, -4, 0.1, 1.0, -0.0, "b", None),
+         (2**40, 7, -3, 4, -0.5, nan, 0.0, "é", None),
+         (None, None, None, None, None, 2.0, 0.0, None, None)], sch)
+        .coalesce(1))
+    t.append(spark.createDataFrame(
+        [(i, i, i, i % 100, i / 3, nan if i % 7 == 0 else -i / 7,
+          0.0, f"k{i:03d}", None) for i in range(50)], sch).repartition(3))
+    assert [len(e) for e in stats_oracle] == [1, 3]
+    [first] = stats_oracle[0]
+    assert "nul" not in first["_bounds"]
+    lo, hi = first["_bounds"]["d"]
+    assert lo == 1.0 and hi != hi                      # max NaN
+    assert t.read(stats_filter={"l": (2**40, None)}).count() == 3
+
+
+def test_footer_stats_fold_several_row_groups(spark, tmp_path,
+                                              stats_oracle):
+    """A file with several row groups: each column's bound is the fold of
+    its chunks' min/max, NaN ordered last as Spark orders it."""
+    import glob
+
+    import pyarrow.parquet as pq
+    sch = T.StructType([T.StructField("k", T.LongType()),
+                        T.StructField("d", T.DoubleType()),
+                        T.StructField("v", T.StringType())])
+    rows = [((i * 7919) % 5000 - 2500,
+             float("nan") if i == 2500 else (i % 97) - 48.5,
+             f"v{(i * 31) % 5000:05d}") for i in range(5000)]
+    t = PyIcebergTable.create(spark, str(tmp_path / "rg"), sch)
+    spark.conf.set("parquet.block.size", "4096")
+    try:
+        t.append(spark.createDataFrame(rows, sch).coalesce(1))
+    finally:
+        spark.conf.unset("parquet.block.size")
+    [[entry]] = stats_oracle
+    [path] = glob.glob(str(tmp_path / "rg" / "data" / "*.parquet"))
+    assert pq.read_metadata(path).num_row_groups > 2
+    assert entry["_bounds"]["k"] == [-2500, 2499]
+    assert entry["_bounds"]["v"] == ["v00000", "v04999"]
+    assert entry["_bounds"]["d"][1] != entry["_bounds"]["d"][1]
+
+
+def test_footer_stats_partitioned_tables(spark, tmp_path, stats_oracle):
+    """Identity partitions take their bound from the directory value —
+    zero-padded strings stay strings, a NULL partition records none —
+    and transform partitions keep the source column's footer bounds
+    beside the derived column's directory value; a COW delete's rewrite
+    goes through the same path."""
+    sch = T.StructType([T.StructField("k", T.LongType()),
+                        T.StructField("code", T.StringType())])
+    t = PyIcebergTable.create(spark, str(tmp_path / "pad"), sch,
+                              partition_by="code")
+    t.append(spark.createDataFrame(
+        [(1, "001"), (2, "050"), (3, "999"), (4, None), (5, "050")], sch)
+        .coalesce(1))
+    assert {e["_bounds"].get("code", [None])[0]
+            for e in stats_oracle[0]} == {"001", "050", "999", None}
+    assert {r["code"] for r in t.read(
+        stats_filter={"code": ("001", "099")}).collect()} <= \
+        {"001", "050", None}
+    t.delete_rows("k = 2")
+    assert sorted(r["k"] for r in t.read().collect()) == [1, 3, 4, 5]
+
+    sch2 = T.StructType([T.StructField("doc_id", T.StringType()),
+                         T.StructField("v", T.LongType())])
+    t2 = PyIcebergTable.create(
+        spark, str(tmp_path / "bt"), sch2,
+        partition_by=[("doc_id", "bucket[4]"), ("v", "truncate[10]")])
+    t2.append(spark.createDataFrame(
+        [(f"d{i}", i) for i in range(40)] + [(None, None)], sch2))
+    bucketed = stats_oracle[-1]
+    assert len(bucketed) > 4
+    assert all("doc_id" in e["_bounds"] and "v_trunc" in e["_bounds"]
+               for e in bucketed if e["data_file"]["partition"]["v_trunc"]
+               is not None)
+    assert [len(e) for e in stats_oracle[:2]] == [4, 1]  # append, delete
+
+
+def test_footer_stats_delete_files_and_empty_commit(spark, tmp_path,
+                                                    stats_oracle):
+    """Position-delete and equality-delete files get their counts and
+    bounds from their footers too; an empty staging dir commits an empty
+    snapshot."""
+    sch = T.StructType([T.StructField("k", T.LongType()),
+                        T.StructField("v", T.StringType())])
+    t = PyIcebergTable.create(spark, str(tmp_path / "del"), sch)
+    t.append(spark.createDataFrame(
+        [(i, f"v{i}") for i in range(30)], sch).repartition(2))
+    assert t.delete_rows("k % 10 = 3", mode="mor")["rows_deleted"] == 3
+    t.delete_rows_eq(spark.createDataFrame([(5,), (6,), (99,)], "k long"))
+    pos, eq = stats_oracle[1], stats_oracle[2]
+    assert sum(e["data_file"]["record_count"] for e in pos) == 3
+    assert all(set(e["_bounds"]) == {"file_path", "pos"} for e in pos
+               if e["data_file"]["record_count"])
+    assert sum(e["data_file"]["record_count"] for e in eq) == 3
+    assert t.read().count() == 25
+    # an empty unpartitioned write leaves one zero-row file; a listing
+    # with no file at all commits a snapshot with no entries
+    t.append(spark.createDataFrame([], sch))
+    assert [e["data_file"]["record_count"] for e in stats_oracle[-1]] == [0]
+    (tmp_path / "none").mkdir()
+    before = len(t.snapshots().collect())
+    t.add_files(str(tmp_path / "none"))
+    assert stats_oracle[-1] == []
+    assert len(t.snapshots().collect()) == before + 1
+    assert t.read().count() == 25
+
+
+def test_footer_stats_oversized_string_has_no_bound(spark, tmp_path):
+    """parquet-mr writes no min/max for a chunk whose values exceed 4 KB:
+    the footer path then records no bound for that column of that file
+    (the one place it differs from a Spark aggregation), and a
+    stats_filter on it keeps the file, so every row still comes back."""
+    big = "x" * 5000
+    sch = T.StructType([T.StructField("k", T.LongType()),
+                        T.StructField("s", T.StringType())])
+    t = PyIcebergTable.create(spark, str(tmp_path / "big"), sch)
+    t.append(spark.createDataFrame([(1, big), (2, "a"), (3, "b")], sch)
+             .coalesce(1))
+    data_dir = tmp_path / "big" / "data"
+    [(n, want)] = _spark_file_stats(spark, str(data_dir), None,
+                                    sch).values()
+    assert n == 3 and want["s"] == ["a", big]
+    [bounds] = json.loads(
+        (tmp_path / "big" / "metadata" /
+         f"skipidx-{t.current_snapshot_id()}.json").read_text()).values()
+    assert bounds == {"k": [1, 3]}
+    assert t.read(stats_filter={"s": (big, big)}).count() == 3
+    assert t.read(stats_filter={"s": ("zzz", None)}).count() == 3
+    # one oversized chunk among several row groups: the other chunks'
+    # min/max must not become the file's bound, or a filter above them
+    # would skip the file that holds the oversized value
+    import glob
+
+    import pyarrow.parquet as pq
+    rows = [(i, "z" * 5000 if i == 1500 else f"v{i:05d}")
+            for i in range(3000)]
+    spark.conf.set("parquet.block.size", "4096")
+    try:
+        sid = t.append(spark.createDataFrame(rows, sch).coalesce(1))
+    finally:
+        spark.conf.unset("parquet.block.size")
+    [bounds] = json.loads(
+        (tmp_path / "big" / "metadata" /
+         f"skipidx-{sid}.json").read_text()).values()
+    assert bounds == {"k": [0, 2999]}
+    [path] = [p for p in glob.glob(str(data_dir / "*.parquet"))
+              if pq.read_metadata(p).num_rows == 3000]
+    md = pq.read_metadata(path)
+    has = [md.row_group(g).column(1).statistics.has_min_max
+           for g in range(md.num_row_groups)]
+    assert True in has and False in has
+    assert t.read(stats_filter={"s": ("z", None)}) \
+        .where(F.col("s") >= "z").count() == 1
+
+
+def test_footer_stats_nan_from_arrow_writer(spark, tmp_path, stats_oracle):
+    """An Arrow-written file leaves NaN out of a double chunk's max, where
+    Spark orders NaN above every number: add_files records max NaN for
+    it, as the Spark aggregation does, so a lower-bound stats_filter
+    keeps the file and its NaN row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    ext = tmp_path / "arrow"
+    ext.mkdir()
+    pq.write_table(pa.table({"k": pa.array([1, 2, 3], pa.int64()),
+                             "d": [1.0, float("nan"), 2.0]}),
+                   str(ext / "part-0.parquet"))
+    assert pq.read_metadata(str(ext / "part-0.parquet")) \
+        .row_group(0).column(1).statistics.max == 2.0
+    t = PyIcebergTable.create(spark, str(tmp_path / "nan"),
+                              spark.read.parquet(str(ext)).schema)
+    t.add_files(str(ext))
+    [[entry]] = stats_oracle
+    assert entry["_bounds"]["k"] == [1, 3]
+    kept = t.read(stats_filter={"d": (3.0, None)})
+    assert kept.count() == 3
+    assert kept.where(F.isnan("d")).count() == 1
+
+
+def test_commits_run_no_spark_stats_job(spark, tmp_path):
+    """Per-file stats come from footers: add_files runs no Spark job and
+    an append runs exactly one, the write itself."""
+    import uuid
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(fn):
+        group = f"commit-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count commit jobs")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+    ext = str(tmp_path / "ext")
+    _rows(spark, [("e1", [1], 1, "web"), ("e2", [2, 3], 2, "book")]) \
+        .repartition(2).write.parquet(ext)
+    t = PyIcebergTable.create(spark, str(tmp_path / "jobs"), TOKENS_SCHEMA)
+    assert jobs(lambda: t.add_files(ext)) == 0
+    batch = _rows(spark, [("a1", [1, 2], 2, "web")])
+    assert jobs(lambda: t.append(batch)) == 1
+    assert t.read().count() == 3
