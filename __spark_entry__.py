@@ -13,14 +13,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fhir_data_validation_spark import EngineConfig, RuleSet, ValidationEngine
-from fhir_data_validation_spark.pipeline import (cleaning, dedup, multimodal,
-                                                 similarity, text)
 from fhir_data_validation_spark.sources.tables import load_table
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -537,254 +534,6 @@ def q_j4_codemaster(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("doc_id", "error_code"))
 
 
-# ------------------------------------------- training-pipeline operators ----
-
-def _seeded_docs(spark: SparkSession, sf: str) -> DataFrame:
-    """documents ∪ near-dup copies (first word dropped, id+10000) ∪ exact
-    copies (id+20000) of doc_id < 5 — deterministic seeded duplicates so the
-    dedup operators have non-trivial output. The oracle SQL constructs the
-    identical set."""
-    docs = load_table(spark, sf, "documents")
-    base = docs.where(F.col("doc_id") < 5)
-    near = base.select((F.col("doc_id") + 10000).alias("doc_id"),
-                       F.regexp_replace("text", "^[a-z0-9]+ ", "")
-                       .alias("text"), "lang", "source", "n_chars")
-    exact = base.select((F.col("doc_id") + 20000).alias("doc_id"), "text",
-                        "lang", "source", "n_chars")
-    return docs.unionByName(near).unionByName(exact)
-
-
-def q_t1_token_count(spark: SparkSession, sf: str) -> DataFrame:
-    df = load_table(spark, sf, "documents")
-    c = F.col("text")
-    return (df.select("doc_id",
-                      text.token_count_ws(c).alias("n_ws"),
-                      text.token_count_bpe(c).alias("n_bpe"))
-            .orderBy("doc_id"))
-
-
-def q_t2_quality(spark: SparkSession, sf: str) -> DataFrame:
-    df = load_table(spark, sf, "documents")
-    return (df.select("doc_id",
-                      text.quality_score(F.col("text")).alias("quality"))
-            .orderBy("doc_id"))
-
-
-def q_t3_lang_id(spark: SparkSession, sf: str) -> DataFrame:
-    df = load_table(spark, sf, "documents")
-    return (df.select("doc_id", F.col("lang").alias("lang_actual"),
-                      text.lang_id(F.col("text")).alias("lang_pred"))
-            .orderBy("doc_id"))
-
-
-def q_t4_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
-    df = load_table(spark, sf, "documents")
-    return (df.select("doc_id",
-                      text.fingerprint(F.col("text")).alias("fingerprint"))
-            .orderBy("doc_id"))
-
-
-def q_t5_quality_filter(spark: SparkSession, sf: str) -> DataFrame:
-    """Gopher/C4-style quality-filter rules running through the engine's
-    CustomExpr lane — quality filtering fuses into the same one-scan
-    violation pass as every other rule."""
-    from fhir_data_validation_spark.pipeline.presets import \
-        gopher_quality_rules
-    df = load_table(spark, sf, "documents")
-    res = _validate(spark, df, gopher_quality_rules()["rules"],
-                    key_col="doc_id", group_col="lang")
-    return _viol(res)
-
-
-def q_t6_c4_filter(spark: SparkSession, sf: str) -> DataFrame:
-    """C4-style cleaning heuristics through the engine's CustomExpr lane
-    (document-level adaptation of the public C4 line filters)."""
-    from fhir_data_validation_spark.pipeline.presets import c4_quality_rules
-    df = load_table(spark, sf, "documents")
-    res = _validate(spark, df, c4_quality_rules()["rules"],
-                    key_col="doc_id", group_col="lang")
-    return _viol(res)
-
-
-def q_d1_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    out = dedup.exact_duplicates(_seeded_docs(spark, sf))
-    return (out.select("fingerprint", "n_docs",
-                       F.col("keep").cast("long").alias("keep"))
-            .orderBy("keep"))
-
-
-def q_d2_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    out = dedup.jaccard_pairs(_seeded_docs(spark, sf), threshold=0.6)
-    return (out.select(F.col("id_a").cast("long").alias("id_a"),
-                       F.col("id_b").cast("long").alias("id_b"), "jaccard")
-            .orderBy("id_a", "id_b"))
-
-
-def q_x8_similarity_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Cross-corpus MinHash-LSH similarity join (dedup.similarity_join):
-    the seeded documents split by doc_id parity into two 'corpora', joined
-    at n-gram Jaccard ≥ 0.6 — the fuzzy join that aligns two corpus
-    versions or links noisy records across sources. Only cross-side pairs
-    materialize; values are exact (full-set verify), so the oracle is the
-    exact cross-parity Jaccard pair set."""
-    docs = _seeded_docs(spark, sf)
-    out = dedup.similarity_join(docs.where(F.col("doc_id") % 2 == 0),
-                                docs.where(F.col("doc_id") % 2 == 1),
-                                threshold=0.6)
-    return (out.select(
-        F.least(F.col("left_id"), F.col("right_id"))
-         .cast("long").alias("id_a"),
-        F.greatest(F.col("left_id"), F.col("right_id"))
-         .cast("long").alias("id_b"),
-        "jaccard").orderBy("id_a", "id_b"))
-
-
-def q_d3_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
-    """MinHash(64)+LSH(32 bands) with exact-Jaccard verification — at the
-    configured band/row split recall at j ≥ 0.6 is ≈ 1-6e-7, so the
-    verified candidate set equals the exact pair set (the oracle)."""
-    out = dedup.minhash_dedup(_seeded_docs(spark, sf), threshold=0.6)
-    return (out.select(F.col("id_a").cast("long").alias("id_a"),
-                       F.col("id_b").cast("long").alias("id_b"), "jaccard")
-            .orderBy("id_a", "id_b"))
-
-
-def q_d4_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    """SimHash hamming ≤ 3 pairs with the md5_60 word hash — bit-for-bit
-    reproducible in the oracle dialect (64 conditional-sum bit votes, sign
-    reassembly, bit_count(xor) distance), so the full signature pipeline is
-    oracle-checked, not just row counts. Production keeps the faster
-    xxhash64 default; only the hash primitive differs."""
-    out = dedup.simhash_pairs(_seeded_docs(spark, sf), max_distance=3,
-                              hash_fn="md5_60")
-    return (out.select(F.col("id_a").cast("long").alias("id_a"),
-                       F.col("id_b").cast("long").alias("id_b"), "hamming")
-            .orderBy("id_a", "id_b"))
-
-
-def q_d6_duplicate_clusters(spark: SparkSession, sf: str) -> DataFrame:
-    """Connected components over near-dup pairs → (doc_id, cluster, keep):
-    iterative min-label propagation (O(diameter) joins over pair data).
-    Oracle: DuckDB recursive transitive closure with the same min-id
-    cluster convention."""
-    pairs = dedup.jaccard_pairs(_seeded_docs(spark, sf), threshold=0.6)
-    out = dedup.duplicate_clusters(pairs)
-    return (out.select(F.col("doc_id").cast("long").alias("doc_id"),
-                       F.col("cluster").cast("long").alias("cluster"),
-                       "keep")
-            .orderBy("doc_id"))
-
-
-def q_d6b_keep_best_clusters(spark: SparkSession, sf: str) -> DataFrame:
-    """Keep-best duplicate clustering (dedup.duplicate_clusters with a
-    quality frame): same connected components as d6, but each cluster
-    keeps its highest-quality member (ties → min id) instead of the min
-    id. Quality is the deterministic ``doc_id % 7`` so seeded copies rank
-    differently from their originals and the election genuinely flips
-    winners. Oracle: recursive transitive closure + the same two-stage
-    arg-max in SQL."""
-    seeded = _seeded_docs(spark, sf)
-    pairs = dedup.jaccard_pairs(seeded, threshold=0.6)
-    quality = seeded.select("doc_id",
-                            (F.col("doc_id") % 7).cast("double")
-                            .alias("quality"))
-    out = dedup.duplicate_clusters(pairs, quality=quality)
-    return (out.select(F.col("doc_id").cast("long").alias("doc_id"),
-                       F.col("cluster").cast("long").alias("cluster"),
-                       "keep")
-            .orderBy("doc_id"))
-
-
-def q_d8_incremental_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    """Incremental SimHash near-dedup (pipeline/dedup.simhash_incremental):
-    docs < 5 are the indexed survivor corpus (signatures only — no
-    historical text); the rest of the seeded set arrives as the delta.
-    md5_60 word hashes so the oracle rebuilds identical signatures; the
-    oracle's brute-force distance scan equals the engine's pigeonhole
-    candidates for hamming <= 3."""
-    seeded = _seeded_docs(spark, sf)
-    hist = seeded.where(F.col("doc_id") < 5)
-    index = (dedup.simhash(hist, hash_fn="md5_60")
-             .withColumnRenamed("_id", "doc_id"))
-    new = seeded.where(F.col("doc_id") >= 5)
-    verdicts, _delta = dedup.simhash_incremental(new, index,
-                                                 hash_fn="md5_60")
-    return (verdicts.select(F.col("doc_id").cast("long").alias("doc_id"),
-                            "simhash", "dup",
-                            F.coalesce(F.col("dup_of"), F.lit(-1))
-                             .cast("long").alias("dup_of"),
-                            F.coalesce(F.col("hamming"), F.lit(-1))
-                             .cast("int").alias("hamming"))
-            .orderBy("doc_id"))
-
-
-def q_d7_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """Incremental exact dedup (pipeline/dedup.exact_duplicates_incremental):
-    docs with id < 3 are the indexed history; everything else (including
-    the seeded copies) arrives as the delta batch. New docs dedup against
-    the index plus earlier batch rows — per-batch work O(delta), the
-    historical corpus never re-scanned."""
-    seeded = _seeded_docs(spark, sf)
-    hist = seeded.where(F.col("doc_id") < 3)
-    index = hist.select(
-        text.fingerprint(F.col("text")).alias("fingerprint"),
-        F.col("doc_id").alias("keep"))
-    new = seeded.where(F.col("doc_id") >= 3)
-    verdicts, _delta = dedup.exact_duplicates_incremental(new, index)
-    return (verdicts.select(F.col("doc_id").cast("long").alias("doc_id"),
-                            "fingerprint", F.col("keep").cast("long")
-                            .alias("keep"), "dup")
-            .orderBy("doc_id"))
-
-
-def _seeded_embeddings(spark: SparkSession, sf: str) -> DataFrame:
-    emb = load_table(spark, sf, "embeddings")
-    dup = (emb.where(F.col("vec_id") < 5)
-           .select((F.col("vec_id") + 100000).alias("vec_id"),
-                   "embedding", "label"))
-    return emb.unionByName(dup)
-
-
-def q_d5_embedding_neardup(spark: SparkSession, sf: str) -> DataFrame:
-    """Embedding-cosine near-dup over seeded identical copies (threshold
-    0.999 ⇒ only true copies) via the scale path: SRP-LSH candidate
-    buckets + exact rerank (identical vectors have identical signatures in
-    every table ⇒ recall 1 by construction, so the exact-pair oracle
-    matches). Cosine value omitted from the projection: float32
-    accumulation-order differences vs the oracle are below the
-    pair-detection threshold but not below hash equality."""
-    out = similarity.embedding_near_dup(_seeded_embeddings(spark, sf),
-                                        threshold=0.999)
-    return out.select("id_a", "id_b").orderBy("id_a", "id_b")
-
-
-def q_s1_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Brute-force cosine top-k (blocked numpy matmul via mapInPandas);
-    ranks compared against the oracle, cosine omitted (float32 vs float64
-    4th-decimal ties)."""
-    emb = load_table(spark, sf, "embeddings")
-    out = similarity.cosine_topk(emb.where(F.col("vec_id") >= 10),
-                                 emb.where(F.col("vec_id") < 3), k=5)
-    return (out.select("query_id", "vec_id", "rank")
-            .orderBy("query_id", "rank"))
-
-
-def q_sd1_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """SemDeDup (arXiv:2303.09540): spherical nearest-centroid cells +
-    within-cell keep-first cosine dedup (``similarity.semantic_dedup``).
-    Centroids pinned to the first four corpus vectors so the oracle derives
-    the identical partition; threshold 0.4 sits inside this corpus's
-    cosine range so the pairwise lane genuinely fires."""
-    from fhir_data_validation_spark.pipeline.similarity import semantic_dedup
-    emb = load_table(spark, sf, "embeddings")
-    cent = [r["embedding"] for r in
-            emb.where("vec_id < 4").orderBy("vec_id").collect()]
-    out = semantic_dedup(emb, 0.4, centroids=cent)
-    return (out.select("vec_id", "cell", "centroid_sim", "keep",
-                       F.col("dup_of").cast("string").alias("dup_of"))
-            .orderBy("vec_id"))
-
-
 def q_gr1_code_grammar(spark: SparkSession, sf: str) -> DataFrame:
     """T2 code grammar with the portable Unicode classes end-to-end: a
     synthesized value column carries a deterministic space (every 7th
@@ -879,114 +628,6 @@ def q_ext1_extension_grammar(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("doc_id", "rule_id", "idx"))
 
 
-# build-once-serve-many memo for the ANN contract queries: the library's
-# intended usage is a persistent index (IvfIndex.save/load) serving many
-# query batches, but a bare queries() callable re-fit the KMeans quantizer
-# on EVERY bench iteration — pure Spark-ML fixed overhead on a 2k-row
-# embeddings table. The memo keys on (name, sf, session id) so each
-# process pays one fit and every later call is search-only; the search
-# result (and therefore the oracle comparison) is identical either way.
-_ANN_INDEX_CACHE: dict = {}
-
-
-def _ann_index(name: str, spark: SparkSession, sf: str, build):
-    # applicationId, not id(spark): CPython reuses object ids after GC, so
-    # a stopped-and-replaced session could collide and serve an index whose
-    # DataFrames belong to a dead JVM session (round-4 review fix)
-    key = (name, sf, spark.sparkContext.applicationId)
-    if key not in _ANN_INDEX_CACHE:
-        _ANN_INDEX_CACHE[key] = build()
-    return _ANN_INDEX_CACHE[key]
-
-
-def q_s2_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF coarse-quantizer ANN (KMeans cells + probe-and-rerank). Probing
-    every cell makes the candidate set the full corpus, so the result is
-    exactly the brute-force top-k — which is the oracle; partial-probe
-    recall is covered by unit tests (the approximate regime has no SQL
-    twin). The index builds once per process (build-once-serve-many,
-    the library's documented usage) and every call reruns the search."""
-    emb = load_table(spark, sf, "embeddings")
-    # maxIter=2: at full probe the cell partition is irrelevant to the
-    # result (all cells rerank), so converged centroids buy nothing here
-    idx = _ann_index("s2", spark, sf, lambda: similarity.IvfIndex.build(
-        emb.where(F.col("vec_id") >= 10), n_cells=8, max_iter=2))
-    out = idx.search(emb.where(F.col("vec_id") < 3), k=5, n_probe=8)
-    return (out.select("query_id", "vec_id", "rank")
-            .orderBy("query_id", "rank"))
-
-
-def q_s3_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF-PQ (IVFADC): coarse cells + residual product-quantization ADC
-    shortlist + exact rerank. Full probe with a corpus-wide shortlist
-    sends every candidate through the exact rerank, so the result is
-    exactly the brute-force top-k — the oracle; ADC recall in the
-    approximate regime is covered by unit tests. Index built once per
-    process (see :func:`q_s2_ivf_topk`); the ADC search reruns per call."""
-    from fhir_data_validation_spark.pipeline.similarity import IvfPqIndex
-    emb = load_table(spark, sf, "embeddings")
-    idx = _ann_index("s3", spark, sf, lambda: IvfPqIndex.build(
-        emb.where(F.col("vec_id") >= 10), n_cells=8, m=8, n_codes=16,
-        max_iter=2))
-    out = idx.search(emb.where(F.col("vec_id") < 3), k=5, n_probe=8,
-                     rerank_factor=10**6)
-    return (out.select("query_id", "vec_id", "rank")
-            .orderBy("query_id", "rank"))
-
-
-def q_m1_multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
-    """Binary-payload metadata pass over the synthesized multimodal table
-    (modality omitted: it derives from xxhash64, which the oracle dialect
-    lacks; covered by unit tests)."""
-    mm = multimodal.synth_multimodal(load_table(spark, sf, "documents"))
-    meta = multimodal.extract_meta(mm)
-    return (meta.select(F.col("doc_id").cast("long").alias("doc_id"),
-                        "n_bytes", "header", "content_md5")
-            .orderBy("doc_id"))
-
-
-def q_m2_png_decode(spark: SparkSession, sf: str) -> DataFrame:
-    """REAL PNG decode through the multimodal dataflow: deterministic PNGs
-    are encoded per document (pixels = utf-8 text bytes cycled to
-    w·h·3, dimensions derived from the byte length), then
-    ``multimodal.decode`` with the default stdlib codec parses them back.
-    The oracle recomputes the dimensions from octet lengths — the row only
-    matches if the decoder really parsed the PNG we encoded."""
-    from fhir_data_validation_spark.pipeline import codecs
-
-    docs = (load_table(spark, sf, "documents")
-            .where(F.col("doc_id") < 200)
-            .where(F.col("text").isNotNull())
-            .select(F.col("doc_id").cast("string"), "text"))
-
-    def _to_png(batches):
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                orig = t.encode("utf-8")
-                # dimensions derive from the ORIGINAL byte length (what the
-                # oracle recomputes); empty text pads with one zero byte
-                w, h = 4 + len(orig) % 13, 3 + len(orig) % 7
-                raw = orig or b"\x00"
-                reps = (w * h * 3 // len(raw)) + 1
-                payloads.append(codecs.encode_png(
-                    (raw * reps)[:w * h * 3], w, h, 3))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "modality": "image",
-                                "payload": payloads,
-                                "meta": [{}] * len(pdf)})
-
-    mm = docs.mapInPandas(_to_png, multimodal.MULTIMODAL_SCHEMA)
-    out = multimodal.decode(mm)  # default stdlib decoder
-    return (out.select(F.col("doc_id").cast("long").alias("doc_id"),
-                       F.col("feature")["format"].alias("format"),
-                       F.col("feature")["width"].cast("int").alias("width"),
-                       F.col("feature")["height"].cast("int").alias("height"),
-                       F.col("feature")["channels"].cast("int")
-                        .alias("channels"))
-            .orderBy("doc_id"))
-
-
 def _round4_arith(c):
     """Arithmetic half-up 4-decimal rounding ``floor(x·10⁴ + 0.5)/10⁴``
     — the SINGLE Spark-side statement of the cross-engine rounding
@@ -1005,16 +646,20 @@ def _md5_token_table(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic (doc_id, tokens, n_tok, source) token table derived
     from documents: each word hashes to a 0..49999 token id via the md5_60
     trick (top-60 md5 bits mod 50000), bit-for-bit reproducible in the
-    oracle dialect. The production pipeline would carry real tokenizer
-    output; the packing arithmetic is identical.
+    oracle dialect. A real token table carries tokenizer output; this
+    one only has to be deterministic.
 
-    CONVENTION PIN: the oracle-side twin of ``words()`` is
+    CONVENTION PIN: ``words`` below (lower-cased alphanumeric words,
+    empty strings removed) has the oracle-side twin
     ``list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-    x -> x <> '')`` — inlined (shaped per context) in 14 oracle_sql
-    entries (o1, e1, t7-t10, k1, k2, seq1, ...). Changing the word-split
-    convention means updating ``pipeline/text.words`` AND every one of
-    those sites; ``tools/oracle_check.py --exact`` catches a missed one."""
-    from fhir_data_validation_spark.pipeline.text import words
+    x -> x <> '')`` — inlined (shaped per context) in the o1, e1 and
+    seq1 oracle_sql entries. Changing the word-split convention means
+    updating ``words`` AND those three sites;
+    ``tools/oracle_check.py --exact`` catches a missed one."""
+    def words(col):
+        return F.filter(F.split(F.lower(col), "[^a-z0-9]+"),
+                        lambda w: w != "")
+
     docs = load_table(spark, sf, "documents")
     w = words(F.col("text"))
     toks = F.transform(w, lambda x: F.pmod(
@@ -1022,97 +667,6 @@ def _md5_token_table(spark: SparkSession, sf: str) -> DataFrame:
         F.lit(50000)).cast("int"))
     return docs.select("doc_id", "source", toks.alias("tokens"),
                        F.size(w).alias("n_tok"))
-
-
-def q_k1_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
-    """Concat-and-chunk sequence packing (pipeline/packing.py): doc→
-    sequence piece mapping at seq_len=32, sharded by source, ordered by
-    doc_id. piece_sum (sum of the sliced token values) value-checks the
-    actual token slices, not just the offsets."""
-    from fhir_data_validation_spark.pipeline import packing
-    pieces = packing.pack_sequences(_md5_token_table(spark, sf), seq_len=32,
-                                    shard_col="source", id_col="doc_id")
-    return (pieces.select("shard", "seq",
-                          F.col("doc_id").cast("long").alias("doc_id"),
-                          "doc_offset", "seq_offset", "piece_len",
-                          F.aggregate("piece", F.lit(0).cast("long"),
-                                      lambda a, x: a + x).alias("piece_sum"))
-            .orderBy("shard", "seq", "seq_offset"))
-
-
-def q_sm1_domain_mix(spark: SparkSession, sf: str) -> DataFrame:
-    """Target domain mixing (pipeline/selection.py): largest feasible
-    subset at weights en:de:fr = 2:1:1 over the lang strata (weights are
-    exact binary fractions so driver float arithmetic and the oracle's
-    double SQL agree bit-for-bit), then exact md5_60-ranked quotas."""
-    from fhir_data_validation_spark.pipeline import selection
-    docs = load_table(spark, sf, "documents")
-    out, _ = selection.domain_mix(docs, {"en": 2, "de": 1, "fr": 1},
-                                  by="lang", key_col="doc_id")
-    return out.select("doc_id", "lang").orderBy("lang", "doc_id")
-
-
-def q_sm2_rate_sample(spark: SparkSession, sf: str) -> DataFrame:
-    """Shuffle-free deterministic Bernoulli-by-key sampling: per-stratum
-    rates (en 0.5, zh all, others dropped); the md5_60 unit makes the
-    selection reproducible in the oracle dialect. The plan is a bare
-    filter (pinned by test_selection.py)."""
-    from fhir_data_validation_spark.pipeline import selection
-    docs = load_table(spark, sf, "documents")
-    out = selection.sample_by_rate(docs, {"en": 0.5, "zh": 1.0}, by="lang",
-                                   key_col="doc_id")
-    return out.select("doc_id", "lang").orderBy("doc_id")
-
-
-def q_sm3_split_assign(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic train/val/test split assignment: hash-unit interval
-    carved at exact-binary boundaries (0.75 / 0.875 / 1.0 — weights 6:1:1
-    — so driver-side float accumulation and the oracle's SQL literals are
-    the same doubles). Shuffle-free one-CASE plan, pinned by
-    test_selection.py."""
-    from fhir_data_validation_spark.pipeline import selection
-    docs = load_table(spark, sf, "documents")
-    out = selection.assign_splits(docs, {"train": 6, "val": 1, "test": 1},
-                                  key_col="doc_id")
-    return out.select("doc_id", "split").orderBy("doc_id")
-
-
-def q_x5_corpus_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """Corpus-level keep-first line dedup (pipeline/cleaning.
-    dedup_lines_corpus): every >= 10-char line survives only at its
-    earliest (doc_id, pos); clean_md5 value-checks every rebuilt
-    document against the oracle's window-rank formulation."""
-    from fhir_data_validation_spark.pipeline import cleaning
-    docs = (load_table(spark, sf, "documents")
-            .select("doc_id",
-                    F.regexp_replace("text", " value ", "\n")
-                     .alias("text")))
-    out = cleaning.dedup_lines_corpus(docs, min_len=10)
-    return (out.select("doc_id",
-                       F.col("n_removed_lines").cast("long")
-                        .alias("n_removed_lines"),
-                       F.md5(F.col("text").cast("binary"))
-                        .alias("clean_md5"))
-            .orderBy("doc_id"))
-
-
-def q_x6_token_span_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """Corpus-level duplicate token-SPAN removal (pipeline/dedup.
-    dedup_token_spans): the token-native ExactSubstr dedup — every
-    13-token window survives only at its earliest (doc_id, start); later
-    occurrences are cut out of the token arrays. hash_fn='exact' keys
-    windows by the joined token string itself so the oracle's
-    window-rank formulation matches bit-for-bit; clean_md5 value-checks
-    every rebuilt token sequence."""
-    from fhir_data_validation_spark.pipeline import dedup
-    out = dedup.dedup_token_spans(_md5_token_table(spark, sf), k=13,
-                                  hash_fn="exact")
-    return (out.select("doc_id",
-                       "n_removed_tokens",
-                       F.col("n_tok").cast("long").alias("n_tok_clean"),
-                       F.md5(F.concat_ws(",", "tokens").cast("binary"))
-                        .alias("clean_md5"))
-            .orderBy("doc_id"))
 
 
 def q_v1_vector_check(spark: SparkSession, sf: str) -> DataFrame:
@@ -1157,24 +711,6 @@ def q_v1_vector_check(spark: SparkSession, sf: str) -> DataFrame:
                                 F.round(d["norm"].cast("double"), 4)),
                          F.lit(-1.0)).alias("norm"))
              .orderBy("vec_id"))
-
-
-def q_t8_vocab_oov(spark: SparkSession, sf: str) -> DataFrame:
-    """Vocabulary build + per-doc OOV profile (pipeline/text.vocabulary /
-    oov_profile): min_count=5, max_size=2000 vocab (count desc, token asc
-    tiebreak), then occurrence-counting OOV rates via broadcast join +
-    doc re-aggregation (shuffle O(docs), not O(tokens)).
-
-    Float determinism: oov_rate is exact-int / exact-int stated as one
-    division in both engines — bit-exact (oracle_check --exact green).
-    """
-    from fhir_data_validation_spark.pipeline import text
-    tok = _md5_token_table(spark, sf)
-    vocab = text.vocabulary(tok, min_count=5, max_size=2000)
-    prof = text.oov_profile(tok, vocab)
-    return (prof.select("doc_id", "n_tok", "n_oov",
-                        F.round("oov_rate", 6).alias("oov_rate"))
-            .orderBy("doc_id"))
 
 
 def q_o1_outliers(spark: SparkSession, sf: str) -> DataFrame:
@@ -1321,162 +857,6 @@ def q_e1_expectations(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("metric", "column"))
 
 
-def q_t7_repetition(spark: SparkSession, sf: str) -> DataFrame:
-    """Gopher repetition signals (pipeline/text.repetition_profile):
-    duplicate line/word/n-gram fractions over multi-line-shaped documents
-    — one codegen projection, value-checked to 4 decimals.
-
-    Float determinism: duplicate fractions are exact-int / exact-int
-    single divisions — bit-exact (oracle_check --exact green).
-    """
-    from fhir_data_validation_spark.pipeline.text import repetition_profile
-    docs = (load_table(spark, sf, "documents")
-            .select("doc_id",
-                    F.regexp_replace("text", " value ", "\n")
-                     .alias("text")))
-    return (repetition_profile(docs, ngram_ns=(2, 3))
-            .orderBy("doc_id"))
-
-
-def q_sm4_shuffle_ranks(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic epoch-shuffle permutation rank
-    (pipeline/selection.shuffle_ranks): sharded two-pass global rank —
-    no single-task sort over the corpus — value-checked against the
-    oracle's naive ``row_number() OVER (ORDER BY u, key)``."""
-    from fhir_data_validation_spark.pipeline import selection
-    docs = load_table(spark, sf, "documents")
-    out = selection.shuffle_ranks(docs, key_col="doc_id", salt=0,
-                                  shards=64)
-    return out.select("doc_id", "shuffle_rank").orderBy("doc_id")
-
-
-def q_k2_chunk_overlap(spark: SparkSession, sf: str) -> DataFrame:
-    """Sliding-window chunking (pipeline/packing.chunk_windows): overlapped
-    32-token windows every 24 tokens over the word-tokenized documents —
-    the RAG/context-window chunk layout. Pure codegen projection, zero
-    shuffle; value oracle checks starts, lengths and the chunk text."""
-    from fhir_data_validation_spark.pipeline.packing import chunk_windows
-    docs = load_table(spark, sf, "documents")
-    toks = docs.select("doc_id", text.words(F.col("text")).alias("tokens"))
-    out = chunk_windows(toks, window=32, stride=24)
-    return (out.select("doc_id", "chunk", "chunk_start", "chunk_len",
-                       F.array_join("chunk_tokens", " ").alias("chunk_text"))
-            .orderBy("doc_id", "chunk"))
-
-
-def q_sm5_quantile_select(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-stratum quantile gating (pipeline/selection.select_above_quantile):
-    keep documents at or above their language's 0.8 length quantile —
-    exact R-7 interpolated percentile (DuckDB quantile_cont twin), fences
-    broadcast back onto the unshuffled scan.
-
-    Float determinism: the R-7 fence is lo + frac·(hi−lo) over exact
-    integer order statistics, stated identically in DuckDB
-    quantile_cont — bit-exact (oracle_check --exact green).
-    """
-    from fhir_data_validation_spark.pipeline.selection import \
-        select_above_quantile
-    docs = (load_table(spark, sf, "documents")
-            .select("doc_id", "lang",
-                    text.token_count_ws(F.col("text")).alias("n_tok")))
-    out = select_above_quantile(docs, "n_tok", "lang", 0.8,
-                                keep_threshold=True)
-    return (out.select("doc_id", "lang", "n_tok",
-                       F.round("threshold", 4).alias("threshold"))
-            .orderBy("doc_id"))
-
-
-def q_ir1_dsir_weights(spark: SparkSession, sf: str) -> DataFrame:
-    """DSIR importance weights (arXiv:2302.03169,
-    ``pipeline/selection.dsir_weights``): log p_target − log p_raw per
-    doc under Laplace-smoothed hashed word-unigram+bigram models —
-    target = the English documents, raw = the whole corpus. The md5_60
-    bucket hash makes the entire chain (grams → buckets → models →
-    per-doc score) exactly reproducible in the DuckDB oracle.
-
-    Float determinism: log-ratios of exact integer counts through the
-    identical ln()/division chain both sides — bit-exact
-    (oracle_check --exact green).
-    """
-    from fhir_data_validation_spark.pipeline.selection import dsir_weights
-    docs = load_table(spark, sf, "documents")
-    w = dsir_weights(docs, docs.where("lang = 'en'"), n_buckets=1000)
-    return (w.select("doc_id", F.round("log_weight", 4).alias("log_weight"))
-            .orderBy("doc_id"))
-
-
-def q_sm6_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic weighted sampling without replacement
-    (pipeline/selection.sample_weighted, Efraimidis–Spirakis A-Res):
-    15 docs per language with inclusion probability ∝ n_chars — the
-    quality-weighted corpus-selection primitive. Oracle re-derives the
-    u^(1/w) keys from the same md5_60 hash."""
-    from fhir_data_validation_spark.pipeline.selection import \
-        sample_weighted
-    docs = load_table(spark, sf, "documents").select("doc_id", "lang",
-                                                     "n_chars")
-    return (sample_weighted(docs, 15, "n_chars", by="lang")
-            .orderBy("doc_id"))
-
-
-def q_t10_char_entropy(spark: SparkSession, sf: str) -> DataFrame:
-    """Perplexity-proxy quality scoring (pipeline/text.char_cross_entropy):
-    per-doc bits/char under the corpus character unigram model
-    (Laplace-0.5) — the cheap CCNet-style LM-quality stand-in. The model
-    is ≤ |alphabet| rows embedded as a literal map, so scoring is a
-    shuffle-free codegen projection.
-
-    Float determinism: bits/char sums the literal-map model in array
-    order on both sides — one fixed chain, bit-exact (oracle_check
-    --exact green).
-    """
-    docs = load_table(spark, sf, "documents")
-    return text.char_cross_entropy(docs).orderBy("doc_id")
-
-
-def q_sm8_interleave(spark: SparkSession, sf: str) -> DataFrame:
-    """Stratum-interleaved dataloader order
-    (pipeline/selection.interleave_ranks): consecutive ranks cycle
-    through the languages — balanced batches without a global sort;
-    per-(stratum, shard) windows so no stratum serializes into one task.
-    Oracle = naive per-stratum window rank × n_strata + stratum index."""
-    from fhir_data_validation_spark.pipeline.selection import \
-        interleave_ranks
-    docs = load_table(spark, sf, "documents").select("doc_id", "lang")
-    return (interleave_ranks(docs, by="lang", shards=64)
-            .orderBy("doc_id"))
-
-
-def q_sm7_curriculum(spark: SparkSession, sf: str) -> DataFrame:
-    """Curriculum-stage assignment (pipeline/selection.curriculum_buckets):
-    4 length-quartile stages over the documents — exact R-7 fences then a
-    shuffle-free CASE projection; integer metric so fence comparisons
-    cannot sit on a float boundary."""
-    from fhir_data_validation_spark.pipeline.selection import \
-        curriculum_buckets
-    docs = (load_table(spark, sf, "documents")
-            .select("doc_id",
-                    text.token_count_ws(F.col("text")).alias("n_tok")))
-    return curriculum_buckets(docs, "n_tok", 4).orderBy("doc_id")
-
-
-def q_t9_tfidf_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-3 TF-IDF terms per document (pipeline/text.tfidf_topk):
-    smoothed idf, deterministic (score desc, term asc) ranking; the
-    corpus-size scalar is an aggregated 1-row cross join, never a driver
-    action. Scores value-checked to 4 decimals.
-
-    Float determinism: tf·idf = int · ln((1+N)/(1+df))+1 — exact integer
-    inputs through one identical chain both sides — bit-exact
-    (oracle_check --exact green).
-    """
-    out = text.tfidf_topk(load_table(spark, sf, "documents"), k=3)
-    return (out.select("doc_id", "rank", "term", "tf",
-                       F.col("df").alias("doc_freq"),
-                       F.round("score", 4).alias("score"))
-            .orderBy("doc_id", "rank"))
-
-
 def q_c6_rollup(spark: SparkSession, sf: str) -> DataFrame:
     """Hierarchical ROLLUP report (stats.rollup_counts): doc counts and
     total chars per (lang, source), per lang, and grand total — one
@@ -1498,21 +878,6 @@ def q_c8_cube(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     out = stats.cube_counts(docs, ["lang", "source"], value_col="n_chars")
     return out.orderBy("level", "lang", "source")
-
-
-def q_cl1_winsorize(spark: SparkSession, sf: str) -> DataFrame:
-    """Quantile clipping (selection.winsorize): l_extendedprice clamped
-    into each return-flag stratum's [p1, p99] fences — exact R-7 fences
-    broadcast onto the unshuffled scan, clamp as a projection. The oracle
-    restates fences with quantile_cont and the identical
-    greatest/least clamp; unrounded doubles compare bit-exact."""
-    from fhir_data_validation_spark.pipeline.selection import winsorize
-    df = load_table(spark, sf, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_extendedprice", "l_returnflag")
-    out = winsorize(df, "l_extendedprice", by="l_returnflag",
-                    p_lo=0.01, p_hi=0.99, out_col="clipped")
-    return (out.select("l_orderkey", "l_linenumber", "clipped")
-            .orderBy("l_orderkey", "l_linenumber"))
 
 
 def q_sk1_skew_report(spark: SparkSession, sf: str) -> DataFrame:
@@ -1576,296 +941,6 @@ def q_x7_table_diff(spark: SparkSession, sf: str) -> DataFrame:
     out = stats.diff_tables(base, b.unionByName(added), ["doc_id"],
                             ["text", "n_chars"])
     return out.orderBy("doc_id")
-
-
-def q_w1_sessions(spark: SparkSession, sf: str) -> DataFrame:
-    """Event sessionization (pipeline/events.session_stats): 30-minute
-    inactivity gap per user over the events table, one stats row per
-    session — the batch twin of the streaming monitor's session windows.
-    Gap logic is exact integer microsecond arithmetic, mirrored by the
-    oracle's epoch_us comparison."""
-    from fhir_data_validation_spark.pipeline import events
-    df = load_table(spark, sf, "events")
-    out = events.session_stats(df, gap_minutes=30, value_col="value",
-                               order_cols=("event_id",))
-    # duration_sec is derived (end_us - start_us)/1e6 — exact micros are
-    # already value-checked, and rounding a 5-decimal half-way value
-    # splits between JVM HALF_UP and C round-on-double
-    return (out.select("user_id", "session_seq", "n_events", "start_us",
-                       "end_us", "total_value")
-            .orderBy("user_id", "session_seq"))
-
-
-def q_w2_tumbling(spark: SparkSession, sf: str) -> DataFrame:
-    """Tumbling event-time windows (pipeline/events.tumbling_agg): daily
-    buckets × event_type via Spark's native window() bucketing; the
-    oracle states the equivalent date_trunc grouping (whole-day windows
-    align to midnight UTC on both sides)."""
-    from fhir_data_validation_spark.pipeline import events
-    df = load_table(spark, sf, "events")
-    out = events.tumbling_agg(df, "1 day", keys=("event_type",),
-                              value_col="value")
-    return out.orderBy("window_start_us", "event_type")
-
-
-def q_w3_hopping(spark: SparkSession, sf: str) -> DataFrame:
-    """Hopping event-time windows (pipeline/events.tumbling_agg with
-    slide): 1-day windows every 12 hours — each event lands in two
-    overlapping buckets; the oracle enumerates the slide-aligned starts
-    covering each event with generate_series."""
-    from fhir_data_validation_spark.pipeline import events
-    df = load_table(spark, sf, "events")
-    out = events.tumbling_agg(df, "1 day", keys=("event_type",),
-                              value_col="value", slide="12 hours")
-    return out.orderBy("window_start_us", "event_type")
-
-
-def q_w4_asof_join(spark: SparkSession, sf: str) -> DataFrame:
-    """As-of join (pipeline/events.asof_join): every click event picks up
-    the latest prior-or-equal purchase of the same user — the distributed
-    merge-asof (union-tag + one shuffle + running last(ignorenulls)
-    window, no join operator). The oracle is DuckDB's native LEFT ASOF
-    JOIN; event_id tiebreak makes duplicate-ts winners deterministic on
-    both sides (the events table has unique (user_id, ts), so the
-    tiebreak is inert here but stated for parity)."""
-    from fhir_data_validation_spark.pipeline import events
-    ev = load_table(spark, sf, "events")
-    clicks = ev.where(F.col("event_type") == "click")
-    purchases = ev.where(F.col("event_type") == "purchase")
-    out = events.asof_join(clicks, purchases, by=("user_id",),
-                           right_cols=("event_id", "value"),
-                           right_tie_cols=("event_id",))
-    # unmatched lefts keep NULL payloads (LEFT ASOF); the contract
-    # output coalesces them to -1 sentinels because the value-hash
-    # compare round-trips through pandas, where NULL bigints decay to
-    # NaN floats — the NULL lane itself is unit-tested
-    return (out.select("event_id", "user_id",
-                       F.unix_micros(F.col("ts").cast("timestamp"))
-                       .alias("ts_us"),
-                       F.coalesce(F.col("event_id_r"), F.lit(-1))
-                       .alias("purchase_id"),
-                       F.coalesce(F.unix_micros(F.col("ts_r")
-                                                .cast("timestamp")),
-                                  F.lit(-1)).alias("purchase_ts_us"),
-                       F.round(F.coalesce(F.col("value_r"), F.lit(-1.0)),
-                               4).alias("purchase_value"))
-            .orderBy("event_id"))
-
-
-def q_w5_range_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Range (interval) join (pipeline/events.range_join): each event
-    matched to the ±10-minute-padded session windows of its own user
-    that contain it — the binned range join (intervals exploded into
-    1-hour bins, equi-join on (user, bin), exact containment filter)
-    instead of Catalyst's BroadcastNestedLoop for inequality joins. The
-    padding makes adjacent sessions overlap, so this is genuinely
-    many-to-many. Oracle: plain SQL BETWEEN join over the same session
-    CTE (DuckDB IEJoin)."""
-    from fhir_data_validation_spark.pipeline import events
-    ev = load_table(spark, sf, "events")
-    ss = events.session_stats(ev, 30, order_cols=("event_id",))
-    pad = 600_000_000  # 10 min in us
-    ivl = ss.select("user_id", "session_seq",
-                    (F.col("start_us") - F.lit(pad)).alias("lo"),
-                    (F.col("end_us") + F.lit(pad)).alias("hi"))
-    pts = ev.select("event_id", "user_id",
-                    F.unix_micros(F.col("ts").cast("timestamp"))
-                    .alias("ts_us"))
-    out = events.range_join(pts, ivl, "ts_us", "lo", "hi",
-                            by=("user_id",), bucket_width=3_600_000_000,
-                            interval_cols=("session_seq",))
-    return (out.select("event_id", "user_id", "ts_us", "session_seq")
-            .orderBy("event_id", "session_seq"))
-
-
-def q_w6_rollup_cascade(spark: SparkSession, sf: str) -> DataFrame:
-    """Hypertable-style multi-resolution rollup
-    (pipeline/events.rollup_cascade): hour → day → week × event_type
-    continuous-aggregate levels in ONE Expand + one map-side-combined
-    hash aggregate (plan pinned in tests — no per-level re-scan, no
-    union of jobs). Totals sum DECIMAL(18,6) so every level is
-    bit-identical to a direct aggregation; the oracle states each level
-    independently with integer // bucket floors."""
-    from fhir_data_validation_spark.pipeline import events
-    ev = load_table(spark, sf, "events")
-    out = events.rollup_cascade(ev, levels=("1 hour", "1 day", "1 week"),
-                                keys=("event_type",), value_col="value")
-    return out.orderBy("level", "window_start_us", "event_type")
-
-
-def q_w7_retention(spark: SparkSession, sf: str) -> DataFrame:
-    """Retention cohort matrix (pipeline/events.retention_cohorts):
-    users bucketed by first-activity day, distinct-user counts per
-    return-day offset. One aggregate reduces events to distinct (user,
-    day) activity; the matrix reduces that tiny frame — the events
-    table never self-joins."""
-    from fhir_data_validation_spark.pipeline import events
-    ev = load_table(spark, sf, "events")
-    out = events.retention_cohorts(ev, bucket="1 day")
-    return out.orderBy("cohort_start_us", "offset")
-
-
-def q_w8_funnel(spark: SparkSession, sf: str) -> DataFrame:
-    """Ordered funnel (pipeline/events.funnel): signup → click →
-    purchase per user, greedy chained-min step times, one sorted fold
-    per user (single shuffle; no per-step self-join). Oracle states the
-    chained min-after CTEs. NULL step times coalesce to -1 for the
-    pandas-roundtrip value hash (NULL lane unit-tested)."""
-    from fhir_data_validation_spark.pipeline import events
-    ev = load_table(spark, sf, "events")
-    out = events.funnel(ev, steps=("signup", "click", "purchase"))
-    return (out.select("user_id", "steps_completed",
-                       *[F.coalesce(F.col(f"t{i}_us"), F.lit(-1))
-                         .alias(f"t{i}_us") for i in (1, 2, 3)])
-            .orderBy("user_id"))
-
-
-def q_x1_contamination(spark: SparkSession, sf: str) -> DataFrame:
-    """Benchmark contamination (pipeline/contamination.py): 13-gram
-    overlap of the seeded corpus against a 'benchmark' of documents
-    doc_id < 5 — the seeded near/exact copies (and the benchmark docs
-    themselves) are the contaminated set. md5_60 shingle hashes so the
-    oracle reproduces the hash pipeline bit-for-bit; the xxhash64
-    production default is unit-tested equal."""
-    from fhir_data_validation_spark.pipeline import contamination
-    docs = _seeded_docs(spark, sf)
-    bench = load_table(spark, sf, "documents").where(F.col("doc_id") < 5)
-    out = contamination.benchmark_contamination(docs, bench, n=13,
-                                                hash_fn="md5_60")
-    return (out.select(F.col("doc_id").cast("long").alias("doc_id"),
-                       "n_shingles", "n_overlap", "ratio")
-            .orderBy("doc_id"))
-
-
-def q_x2_pii_redaction(spark: SparkSession, sf: str) -> DataFrame:
-    """PII redaction (pipeline/redaction.py): documents with
-    deterministically injected emails/IPs/phones/SSNs, redacted in one
-    codegen projection. Counts use the sequential (redact-as-you-count)
-    semantics; red_md5 value-checks the full redacted text against the
-    oracle's RE2 replacements."""
-    from fhir_data_validation_spark.pipeline import redaction
-    docs = load_table(spark, sf, "documents")
-    injected = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 5 == 0,
-                   F.concat(F.lit(" contact user"),
-                            F.col("doc_id").cast("string"),
-                            F.lit("@example.com or 10.0."),
-                            (F.col("doc_id") % 256).cast("string"),
-                            F.lit(".7")))
-             .when(F.col("doc_id") % 7 == 0,
-                   F.concat(F.lit(" call +65912345"),
-                            (F.col("doc_id") % 90 + 10).cast("string"),
-                            F.lit(" ssn 123-45-6789")))
-             .otherwise(F.lit(""))).alias("text"))
-    out = redaction.redact_docs(injected)
-    return (out.select(
-                "doc_id",
-                *(F.col(f"n_pii_{k}").cast("long").alias(f"n_pii_{k}")
-                  for k in redaction.PII_PATTERNS),
-                F.md5(F.col("text").cast("binary")).alias("red_md5"))
-            .orderBy("doc_id"))
-
-
-def _lined_docs(spark: SparkSession, sf: str) -> DataFrame:
-    """Documents reshaped into multi-line text (one word per line) so the
-    line operators have real repetition to chew on; the oracle states the
-    identical replace."""
-    return (load_table(spark, sf, "documents")
-            .select("doc_id",
-                    F.regexp_replace("text", " ", "\n").alias("text")))
-
-
-def q_x3_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """Within-document line dedup (pipeline/cleaning.py): keep-first
-    distinct lines as a pure projection; clean_md5 value-checks the whole
-    reconstructed text, n_lines/n_kept the counts."""
-    from fhir_data_validation_spark.pipeline import cleaning
-    docs = (_lined_docs(spark, sf)
-            .withColumn("n_lines",
-                        F.size(cleaning.doc_lines(F.col("text")))
-                         .cast("long")))
-    out = cleaning.dedup_lines_docs(docs)
-    return (out.select(
-                "doc_id", "n_lines",
-                F.size(cleaning.doc_lines(F.col("text"))).cast("long")
-                 .alias("n_kept"),
-                F.md5(F.col("text").cast("binary")).alias("clean_md5"))
-            .orderBy("doc_id"))
-
-
-# markup wrapper for x9 — brace-free (the oracle dict is an f-string) and
-# single-quote-free (it embeds in a SQL literal); entities exercise the
-# decode order (&amp; last) and &amp;lt; must survive as &lt;
-_HTML_PRE = ('<html><head><style>p.x:1;</style>'
-             '<script>var a = "<b>1</b>";</script ></head>'
-             '<body><!-- nav\nbar --><h1>T &amp; U</h1><p>')
-_HTML_POST = '</p>&nbsp;1 &lt; 2 &amp;lt;raw<br/></body></html>'
-
-
-def q_x9_strip_markup(spark: SparkSession, sf: str) -> DataFrame:
-    """C4-style markup stripping (pipeline/cleaning.strip_markup): every
-    document wrapped in a deterministic HTML shell (script/style blocks,
-    a comment, tags, the six common entities), then stripped back to prose
-    in one codegen projection. The oracle wraps identically and applies the
-    IDENTICAL Java∩RE2 expression chain in DuckDB; clean_md5 value-checks
-    the full recovered text, n_clean its length."""
-    docs = load_table(spark, sf, "documents")
-    html = F.concat(F.lit(_HTML_PRE), F.col("text"), F.lit(_HTML_POST))
-    return (docs.select("doc_id",
-                        cleaning.strip_markup(html).alias("_c"))
-            .select("doc_id",
-                    F.md5(F.col("_c").cast("binary")).alias("clean_md5"),
-                    F.length("_c").cast("long").alias("n_clean"))
-            .orderBy("doc_id"))
-
-
-# x10 suffix: decomposed e-acute (NFC composes it) + fullwidth 3 (NFC
-# keeps it — folding that is NFKC's job)
-_UNI_SUFFIX = " cafe\u0301 \uff13"
-
-
-def q_x10_normalize(spark: SparkSession, sf: str) -> DataFrame:
-    """Unicode normalization (pipeline/text.normalize_text — the one
-    Arrow-batched pandas-UDF text op; Spark has no native NFC): every doc
-    gets a decomposed-accent + fullwidth-digit suffix, then NFC +
-    lowercase. Oracle: DuckDB lower(nfc_normalize(...)) over the
-    identically suffixed text; norm_md5 value-checks the full normalized
-    string."""
-    docs = load_table(spark, sf, "documents")
-    n = text.normalize_text(
-        F.concat(F.col("text"), F.lit(_UNI_SUFFIX)), form="NFC",
-        lowercase=True)
-    return (docs.select("doc_id", n.alias("_n"))
-            .select("doc_id",
-                    F.md5(F.col("_n").cast("binary")).alias("norm_md5"),
-                    F.length("_n").cast("long").alias("n_norm"))
-            .orderBy("doc_id"))
-
-
-def q_x4_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
-    """Cross-document boilerplate removal (pipeline/cleaning.py): a footer
-    line injected into every third document (plus any naturally recurring
-    line of >= 10 chars in >= 5 docs) is flagged by the corpus-frequency
-    pass and stripped; per-doc clean_md5 value-checks the rebuilt text."""
-    from fhir_data_validation_spark.pipeline import cleaning
-    docs = (load_table(spark, sf, "documents")
-            .select("doc_id",
-                    F.concat(
-                        F.regexp_replace("text", " value ", "\n"),
-                        F.when(F.col("doc_id") % 3 == 0,
-                               F.lit("\ncopyright footer boilerplate "
-                                     "line"))
-                         .otherwise(F.lit(""))).alias("text")))
-    out = cleaning.remove_boilerplate(docs, min_docs=5, min_len=10)
-    return (out.select("doc_id",
-                       F.col("n_removed_lines").cast("long")
-                        .alias("n_removed_lines"),
-                       F.md5(F.col("text").cast("binary"))
-                        .alias("clean_md5"))
-            .orderBy("doc_id"))
 
 
 def q_j2_reference_type(spark: SparkSession, sf: str) -> DataFrame:
@@ -2754,13 +1829,13 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # Ordering contract: the driver checks a prefix window of this
-        # registry (~50 wide). After rounds 3+4, 97 of the 124 ids have
-        # a driver-green CORRECTNESS row; the 27 that never got one are
-        # placed FIRST — the two repaired float-hash ids (c10/o1, now
-        # derived from exact integer sums on both engines), then the 25
-        # ids that sat just past round 4's window. The remaining window
-        # slots re-confirm the oldest (round-3) greens; everything below
-        # slot 50 has a green row in CORRECTNESS_r03/r04.json.
+        # registry (~50 wide). The 21 ids without a green CORRECTNESS
+        # row after rounds 3+4 are placed FIRST — the two
+        # repaired float-hash ids (c10/o1, now derived from exact integer
+        # sums on both engines), then the 19 ids that sat just past round
+        # 4's window. The remaining window slots re-confirm the oldest
+        # (round-3) greens; every id after the first 21 has a green row
+        # in CORRECTNESS_r03/r04.json.
         "c10_incremental_profile": q_c10_incremental_profile,
         "o1_outliers": q_o1_outliers,
         "a3_where_counting": q_a3_where_counting,
@@ -2768,9 +1843,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mono1_monotonic": q_mono1_monotonic,
         "mono2_sequence_gap": q_mono2_sequence_gap,
         "fd1_functional_dependency": q_fd1_functional_dependency,
-        "t8_vocab_oov": q_t8_vocab_oov,
-        "t9_tfidf_topk": q_t9_tfidf_topk,
-        "t10_char_entropy": q_t10_char_entropy,
         "v1_vector_check": q_v1_vector_check,
         "seq1_sequence_shape": q_seq1_sequence_shape,
         "jp1_jsonpath": q_jp1_jsonpath,
@@ -2780,9 +1852,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "c3b_unique_composite": q_c3b_unique_composite,
         "sp1_quarantine_split": q_sp1_quarantine_split,
         "rg1_regression_gate": q_rg1_regression_gate,
-        "k1_pack_sequences": q_k1_pack_sequences,
-        "k2_chunk_overlap": q_k2_chunk_overlap,
-        "m2_png_decode": q_m2_png_decode,
         "sk1_skew_report": q_sk1_skew_report,
         "c6_rollup": q_c6_rollup,
         "c7_pivot": q_c7_pivot,
@@ -2832,61 +1901,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ext1_extension_grammar": q_ext1_extension_grammar,
         "gr1_code_grammar": q_gr1_code_grammar,
         "en1_enum_binding": q_en1_enum_binding,
-        "w1_sessions": q_w1_sessions,
-        "w2_tumbling": q_w2_tumbling,
-        "w3_hopping": q_w3_hopping,
-        "w4_asof_join": q_w4_asof_join,
-        "w5_range_join": q_w5_range_join,
-        "w6_rollup_cascade": q_w6_rollup_cascade,
-        "w7_retention": q_w7_retention,
-        "w8_funnel": q_w8_funnel,
-        "sm1_domain_mix": q_sm1_domain_mix,
-        "sm2_rate_sample": q_sm2_rate_sample,
-        "sm3_split_assign": q_sm3_split_assign,
-        "sm4_shuffle_ranks": q_sm4_shuffle_ranks,
-        "sm5_quantile_select": q_sm5_quantile_select,
-        "sm6_weighted_sample": q_sm6_weighted_sample,
-        "sm7_curriculum": q_sm7_curriculum,
-        "sm8_interleave": q_sm8_interleave,
-        "ir1_dsir_weights": q_ir1_dsir_weights,
-        "cl1_winsorize": q_cl1_winsorize,
-        "x1_contamination": q_x1_contamination,
-        "x2_pii_redaction": q_x2_pii_redaction,
-        "x3_line_dedup": q_x3_line_dedup,
-        "x4_boilerplate": q_x4_boilerplate,
-        "x5_corpus_line_dedup": q_x5_corpus_line_dedup,
-        "x6_token_span_dedup": q_x6_token_span_dedup,
         "x7_table_diff": q_x7_table_diff,
-        "x9_strip_markup": q_x9_strip_markup,
-        "x10_normalize": q_x10_normalize,
         "e1_expectations": q_e1_expectations,
         "j2_reference_type": q_j2_reference_type,
         "r6_membership": q_r6_membership,
         "r6b_codesystem_pair": q_r6b_codesystem_pair,
         "j4_codemaster": q_j4_codemaster,
         "q1_question_rules": q_q1_question_rules,
-        "t1_token_count": q_t1_token_count,
-        "t2_quality": q_t2_quality,
-        "t3_lang_id": q_t3_lang_id,
-        "t4_fingerprint": q_t4_fingerprint,
-        "t5_quality_filter": q_t5_quality_filter,
-        "t6_c4_filter": q_t6_c4_filter,
-        "t7_repetition": q_t7_repetition,
-        "d1_exact_dedup": q_d1_exact_dedup,
-        "d2_jaccard_pairs": q_d2_jaccard_pairs,
-        "x8_similarity_join": q_x8_similarity_join,
-        "d3_minhash_lsh": q_d3_minhash_lsh,
-        "d4_simhash": q_d4_simhash,
-        "d6_duplicate_clusters": q_d6_duplicate_clusters,
-        "d6b_keep_best_clusters": q_d6b_keep_best_clusters,
-        "d7_incremental_dedup": q_d7_incremental_dedup,
-        "d8_incremental_simhash": q_d8_incremental_simhash,
-        "d5_embedding_neardup": q_d5_embedding_neardup,
-        "s1_cosine_topk": q_s1_cosine_topk,
-        "s2_ivf_topk": q_s2_ivf_topk,
-        "s3_ivfpq_topk": q_s3_ivfpq_topk,
-        "sd1_semantic_dedup": q_sd1_semantic_dedup,
-        "m1_multimodal_meta": q_m1_multimodal_meta,
     }
 
 
@@ -3227,313 +2248,6 @@ def oracle_sql() -> dict[str, str]:
                 AND p_brand NOT IN ('Brand#11', 'Brand#12', 'Brand#13',
                                     'Brand#21', 'Brand#22', 'Brand#23'))
             ORDER BY doc_id, rule_id, error_code, source""",
-        "t1_token_count": """
-            -- round-5 batch 12: full-whitespace split with boundary
-            -- empties discarded (Spark trim strips only spaces, so the
-            -- old chain counted phantom tokens on \\n-terminated docs);
-            -- the BPE punct class excludes \\r like the engine's
-            SELECT doc_id,
-                   len(list_filter(regexp_split_to_array(text,
-                         '[ \t\n\x0B\f\r]+'),
-                                   x -> x <> '')) AS n_ws,
-                   len(regexp_extract_all(text,
-                       '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \t\n\r]')) AS n_bpe
-            FROM documents ORDER BY doc_id""",
-        "t2_quality": f"""
-            WITH c AS (
-              SELECT doc_id,
-                CAST(length(text) AS DOUBLE) AS n,
-                CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-                     AS DOUBLE) AS alpha,
-                CAST(len(list_filter(regexp_split_to_array(lower(text),
-                     '[^a-z0-9]+'), x -> x <> '')) AS DOUBLE) AS n_words,
-                CAST(len(list_filter(list_filter(regexp_split_to_array(
-                     lower(text), '[^a-z0-9]+'), x -> x <> ''),
-                     x -> x IN ({_sql_list(text.EN_STOPWORDS)})))
-                     AS DOUBLE) AS stop_hits
-              FROM documents)
-            SELECT doc_id,
-              round(0.5 * (CASE WHEN n > 0 THEN alpha / n ELSE 0.0 END)
-                  + 0.25 * (CASE WHEN n_words > 0 AND alpha / n_words >= 2.0
-                                  AND alpha / n_words <= 12.0
-                            THEN 1.0 ELSE 0.0 END)
-                  + 0.25 * (CASE WHEN n_words > 0
-                                  AND stop_hits / n_words >= 0.01
-                                  AND stop_hits / n_words <= 0.6
-                            THEN 1.0 ELSE 0.0 END), 4) AS quality
-            FROM c ORDER BY doc_id""",
-        "t3_lang_id": f"""
-            WITH h AS (
-              SELECT doc_id, lang AS lang_actual,
-                {_lang_hits_sql()}
-              FROM (SELECT doc_id, lang,
-                      list_filter(regexp_split_to_array(lower(text),
-                        '[^a-z0-9]+'), x -> x <> '') AS ws
-                    FROM documents))
-            SELECT doc_id, lang_actual,
-              CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und'
-                   WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-                   WHEN h_de = greatest(h_en, h_de, h_fr, h_es) THEN 'de'
-                   WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
-                   ELSE 'es' END AS lang_pred
-            FROM h ORDER BY doc_id""",
-        "t4_fingerprint": """
-            SELECT doc_id,
-                   md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ',
-                       'g'))) AS fingerprint
-            FROM documents ORDER BY doc_id""",
-        "t5_quality_filter": """
-            WITH w AS (
-              SELECT doc_id, lang,
-                len(list_filter(regexp_split_to_array(lower(text),
-                    '[^a-z0-9]+'), x -> x <> '')) AS n,
-                len(list_distinct(list_filter(regexp_split_to_array(
-                    lower(text), '[^a-z0-9]+'), x -> x <> ''))) AS n_dist,
-                length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha,
-                length(text) AS n_chars,
-                length(regexp_replace(text, '[a-zA-Z0-9 \t\n\r]', '', 'g'))
-                  AS symbols
-              FROM documents)
-            SELECT * FROM (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     'QF-WORDCOUNT' AS rule_id,
-                     'QUALITY_WORD_COUNT' AS error_code, lang AS source
-              FROM w WHERE NOT coalesce(n >= 5 AND n <= 100000, FALSE)
-              UNION ALL
-              SELECT CAST(doc_id AS VARCHAR), 'QF-WORDLEN',
-                     'QUALITY_MEAN_WORD_LENGTH', lang
-              FROM w WHERE NOT coalesce(n = 0 OR
-                (CAST(alpha AS DOUBLE) / n >= 2.0
-                 AND CAST(alpha AS DOUBLE) / n <= 12.0), FALSE)
-              UNION ALL
-              SELECT CAST(doc_id AS VARCHAR), 'QF-DUPWORDS',
-                     'QUALITY_DUPLICATE_WORDS', lang
-              FROM w WHERE NOT coalesce(n = 0 OR
-                1.0 - CAST(n_dist AS DOUBLE) / n <= 0.5, FALSE)
-              UNION ALL
-              SELECT CAST(doc_id AS VARCHAR), 'QF-SYMBOLS',
-                     'QUALITY_SYMBOL_RATIO', lang
-              FROM w WHERE NOT coalesce(n_chars = 0 OR
-                CAST(symbols AS DOUBLE) / n_chars <= 0.3, FALSE))
-            ORDER BY doc_id, rule_id, error_code, source""",
-        "t6_c4_filter": """
-            SELECT * FROM (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     'QF-C4-SENTENCES' AS rule_id,
-                     'QUALITY_SENTENCE_COUNT' AS error_code, lang AS source
-              FROM documents
-              WHERE NOT coalesce(len(list_filter(
-                regexp_split_to_array(text, '[.!?]'),
-                s -> trim(s) <> '')) >= 3, FALSE)
-              UNION ALL
-              SELECT CAST(doc_id AS VARCHAR), 'QF-C4-LOREM',
-                     'QUALITY_PLACEHOLDER_TEXT', lang
-              FROM documents
-              WHERE NOT coalesce(NOT contains(lower(text), 'lorem ipsum'),
-                                 FALSE)
-              UNION ALL
-              SELECT CAST(doc_id AS VARCHAR), 'QF-C4-BRACE',
-                     'QUALITY_CODE_MARKUP', lang
-              FROM documents
-              WHERE NOT coalesce(NOT contains(text, '{'), FALSE)
-              UNION ALL
-              SELECT CAST(doc_id AS VARCHAR), 'QF-C4-JS',
-                     'QUALITY_JS_BOILERPLATE', lang
-              FROM documents
-              WHERE NOT coalesce(NOT contains(lower(text), 'javascript'),
-                                 FALSE))
-            ORDER BY doc_id, rule_id, error_code, source""",
-        "d1_exact_dedup": f"""
-            WITH seeded AS ({_SEEDED_DOCS_SQL}),
-            fp AS (
-              SELECT doc_id,
-                     md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ',
-                         'g'))) AS fingerprint
-              FROM seeded)
-            SELECT fingerprint, count(*) AS n_docs, min(doc_id) AS keep
-            FROM fp GROUP BY fingerprint HAVING count(*) > 1
-            ORDER BY keep""",
-        "d7_incremental_dedup": f"""
-            WITH seeded AS ({_SEEDED_DOCS_SQL}),
-            fp AS (
-              SELECT doc_id,
-                     md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ',
-                         'g'))) AS fingerprint
-              FROM seeded),
-            idx AS (
-              SELECT fingerprint, min(doc_id) AS ikeep
-              FROM fp WHERE doc_id < 3 GROUP BY fingerprint),
-            newb AS (SELECT * FROM fp WHERE doc_id >= 3),
-            bmin AS (
-              SELECT fingerprint, min(doc_id) AS bkeep
-              FROM newb GROUP BY fingerprint)
-            SELECT n.doc_id, n.fingerprint,
-                   coalesce(i.ikeep, b.bkeep) AS keep,
-                   n.doc_id <> coalesce(i.ikeep, b.bkeep) AS dup
-            FROM newb n
-            JOIN bmin b ON n.fingerprint = b.fingerprint
-            LEFT JOIN idx i ON n.fingerprint = i.fingerprint
-            ORDER BY n.doc_id""",
-        "d2_jaccard_pairs": f"""
-            {_JACCARD_SQL}
-            WHERE jaccard >= 0.6 ORDER BY id_a, id_b""",
-        # x8: the same exact-Jaccard pair set restricted to cross-parity
-        # (the two 'corpora' of the similarity join)
-        "x8_similarity_join": f"""
-            {_JACCARD_SQL}
-            WHERE jaccard >= 0.6 AND (id_a % 2) <> (id_b % 2)
-            ORDER BY id_a, id_b""",
-        "d4_simhash": _simhash_sql(),
-        "d8_incremental_simhash": _simhash_incremental_sql(),
-        "d6_duplicate_clusters": f"""
-            WITH RECURSIVE p AS (
-              {_JACCARD_SQL}
-              WHERE jaccard >= 0.6),
-            e AS (
-              SELECT id_a AS s, id_b AS d FROM p
-              UNION SELECT id_b, id_a FROM p),
-            walk(id, reach) AS (
-              SELECT s, d FROM e
-              UNION
-              SELECT w.id, e.d FROM walk w JOIN e ON w.reach = e.s)
-            SELECT id AS doc_id,
-                   least(id, min(reach)) AS cluster,
-                   id = least(id, min(reach)) AS keep
-            FROM walk GROUP BY id ORDER BY doc_id""",
-        # d6b: same components, keep-best election (quality = doc_id % 7,
-        # ties -> min id)
-        "d6b_keep_best_clusters": f"""
-            WITH RECURSIVE p AS (
-              {_JACCARD_SQL}
-              WHERE jaccard >= 0.6),
-            e AS (
-              SELECT id_a AS s, id_b AS d FROM p
-              UNION SELECT id_b, id_a FROM p),
-            walk(id, reach) AS (
-              SELECT s, d FROM e
-              UNION
-              SELECT w.id, e.d FROM walk w JOIN e ON w.reach = e.s),
-            lab AS (
-              SELECT id AS doc_id, least(id, min(reach)) AS cluster
-              FROM walk GROUP BY id),
-            q AS (
-              SELECT doc_id, CAST(doc_id % 7 AS DOUBLE) AS qv FROM lab),
-            best AS (
-              SELECT l.cluster, max(q.qv) AS mq
-              FROM lab l JOIN q USING (doc_id) GROUP BY l.cluster),
-            win AS (
-              SELECT l.cluster, min(l.doc_id) AS w
-              FROM lab l JOIN q USING (doc_id)
-              JOIN best b ON l.cluster = b.cluster AND q.qv = b.mq
-              GROUP BY l.cluster)
-            SELECT l.doc_id, l.cluster, l.doc_id = w.w AS keep
-            FROM lab l JOIN win w ON l.cluster = w.cluster
-            ORDER BY l.doc_id""",
-        "d3_minhash_lsh": f"""
-            {_JACCARD_SQL}
-            WHERE jaccard >= 0.6 ORDER BY id_a, id_b""",
-        "d5_embedding_neardup": """
-            WITH seeded AS (
-              SELECT vec_id, embedding FROM embeddings
-              UNION ALL
-              SELECT vec_id + 100000, embedding FROM embeddings
-              WHERE vec_id < 5)
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b
-            FROM seeded a, seeded b
-            WHERE a.vec_id < b.vec_id
-              AND list_cosine_similarity(a.embedding, b.embedding) >= 0.999
-            ORDER BY id_a, id_b""",
-        "s1_cosine_topk": """
-            WITH s AS (
-              SELECT q.vec_id AS query_id, c.vec_id,
-                     list_cosine_similarity(q.embedding, c.embedding) AS cos
-              FROM (SELECT * FROM embeddings WHERE vec_id < 3) q,
-                   (SELECT * FROM embeddings WHERE vec_id >= 10) c)
-            SELECT query_id, vec_id, "rank" FROM (
-              SELECT query_id, vec_id,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, vec_id ASC)
-                       AS "rank"
-              FROM s)
-            WHERE "rank" <= 5 ORDER BY query_id, "rank" """,
-        "sd1_semantic_dedup": """
-            WITH cn AS (
-              SELECT CAST(vec_id AS INT) AS cell,
-                     list_transform(embedding::DOUBLE[], x -> x /
-                       greatest(sqrt(list_aggregate(list_transform(
-                         embedding::DOUBLE[], y -> y*y), 'sum')), 1e-12))
-                       AS nc
-              FROM embeddings WHERE vec_id < 4),
-            vn AS (
-              SELECT vec_id,
-                     list_transform(embedding::DOUBLE[], x -> x /
-                       greatest(sqrt(list_aggregate(list_transform(
-                         embedding::DOUBLE[], y -> y*y), 'sum')), 1e-12))
-                       AS nv
-              FROM embeddings),
-            sims AS (
-              SELECT v.vec_id, c.cell, list_dot_product(v.nv, c.nc) AS sim
-              FROM vn v CROSS JOIN cn c),
-            asg AS (
-              SELECT vec_id, cell, sim FROM (
-                SELECT *, row_number() OVER (
-                  PARTITION BY vec_id ORDER BY sim DESC, cell) AS rk
-                FROM sims) WHERE rk = 1),
-            dropped AS (
-              SELECT j.vec_id AS vec_id, min(i.vec_id) AS dup_of
-              FROM asg j JOIN asg i
-                ON i.cell = j.cell AND i.vec_id < j.vec_id
-              JOIN vn vi ON vi.vec_id = i.vec_id
-              JOIN vn vj ON vj.vec_id = j.vec_id
-              WHERE list_dot_product(vi.nv, vj.nv) >= 0.4
-              GROUP BY j.vec_id)
-            SELECT a.vec_id, a.cell, round(a.sim, 4) AS centroid_sim,
-                   d.vec_id IS NULL AS keep,
-                   CAST(d.dup_of AS VARCHAR) AS dup_of
-            FROM asg a LEFT JOIN dropped d ON d.vec_id = a.vec_id
-            ORDER BY a.vec_id""",
-        "s2_ivf_topk": """
-            WITH s AS (
-              SELECT q.vec_id AS query_id, c.vec_id,
-                     list_cosine_similarity(q.embedding, c.embedding) AS cos
-              FROM (SELECT * FROM embeddings WHERE vec_id < 3) q,
-                   (SELECT * FROM embeddings WHERE vec_id >= 10) c)
-            SELECT query_id, vec_id, "rank" FROM (
-              SELECT query_id, vec_id,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, vec_id ASC)
-                       AS "rank"
-              FROM s)
-            WHERE "rank" <= 5 ORDER BY query_id, "rank" """,
-        # s3: full-probe full-shortlist IVF-PQ == brute force (same oracle)
-        "s3_ivfpq_topk": """
-            WITH s AS (
-              SELECT q.vec_id AS query_id, c.vec_id,
-                     list_cosine_similarity(q.embedding, c.embedding) AS cos
-              FROM (SELECT * FROM embeddings WHERE vec_id < 3) q,
-                   (SELECT * FROM embeddings WHERE vec_id >= 10) c)
-            SELECT query_id, vec_id, "rank" FROM (
-              SELECT query_id, vec_id,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, vec_id ASC)
-                       AS "rank"
-              FROM s)
-            WHERE "rank" <= 5 ORDER BY query_id, "rank" """,
-        "m1_multimodal_meta": """
-            SELECT doc_id,
-                   CAST(octet_length(encode(text)) AS INTEGER) AS n_bytes,
-                   lower(hex(encode(substr(text, 1, 4)))) AS header,
-                   md5(text) AS content_md5
-            FROM documents ORDER BY doc_id""",
-        "m2_png_decode": """
-            SELECT doc_id, 'png' AS format,
-                   CAST(4 + octet_length(encode(text)) % 13 AS INTEGER)
-                     AS width,
-                   CAST(3 + octet_length(encode(text)) % 7 AS INTEGER)
-                     AS height,
-                   CAST(3 AS INTEGER) AS channels
-            FROM documents WHERE doc_id < 200 AND text IS NOT NULL
-            ORDER BY doc_id""",
         "i1_iceberg_roundtrip": """
             SELECT doc_id, lang, source, n_chars
             FROM documents WHERE doc_id >= 250 AND doc_id < 500
@@ -3717,195 +2431,8 @@ def oracle_sql() -> dict[str, str]:
             WHERE ts >= TIMESTAMP '2024-01-10'
               AND ts < TIMESTAMP '2024-01-13'
             GROUP BY 1 ORDER BY day""",
-        # k1: concat-and-chunk packing restated as pure window arithmetic —
-        # e/s are the doc's [start, end) offsets in the per-source token
-        # stream (doc_id order); each doc overlaps seqs s//32 .. (e-1)//32
-        "k1_pack_sequences": """
-            WITH w AS (
-              SELECT doc_id, source,
-                     list_filter(regexp_split_to_array(lower(text),
-                                                       '[^a-z0-9]+'),
-                                 x -> x <> '') AS ws
-              FROM documents),
-            tok AS (
-              SELECT doc_id, source,
-                     [CAST(CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-                           % 50000 AS INTEGER) FOR x IN ws] AS tokens,
-                     len(ws) AS n_tok
-              FROM w),
-            sp AS (
-              SELECT source AS shard, doc_id, tokens, n_tok,
-                     CAST(sum(n_tok) OVER (
-                            PARTITION BY source ORDER BY doc_id
-                            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS e
-              FROM tok WHERE n_tok > 0),
-            pc AS (
-              SELECT shard, doc_id, tokens, e - n_tok AS s, e,
-                     unnest(generate_series((e - n_tok) // 32,
-                                            (e - 1) // 32)) AS seq
-              FROM sp)
-            SELECT shard, seq, doc_id,
-                   greatest(s, seq * 32) - s AS doc_offset,
-                   greatest(s, seq * 32) - seq * 32 AS seq_offset,
-                   least(e, (seq + 1) * 32) - greatest(s, seq * 32)
-                     AS piece_len,
-                   CAST(list_sum(list_slice(
-                          tokens,
-                          CAST(greatest(s, seq * 32) - s + 1 AS BIGINT),
-                          CAST(least(e, (seq + 1) * 32) - s AS BIGINT)))
-                        AS BIGINT) AS piece_sum
-            FROM pc ORDER BY shard, seq, seq_offset""",
-        # sm1/sm2: the md5_60 unit is CAST('0x'||substr(md5(key||'#salt'),
-        # 1,15) AS BIGINT) / 2^60 — identical IEEE double on both engines
-        "sm1_domain_mix": """
-            WITH c AS (
-              SELECT lang, count(*) AS n FROM documents
-              WHERE lang IN ('en', 'de', 'fr') GROUP BY lang),
-            w AS (SELECT * FROM (VALUES ('en', CAST(0.5 AS DOUBLE)),
-                                        ('de', CAST(0.25 AS DOUBLE)),
-                                        ('fr', CAST(0.25 AS DOUBLE)))
-                  AS t(lang, wt)),
-            nm AS (SELECT min(CAST(floor(n / wt) AS BIGINT)) AS N
-                   FROM c JOIN w USING (lang)),
-            q AS (SELECT w.lang, CAST(floor(wt * N) AS BIGINT) AS quota
-                  FROM w, nm),
-            r AS (
-              SELECT doc_id, lang,
-                     row_number() OVER (
-                       PARTITION BY lang
-                       ORDER BY CAST('0x' || substr(
-                                  md5(CAST(doc_id AS VARCHAR) || '#0'),
-                                  1, 15) AS BIGINT)
-                                / 1152921504606846976.0,
-                                doc_id) AS rn
-              FROM documents WHERE lang IN ('en', 'de', 'fr'))
-            SELECT r.doc_id, r.lang FROM r JOIN q ON r.lang = q.lang
-            WHERE rn <= quota ORDER BY r.lang, r.doc_id""",
-        "sm3_split_assign": """
-            SELECT doc_id,
-                   CASE WHEN u < 0.75 THEN 'train'
-                        WHEN u < 0.875 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (SELECT doc_id,
-                         CAST('0x' || substr(
-                                md5(CAST(doc_id AS VARCHAR) || '#0'),
-                                1, 15) AS BIGINT)
-                         / 1152921504606846976.0 AS u
-                  FROM documents)
-            ORDER BY doc_id""",
-        # x1: 13-gram shingles hashed with md5_60 on both sides; benchmark
-        # = original docs < 5 (present verbatim inside the seeded corpus)
-        "x1_contamination": f"""
-            WITH seeded AS ({_SEEDED_DOCS_SQL}),
-            w AS (
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text),
-                                                       '[^a-z0-9]+'),
-                                 x -> x <> '') AS ws
-              FROM seeded),
-            sh AS (
-              SELECT doc_id,
-                     list_distinct(
-                       CASE WHEN len(ws) >= 13 THEN
-                              [CAST('0x' || substr(md5(
-                                 array_to_string(ws[i:i+12], ' ')), 1, 15)
-                                AS BIGINT)
-                               FOR i IN range(1, len(ws) - 11)]
-                            WHEN len(ws) > 0 THEN
-                              [CAST('0x' || substr(md5(
-                                 array_to_string(ws, ' ')), 1, 15)
-                                AS BIGINT)]
-                            ELSE [] END) AS shs
-              FROM w),
-            b AS (SELECT DISTINCT unnest(shs) AS sh FROM sh
-                  WHERE doc_id < 5),
-            p AS (SELECT doc_id, len(shs) AS n_shingles,
-                         unnest(shs) AS sh
-                  FROM sh WHERE len(shs) > 0)
-            SELECT p.doc_id,
-                   CAST(any_value(p.n_shingles) AS INTEGER) AS n_shingles,
-                   CAST(count(*) AS BIGINT) AS n_overlap,
-                   round(count(*)
-                         / CAST(any_value(p.n_shingles) AS DOUBLE), 4)
-                     AS ratio
-            FROM p JOIN b ON p.sh = b.sh
-            GROUP BY p.doc_id ORDER BY p.doc_id""",
-        # x5: corpus-level keep-first line dedup — rank occurrences of each
-        # >=10-char line by (doc_id, pos); only rank 1 survives
-        "x5_corpus_line_dedup": """
-            WITH l AS (
-              SELECT doc_id,
-                     regexp_replace(text, ' value ', chr(10), 'g') AS t
-              FROM documents),
-            e AS (
-              SELECT doc_id,
-                     unnest(string_split(t, chr(10))) AS line,
-                     generate_subscripts(string_split(t, chr(10)), 1)
-                       AS pos
-              FROM l),
-            r AS (
-              SELECT doc_id, line, pos,
-                     CASE WHEN len(line) >= 10 THEN
-                       row_number() OVER (PARTITION BY line
-                                          ORDER BY doc_id, pos)
-                     ELSE 1 END AS rn
-              FROM e),
-            agg AS (SELECT doc_id,
-                           CAST(count(*) AS BIGINT) AS n_kept,
-                           string_agg(line, chr(10) ORDER BY pos) AS clean
-                    FROM r WHERE rn = 1 GROUP BY doc_id)
-            SELECT l.doc_id,
-                   CAST(len(string_split(l.t, chr(10))) AS BIGINT)
-                     - coalesce(agg.n_kept, 0) AS n_removed_lines,
-                   md5(coalesce(agg.clean, '')) AS clean_md5
-            FROM l LEFT JOIN agg USING (doc_id) ORDER BY doc_id""",
-        # x6: corpus-level duplicate token-span removal — rank each
-        # 13-token window by (doc_id, start); positions covered by a
-        # rank>1 window are cut; rebuild = string_agg over survivors
-        "x6_token_span_dedup": """
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text),
-                                                       '[^a-z0-9]+'),
-                                 x -> x <> '') AS ws
-              FROM documents),
-            tok AS (
-              SELECT doc_id,
-                     [CAST(CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-                           % 50000 AS INTEGER) FOR x IN ws] AS tokens,
-                     len(ws) AS n_tok
-              FROM w),
-            o AS (
-              SELECT doc_id, unnest(range(1, n_tok - 13 + 2)) AS s, tokens
-              FROM tok WHERE n_tok >= 13),
-            r AS (
-              SELECT doc_id, s,
-                     row_number() OVER (
-                       PARTITION BY array_to_string(tokens[s:s+12], ',')
-                       ORDER BY doc_id, s) AS rn
-              FROM o),
-            rm AS (SELECT doc_id, s FROM r WHERE rn > 1),
-            pos AS (
-              SELECT doc_id, unnest(range(1, n_tok + 1)) AS p, tokens
-              FROM tok WHERE n_tok > 0),
-            kept AS (
-              SELECT pos.doc_id, p, tokens[p] AS t
-              FROM pos
-              WHERE NOT EXISTS (SELECT 1 FROM rm
-                                WHERE rm.doc_id = pos.doc_id
-                                  AND rm.s <= p AND p < rm.s + 13)),
-            agg AS (SELECT doc_id,
-                           CAST(count(*) AS BIGINT) AS n_kept,
-                           string_agg(t, ',' ORDER BY p) AS clean
-                    FROM kept GROUP BY doc_id)
-            SELECT tok.doc_id,
-                   CAST(tok.n_tok - coalesce(agg.n_kept, 0) AS BIGINT)
-                     AS n_removed_tokens,
-                   coalesce(agg.n_kept, 0) AS n_tok_clean,
-                   md5(coalesce(agg.clean, '')) AS clean_md5
-            FROM tok LEFT JOIN agg USING (doc_id) ORDER BY tok.doc_id""",
-        # v1: the same seeded corruption + lane logic recomputed with
-        # same framing CASE as the Spark side; lane priority bos > eos > pad;
+        # seq1: the same framing CASE as the Spark side; lane priority
+        # bos > eos > pad;
         # EOS is judged at the last content position (before the pad run)
         "seq1_sequence_shape": """
             WITH w AS (
@@ -4095,6 +2622,7 @@ def oracle_sql() -> dict[str, str]:
             FROM x
             WHERE k IS NULL OR k < 10 OR k > 80
             ORDER BY event_id""",
+        # v1: the same seeded corruption + lane logic recomputed with
         # DuckDB list functions (lane priority dim > finite > norm)
         "v1_vector_check": """
             WITH e AS (
@@ -4128,39 +2656,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE bad_dim OR bad_fin
                OR (NOT isnan(nrm) AND (nrm < 0.5 OR nrm > 2.0))
             ORDER BY vec_id""",
-        # t8: vocab (min_count/max_size, deterministic tiebreak) + per-doc
-        # OOV occurrence counts via an independent join-based recompute
-        "t8_vocab_oov": """
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text),
-                                                       '[^a-z0-9]+'),
-                                 x -> x <> '') AS ws
-              FROM documents),
-            tok AS (
-              SELECT doc_id,
-                     [CAST(CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-                           % 50000 AS INTEGER) FOR x IN ws] AS tokens
-              FROM w),
-            ex AS (SELECT doc_id, unnest(tokens) AS token FROM tok),
-            vc AS (SELECT token, count(*) AS cnt FROM ex GROUP BY token
-                   HAVING count(*) >= 5),
-            vocab AS (SELECT token FROM vc
-                      ORDER BY cnt DESC, token ASC LIMIT 2000),
-            agg AS (
-              SELECT ex.doc_id, count(*) AS n_tok,
-                     CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END)
-                          AS BIGINT) AS n_oov
-              FROM ex LEFT JOIN vocab v USING (token)
-              GROUP BY ex.doc_id)
-            SELECT tok.doc_id,
-                   coalesce(agg.n_tok, 0) AS n_tok,
-                   coalesce(agg.n_oov, 0) AS n_oov,
-                   CASE WHEN coalesce(agg.n_tok, 0) > 0
-                        THEN round(CAST(agg.n_oov AS DOUBLE) / agg.n_tok, 6)
-                   END AS oov_rate
-            FROM tok LEFT JOIN agg USING (doc_id)
-            ORDER BY tok.doc_id""",
         # o1: z-score outlier fences recomputed independently per source
         # mono1: the lag-window twin — same key partition, same
         # (orderBy, key) order, same null skip
@@ -4309,51 +2804,6 @@ def oracle_sql() -> dict[str, str]:
               SELECT 'distinct_count', 'doc_id', round(dd, 4),
                      1.0, -1.0, dd >= 1.0 FROM a)
             ORDER BY metric, "column" """,
-        # t7: duplicate fractions — (n - n_distinct)/n over lines, words,
-        # and raw (multiplicity-keeping) word n-grams
-        "t7_repetition": """
-            WITH l AS (
-              SELECT doc_id,
-                     regexp_replace(text, ' value ', chr(10), 'g') AS t
-              FROM documents),
-            w AS (
-              -- round-5 batch 12: CRLF-tolerant line split, empties out
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(t, '\\r?\\n'),
-                                 x -> x <> '') AS lines,
-                     list_filter(regexp_split_to_array(lower(t),
-                                                       '[^a-z0-9]+'),
-                                 x -> x <> '') AS ws
-              FROM l),
-            g AS (
-              SELECT doc_id, lines, ws,
-                     CASE WHEN len(ws) >= 2 THEN
-                       [array_to_string(ws[i:i+1], ' ')
-                        FOR i IN range(1, len(ws))]
-                     ELSE [] END AS g2,
-                     CASE WHEN len(ws) >= 3 THEN
-                       [array_to_string(ws[i:i+2], ' ')
-                        FOR i IN range(1, len(ws) - 1)]
-                     ELSE [] END AS g3
-              FROM w)
-            SELECT doc_id,
-                   round(CASE WHEN len(lines) > 0 THEN
-                     (len(lines) - len(list_distinct(lines)))
-                     / CAST(len(lines) AS DOUBLE) ELSE 0.0 END, 4)
-                     AS dup_line_frac,
-                   round(CASE WHEN len(ws) > 0 THEN
-                     (len(ws) - len(list_distinct(ws)))
-                     / CAST(len(ws) AS DOUBLE) ELSE 0.0 END, 4)
-                     AS dup_word_frac,
-                   round(CASE WHEN len(g2) > 0 THEN
-                     (len(g2) - len(list_distinct(g2)))
-                     / CAST(len(g2) AS DOUBLE) ELSE 0.0 END, 4)
-                     AS dup_2gram_frac,
-                   round(CASE WHEN len(g3) > 0 THEN
-                     (len(g3) - len(list_distinct(g3)))
-                     / CAST(len(g3) AS DOUBLE) ELSE 0.0 END, 4)
-                     AS dup_3gram_frac
-            FROM g ORDER BY doc_id""",
         # c6: ROLLUP — GROUPING(lang, source) is the same bit vector as
         # Spark's grouping_id (first dim = high bit)
         "c6_rollup": """
@@ -4375,23 +2825,6 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
             GROUP BY CUBE (lang, source)
             ORDER BY level, lang, source""",
-        # cl1: per-stratum quantile_cont fences + the identical clamp
-        "cl1_winsorize": """
-            WITH f AS (
-              SELECT l_returnflag,
-                     quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.01)
-                       AS lo,
-                     quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.99)
-                       AS hi
-              FROM lineitem GROUP BY l_returnflag)
-            SELECT l.l_orderkey, l.l_linenumber,
-                   CASE WHEN l.l_extendedprice IS NULL THEN NULL
-                        ELSE greatest(f.lo,
-                             least(f.hi,
-                                   CAST(l.l_extendedprice AS DOUBLE)))
-                   END AS clipped
-            FROM lineitem l JOIN f USING (l_returnflag)
-            ORDER BY l.l_orderkey, l.l_linenumber""",
         # sk1: window-rank restatement of the heavy-hitter report
         "sk1_skew_report": """
             WITH c AS (
@@ -4471,508 +2904,6 @@ def oracle_sql() -> dict[str, str]:
                          THEN 'changed'
                   END IS NOT NULL
             ORDER BY doc_id""",
-        # w1: 30-minute-gap sessionization — lag + running sum of
-        # session-break flags, exact integer microsecond gap comparison
-        "w1_sessions": """
-            WITH o AS (
-              SELECT user_id, event_id, ts, value,
-                     lag(ts) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev
-              FROM events),
-            s AS (
-              SELECT *,
-                     sum(CASE WHEN prev IS NULL
-                              OR epoch_us(ts) - epoch_us(prev)
-                                 > 1800000000
-                              THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) - 1 AS session_seq
-              FROM o)
-            SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-                   count(*) AS n_events,
-                   min(epoch_us(ts)) AS start_us,
-                   max(epoch_us(ts)) AS end_us,
-                   round(sum(value), 4) AS total_value
-            FROM s GROUP BY user_id, session_seq
-            ORDER BY user_id, session_seq""",
-        # w2: daily tumbling windows — whole-day window() buckets align
-        # to midnight UTC = date_trunc('day')
-        "w2_tumbling": """
-            SELECT epoch_us(date_trunc('day', ts)) AS window_start_us,
-                   event_type, count(*) AS n_events,
-                   round(sum(value), 4) AS total_value
-            FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-        # w3: hopping windows — starts are the slide-aligned values in
-        # (t - window, t]; window divisible by slide means all
-        # window/slide candidates ending at floor(t/slide)*slide qualify
-        "w3_hopping": """
-            WITH e AS (
-              SELECT epoch_us(ts) AS t, event_type, value FROM events),
-            w AS (
-              SELECT event_type, value,
-                     unnest(generate_series(
-                       (t // 43200000000) * 43200000000
-                         - 86400000000 + 43200000000,
-                       (t // 43200000000) * 43200000000,
-                       43200000000)) AS window_start_us
-              FROM e)
-            SELECT window_start_us, event_type, count(*) AS n_events,
-                   round(sum(value), 4) AS total_value
-            FROM w GROUP BY window_start_us, event_type
-            ORDER BY window_start_us, event_type""",
-        # w4: as-of join — DuckDB's native LEFT ASOF JOIN is the oracle
-        # for the distributed merge-asof (largest right.ts <= left.ts
-        # per user, equal ts matches)
-        "w4_asof_join": """
-            SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us,
-                   coalesce(r.event_id, -1) AS purchase_id,
-                   coalesce(epoch_us(r.ts), -1) AS purchase_ts_us,
-                   round(coalesce(r.value, -1.0), 4) AS purchase_value
-            FROM (SELECT * FROM events WHERE event_type = 'click') l
-            ASOF LEFT JOIN
-                 (SELECT * FROM events WHERE event_type = 'purchase') r
-              ON l.user_id = r.user_id AND l.ts >= r.ts
-            ORDER BY l.event_id""",
-        # w5: range join — events vs ±10-min-padded session windows of
-        # the same user; sessions re-derived by the w1 CTE, containment
-        # as a plain BETWEEN inequality join (DuckDB IEJoin)
-        "w5_range_join": """
-            WITH o AS (
-              SELECT user_id, event_id, ts,
-                     lag(ts) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev
-              FROM events),
-            s AS (
-              SELECT *,
-                     sum(CASE WHEN prev IS NULL
-                              OR epoch_us(ts) - epoch_us(prev)
-                                 > 1800000000
-                              THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) - 1 AS session_seq
-              FROM o),
-            ivl AS (
-              SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-                     min(epoch_us(ts)) - 600000000 AS lo,
-                     max(epoch_us(ts)) + 600000000 AS hi
-              FROM s GROUP BY user_id, session_seq)
-            SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us,
-                   ivl.session_seq
-            FROM events e JOIN ivl
-              ON e.user_id = ivl.user_id
-             AND epoch_us(e.ts) BETWEEN ivl.lo AND ivl.hi
-            ORDER BY e.event_id, ivl.session_seq""",
-        # w6: hypertable rollup — each level stated independently with
-        # integer // floors; DECIMAL(18,6) sums make cascade == direct
-        # exactly, cast back to double at the end
-        "w6_rollup_cascade": """
-            WITH lv AS (
-              SELECT * FROM (VALUES ('1 hour', 3600000000),
-                                    ('1 day', 86400000000),
-                                    ('1 week', 604800000000))
-                       t(level, w))
-            SELECT lv.level,
-                   (epoch_us(e.ts) // lv.w) * lv.w AS window_start_us,
-                   e.event_type, count(*) AS n_events,
-                   CAST(sum(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE)
-                     AS total_value
-            FROM events e CROSS JOIN lv
-            GROUP BY 1, 2, 3
-            ORDER BY level, window_start_us, event_type""",
-        # w7: retention cohorts — distinct (user, day) activity vs each
-        # user's min day, counted per (cohort, offset)
-        "w7_retention": """
-            WITH ub AS (
-              SELECT DISTINCT user_id,
-                     (epoch_us(ts) // 86400000000) * 86400000000 AS b
-              FROM events),
-            c AS (SELECT user_id, min(b) AS c FROM ub GROUP BY user_id)
-            SELECT c.c AS cohort_start_us,
-                   (ub.b - c.c) // 86400000000 AS offset,
-                   count(*) AS n_users
-            FROM ub JOIN c USING (user_id)
-            GROUP BY 1, 2 ORDER BY 1, 2""",
-        # w8: ordered funnel — greedy chained-min step times (t1 = min
-        # signup; t2 = min click >= t1; t3 = min purchase >= t2), NULLs
-        # as -1 sentinels to survive the pandas value-hash roundtrip
-        "w8_funnel": """
-            WITH t1 AS (
-              SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-              WHERE event_type = 'signup' GROUP BY user_id),
-            t2 AS (
-              SELECT e.user_id, min(epoch_us(e.ts)) AS t2
-              FROM events e JOIN t1 ON e.user_id = t1.user_id
-              WHERE e.event_type = 'click' AND epoch_us(e.ts) >= t1.t1
-              GROUP BY e.user_id),
-            t3 AS (
-              SELECT e.user_id, min(epoch_us(e.ts)) AS t3
-              FROM events e JOIN t2 ON e.user_id = t2.user_id
-              WHERE e.event_type = 'purchase' AND epoch_us(e.ts) >= t2.t2
-              GROUP BY e.user_id),
-            u AS (
-              SELECT DISTINCT user_id FROM events
-              WHERE event_type IN ('signup', 'click', 'purchase'))
-            SELECT u.user_id,
-                   CASE WHEN t3.t3 IS NOT NULL THEN 3
-                        WHEN t2.t2 IS NOT NULL THEN 2
-                        WHEN t1.t1 IS NOT NULL THEN 1
-                        ELSE 0 END AS steps_completed,
-                   coalesce(t1.t1, -1) AS t1_us,
-                   coalesce(t2.t2, -1) AS t2_us,
-                   coalesce(t3.t3, -1) AS t3_us
-            FROM u LEFT JOIN t1 USING (user_id)
-                   LEFT JOIN t2 USING (user_id)
-                   LEFT JOIN t3 USING (user_id)
-            ORDER BY u.user_id""",
-        # k2: sliding-window chunking — same start/count arithmetic as
-        # chunk_windows (ceil via integer div); list_slice is 1-based
-        # inclusive on both ends
-        "k2_chunk_overlap": """
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text),
-                                                       '[^a-z0-9]+'),
-                                 x -> x <> '') AS ws
-              FROM documents),
-            n AS (
-              SELECT doc_id, ws, len(ws) AS n,
-                     CASE WHEN len(ws) <= 32 THEN 1
-                          ELSE 1 + (len(ws) - 32 + 24 - 1) // 24
-                     END AS n_chunks
-              FROM w WHERE len(ws) > 0),
-            c AS (
-              SELECT doc_id, ws, n,
-                     unnest(range(n_chunks)) AS chunk
-              FROM n)
-            SELECT doc_id, chunk,
-                   chunk * 24 AS chunk_start,
-                   least(32, n - chunk * 24) AS chunk_len,
-                   array_to_string(
-                     list_slice(ws, chunk * 24 + 1,
-                                chunk * 24 + least(32, n - chunk * 24)),
-                     ' ') AS chunk_text
-            FROM c ORDER BY doc_id, chunk""",
-        # sm5: per-language 0.8 quantile fence — quantile_cont is the same
-        # R-7 interpolation as Spark's exact percentile; the metric is
-        # integer-valued so the >= comparison cannot sit on a rounding
-        # boundary unless the fence is itself exact
-        "sm5_quantile_select": """
-            WITH m AS (
-              SELECT doc_id, lang,
-                     CASE WHEN trim(text) = '' THEN 0
-                          ELSE len(regexp_split_to_array(trim(text),
-                                                         '[ \t\n]+'))
-                     END AS n_tok
-              FROM documents),
-            q AS (
-              SELECT lang, quantile_cont(n_tok, 0.8) AS thr
-              FROM m GROUP BY lang)
-            SELECT m.doc_id, m.lang, m.n_tok,
-                   round(q.thr, 4) AS threshold
-            FROM m JOIN q ON m.lang = q.lang
-            WHERE m.n_tok >= q.thr
-            ORDER BY m.doc_id""",
-        # sm6: A-Res weighted sample — top-15 per language by u^(1/w),
-        # u = md5_60 hash unit (same formula as sm4); rank gaps are ~1e-4
-        # at this scale so cross-library pow() ulp noise cannot flip them
-        "ir1_dsir_weights": r"""
-            WITH wd AS (
-              SELECT doc_id, lang,
-                     list_filter(string_split_regex(lower(text), '\s+'),
-                                 w -> w <> '') AS ws
-              FROM documents),
-            g AS (
-              SELECT doc_id, lang,
-                     unnest(list_concat(ws,
-                       list_transform(
-                         list_zip(ws[1:len(ws)-1], ws[2:len(ws)]),
-                         z -> z[1] || ' ' || z[2]))) AS gram
-              FROM wd),
-            b AS (
-              SELECT doc_id, lang,
-                     CAST('0x'||substr(md5(gram),1,15) AS BIGINT) % 1000
-                       AS bucket
-              FROM g),
-            raw AS (SELECT bucket, count(*) AS cr FROM b GROUP BY bucket),
-            tgt AS (SELECT bucket, count(*) AS ct FROM b
-                    WHERE lang = 'en' GROUP BY bucket),
-            tot AS (SELECT (SELECT sum(cr) FROM raw) AS craw,
-                           (SELECT coalesce(sum(ct), 0) FROM tgt) AS ctgt),
-            lr AS (
-              SELECT raw.bucket,
-                     ln(coalesce(ct, 0) + 1.0) - ln(ctgt + 1000.0)
-                     - ln(cr + 1.0) + ln(craw + 1000.0) AS lrv
-              FROM raw LEFT JOIN tgt ON raw.bucket = tgt.bucket, tot),
-            db AS (SELECT doc_id, bucket, count(*) AS c FROM b
-                   GROUP BY doc_id, bucket),
-            sc AS (SELECT doc_id, sum(c * lrv) AS lw
-                   FROM db JOIN lr USING (bucket) GROUP BY doc_id)
-            SELECT d.doc_id, round(coalesce(sc.lw, 0.0), 4) AS log_weight
-            FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id
-            ORDER BY d.doc_id""",
-        "sm6_weighted_sample": """
-            WITH u AS (
-              SELECT doc_id, lang, n_chars,
-                     CAST('0x' || substr(
-                            md5(CAST(doc_id AS VARCHAR) || '#0'),
-                            1, 15) AS BIGINT)
-                     / 1152921504606846976.0 AS u
-              FROM documents WHERE n_chars > 0),
-            k AS (
-              SELECT doc_id, lang, n_chars,
-                     pow(u, 1.0 / n_chars) AS wk
-              FROM u),
-            r AS (
-              SELECT *, row_number() OVER (
-                       PARTITION BY lang
-                       ORDER BY wk DESC, doc_id) AS rn
-              FROM k)
-            SELECT doc_id, lang, n_chars
-            FROM r WHERE rn <= 15 ORDER BY doc_id""",
-        # t10: char-unigram cross-entropy, Laplace-0.5 smoothing
-        "t10_char_entropy": """
-            WITH chars AS (
-              SELECT doc_id,
-                     unnest(list_filter(string_split(lower(text), ''),
-                                        c -> c <> '')) AS ch
-              FROM documents),
-            model AS (SELECT ch, count(*) AS cnt FROM chars GROUP BY ch),
-            tot AS (SELECT sum(cnt) AS total, count(*) AS v FROM model),
-            bits AS (
-              SELECT ch,
-                     -log2((cnt + 0.5) / (total + 0.5 * (v + 1))) AS b
-              FROM model CROSS JOIN tot),
-            doc AS (
-              SELECT c.doc_id, sum(b.b) AS tb, count(*) AS n
-              FROM chars c JOIN bits b ON c.ch = b.ch
-              GROUP BY c.doc_id)
-            SELECT d.doc_id,
-                   CAST(coalesce(doc.n, 0) AS INT) AS n_chars_scored,
-                   round(doc.tb / doc.n, 4) AS bits_per_char
-            FROM documents d LEFT JOIN doc ON d.doc_id = doc.doc_id
-            ORDER BY d.doc_id""",
-        # sm8: stratum interleave — per-lang shuffle position × n_langs
-        # + lang index (same md5_60 unit as sm4)
-        "sm8_interleave": """
-            WITH u AS (
-              SELECT doc_id, lang,
-                     CAST('0x' || substr(
-                            md5(CAST(doc_id AS VARCHAR) || '#0'),
-                            1, 15) AS BIGINT)
-                     / 1152921504606846976.0 AS u
-              FROM documents),
-            r AS (
-              SELECT doc_id, lang,
-                     row_number() OVER (PARTITION BY lang
-                                        ORDER BY u, doc_id) - 1 AS pos,
-                     dense_rank() OVER (ORDER BY lang) - 1 AS sidx
-              FROM u)
-            SELECT doc_id, lang,
-                   CAST(pos * (SELECT count(DISTINCT lang)
-                               FROM documents) + sidx AS BIGINT)
-                     AS interleave_rank
-            FROM r ORDER BY doc_id""",
-        # sm7: curriculum stages — bucket = number of R-7 quartile fences
-        # the (integer) metric reaches
-        "sm7_curriculum": """
-            WITH m AS (
-              SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN 0
-                          ELSE len(regexp_split_to_array(trim(text),
-                                                         '[ \t\n]+'))
-                     END AS n_tok
-              FROM documents),
-            f AS (
-              SELECT quantile_cont(n_tok, [0.25, 0.5, 0.75]) AS fences
-              FROM m)
-            SELECT m.doc_id, m.n_tok,
-                   CAST((m.n_tok >= f.fences[1])::INT
-                      + (m.n_tok >= f.fences[2])::INT
-                      + (m.n_tok >= f.fences[3])::INT AS INT) AS bucket
-            FROM m CROSS JOIN f ORDER BY m.doc_id""",
-        # t9: smoothed tf-idf (sklearn smooth_idf convention), top 3 per
-        # document by (score desc, term asc)
-        "t9_tfidf_topk": """
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text),
-                                                       '[^a-z0-9]+'),
-                                 x -> x <> '') AS ws
-              FROM documents),
-            e AS (SELECT doc_id, unnest(ws) AS term FROM w),
-            tf AS (SELECT doc_id, term, count(*) AS tf
-                   FROM e GROUP BY doc_id, term),
-            dfq AS (SELECT term, count(*) AS doc_freq FROM tf GROUP BY term),
-            nn AS (SELECT count(DISTINCT doc_id) AS n FROM tf),
-            s AS (
-              SELECT tf.doc_id, tf.term, tf.tf, dfq.doc_freq,
-                     tf.tf * (ln((nn.n + 1.0) / (dfq.doc_freq + 1.0))
-                              + 1.0) AS score
-              FROM tf JOIN dfq ON tf.term = dfq.term CROSS JOIN nn),
-            r AS (
-              SELECT *, row_number() OVER (
-                       PARTITION BY doc_id
-                       ORDER BY score DESC, term ASC) AS rank
-              FROM s)
-            SELECT doc_id, CAST(rank AS INT) AS rank, term, tf, doc_freq,
-                   round(score, 4) AS score
-            FROM r WHERE rank <= 3 ORDER BY doc_id, rank""",
-        "sm4_shuffle_ranks": """
-            SELECT doc_id,
-                   CAST(row_number() OVER (ORDER BY u, doc_id) - 1
-                        AS BIGINT) AS shuffle_rank
-            FROM (SELECT doc_id,
-                         CAST('0x' || substr(
-                                md5(CAST(doc_id AS VARCHAR) || '#0'),
-                                1, 15) AS BIGINT)
-                         / 1152921504606846976.0 AS u
-                  FROM documents)
-            ORDER BY doc_id""",
-        # x2: sequential PII redaction — each kind counts and replaces on
-        # the text as redacted by the previous kinds (RE2 == Java regex on
-        # this pattern subset)
-        "x2_pii_redaction": """
-            WITH inj AS (
-              SELECT doc_id,
-                     text || CASE
-                       WHEN doc_id % 5 = 0 THEN
-                         ' contact user' || CAST(doc_id AS VARCHAR)
-                         || '@example.com or 10.0.'
-                         || CAST(doc_id % 256 AS VARCHAR) || '.7'
-                       WHEN doc_id % 7 = 0 THEN
-                         ' call +65912345'
-                         || CAST(doc_id % 90 + 10 AS VARCHAR)
-                         || ' ssn 123-45-6789'
-                       ELSE '' END AS t0
-              FROM documents),
-            s1 AS (SELECT doc_id, t0,
-                     regexp_replace(t0,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-                       '<EMAIL>', 'g') AS t1 FROM inj),
-            s2 AS (SELECT *, regexp_replace(t1,
-                       '\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b',
-                       '<SSN>', 'g') AS t2 FROM s1),
-            s3 AS (SELECT *, regexp_replace(t2,
-                       '\\+[0-9]{7,15}\\b|\\b[0-9]{3}-[0-9]{3}-[0-9]{4}\\b',
-                       '<PHONE>', 'g') AS t3 FROM s2),
-            s4 AS (SELECT *, regexp_replace(t3,
-                       '\\b(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])(\\.(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])){3}\\b',
-                       '<IPV4>', 'g') AS t4 FROM s3)
-            SELECT doc_id,
-                   CAST(len(regexp_extract_all(t0,
-                     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
-                     AS BIGINT) AS n_pii_email,
-                   CAST(len(regexp_extract_all(t1,
-                     '\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b')) AS BIGINT)
-                     AS n_pii_ssn,
-                   CAST(len(regexp_extract_all(t2,
-                     '\\+[0-9]{7,15}\\b|\\b[0-9]{3}-[0-9]{3}-[0-9]{4}\\b'))
-                     AS BIGINT) AS n_pii_phone,
-                   CAST(len(regexp_extract_all(t3,
-                     '\\b(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])(\\.(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])){3}\\b'))
-                     AS BIGINT) AS n_pii_ipv4,
-                   md5(t4) AS red_md5
-            FROM s4 ORDER BY doc_id""",
-        # x3: keep-first within-doc line dedup over one-word-per-line text
-        "x3_line_dedup": """
-            WITH l AS (
-              SELECT doc_id, replace(text, ' ', chr(10)) AS t
-              FROM documents),
-            e AS (
-              SELECT doc_id,
-                     unnest(string_split(t, chr(10))) AS line,
-                     generate_subscripts(string_split(t, chr(10)), 1)
-                       AS pos
-              FROM l),
-            f AS (SELECT doc_id, line, min(pos) AS fp
-                  FROM e GROUP BY doc_id, line),
-            agg AS (SELECT doc_id,
-                           CAST(count(*) AS BIGINT) AS n_kept,
-                           string_agg(line, chr(10) ORDER BY fp) AS clean
-                    FROM f GROUP BY doc_id)
-            SELECT l.doc_id,
-                   CAST(len(string_split(l.t, chr(10))) AS BIGINT)
-                     AS n_lines,
-                   agg.n_kept, md5(agg.clean) AS clean_md5
-            FROM l JOIN agg USING (doc_id) ORDER BY doc_id""",
-        # x9: identical Java∩RE2 strip chain over the identically wrapped
-        # documents (script/style -> comment -> tags -> six entities with
-        # &amp; last -> whitespace collapse -> trim)
-        "x9_strip_markup": f"""
-            WITH h AS (
-              SELECT doc_id,
-                     '{_HTML_PRE}' || text || '{_HTML_POST}' AS html
-              FROM documents),
-            c AS (
-              SELECT doc_id,
-                     trim(regexp_replace(
-                       replace(replace(replace(replace(replace(replace(
-                         regexp_replace(regexp_replace(regexp_replace(
-                           regexp_replace(html,
-                             '{cleaning._MARKUP_SCRIPT}', ' ', 'g'),
-                           '{cleaning._MARKUP_STYLE}', ' ', 'g'),
-                         '{cleaning._MARKUP_COMMENT}', ' ', 'g'),
-                       '{cleaning._MARKUP_TAG}', ' ', 'g'),
-                       '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                       '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-                     '{cleaning._MARKUP_WS}', ' ', 'g')) AS clean
-              FROM h)
-            SELECT doc_id, md5(clean) AS clean_md5,
-                   CAST(length(clean) AS BIGINT) AS n_clean
-            FROM c ORDER BY doc_id""",
-        # x10: DuckDB nfc_normalize is the independent NFC twin; lower
-        # applied AFTER normalization on both sides
-        "x10_normalize": f"""
-            WITH n AS (
-              SELECT doc_id,
-                     lower(nfc_normalize(text || '{_UNI_SUFFIX}'))
-                       AS clean
-              FROM documents)
-            SELECT doc_id, md5(clean) AS norm_md5,
-                   CAST(length(clean) AS BIGINT) AS n_norm
-            FROM n ORDER BY doc_id""",
-        # x4: corpus-frequency boilerplate removal (footer injected into
-        # every third doc; any natural >=10-char line in >=5 docs is
-        # likewise flagged — the oracle replicates the frequency pass)
-        "x4_boilerplate": """
-            WITH l AS (
-              SELECT doc_id,
-                     regexp_replace(text, ' value ', chr(10), 'g')
-                     || CASE WHEN doc_id % 3 = 0 THEN
-                          chr(10) || 'copyright footer boilerplate line'
-                        ELSE '' END AS t
-              FROM documents),
-            e AS (
-              SELECT doc_id,
-                     unnest(string_split(t, chr(10))) AS line,
-                     generate_subscripts(string_split(t, chr(10)), 1)
-                       AS pos
-              FROM l),
-            freq AS (
-              SELECT line FROM (
-                SELECT line, count(DISTINCT doc_id) AS nd
-                FROM e WHERE len(line) >= 10 GROUP BY line)
-              WHERE nd >= 5),
-            kept AS (
-              SELECT e.* FROM e
-              WHERE e.line NOT IN (SELECT line FROM freq)),
-            agg AS (SELECT doc_id,
-                           CAST(count(*) AS BIGINT) AS n_kept,
-                           string_agg(line, chr(10) ORDER BY pos) AS clean
-                    FROM kept GROUP BY doc_id)
-            SELECT l.doc_id,
-                   CAST(len(string_split(l.t, chr(10))) AS BIGINT)
-                     - coalesce(agg.n_kept, 0) AS n_removed_lines,
-                   md5(coalesce(agg.clean, '')) AS clean_md5
-            FROM l LEFT JOIN agg USING (doc_id) ORDER BY doc_id""",
-        "sm2_rate_sample": """
-            SELECT doc_id, lang FROM documents
-            WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#0'),
-                                      1, 15) AS BIGINT)
-                  / 1152921504606846976.0
-                  < CASE lang WHEN 'en' THEN 0.5
-                              WHEN 'zh' THEN 1.0 ELSE 0.0 END
-            ORDER BY doc_id""",
         "j2_reference_type": """
             SELECT CAST(o_orderkey AS VARCHAR) AS doc_id,
                    'REF-T' AS rule_id,
@@ -5043,127 +2974,3 @@ def oracle_sql() -> dict[str, str]:
     }
 
 
-def _sql_list(values) -> str:
-    return ", ".join(f"'{v}'" for v in values)
-
-
-def _lang_hits_sql() -> str:
-    return ",\n                ".join(
-        f"len(list_filter(ws, x -> x IN ({_sql_list(lex)}))) AS h_{lang}"
-        for lang, lex in text.LANG_LEXICON.items())
-
-
-def _simhash_sigs_cte() -> str:
-    """Shared oracle CTE chain: seeded docs → md5_60 word hashes → 64
-    bit-vote sums → sign reassembly into per-doc signatures (``sigs``)."""
-    votes = ",\n               ".join(
-        f"sum(CASE WHEN (hw >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
-        for i in range(64))
-    sig = "\n                 + ".join(
-        f"(CASE WHEN b{i} > 0 THEN (1::BIGINT << {i}) ELSE 0::BIGINT END)"
-        for i in range(64))
-    return f"""seeded AS ({_SEEDED_DOCS_SQL}),
-            w AS (
-              SELECT doc_id,
-                     unnest(list_filter(regexp_split_to_array(lower(text),
-                       '[^a-z0-9]+'), x -> x <> '')) AS word
-              FROM seeded),
-            h AS (
-              SELECT doc_id,
-                     CAST(concat('0x', substr(md5(word), 1, 15)) AS BIGINT)
-                       AS hw
-              FROM w),
-            v AS (
-              SELECT doc_id,
-               {votes}
-              FROM h GROUP BY doc_id),
-            sigs AS (
-              SELECT doc_id,
-                 {sig} AS sig
-              FROM v)"""
-
-
-def _simhash_sql() -> str:
-    """SimHash oracle: brute-force hamming ≤ 3 pairs over the shared sigs
-    CTE (equivalent to the engine's pigeonhole buckets: distance ≤ 3 over
-    4 chunks guarantees ≥1 equal chunk, so the candidate sets coincide).
-    Word hash = top-60-bit md5 on both sides."""
-    return f"""
-            WITH {_simhash_sigs_cte()}
-            SELECT id_a, id_b, hamming FROM (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                     bit_count(xor(a.sig, b.sig)) AS hamming
-              FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id)
-            WHERE hamming <= 3 ORDER BY id_a, id_b"""
-
-
-def _simhash_incremental_sql() -> str:
-    """d8 oracle: signatures of docs < 5 are the index; every other
-    seeded doc matches brute-force against index ∪ smaller-id batch
-    docs (same candidate completeness argument as :func:`_simhash_sql`);
-    dup_of = smallest matching id, hamming = that match's distance."""
-    return f"""
-            WITH {_simhash_sigs_cte()},
-            idx AS (SELECT doc_id, sig FROM sigs WHERE doc_id < 5),
-            newb AS (SELECT doc_id, sig FROM sigs WHERE doc_id >= 5),
-            m AS (
-              SELECT n.doc_id, x.doc_id AS match_id,
-                     bit_count(xor(n.sig, x.sig)) AS h
-              FROM newb n CROSS JOIN idx x
-              UNION ALL
-              SELECT a.doc_id, b.doc_id, bit_count(xor(a.sig, b.sig))
-              FROM newb a JOIN newb b ON a.doc_id > b.doc_id),
-            mm AS (
-              SELECT doc_id, min(match_id) AS dup_of,
-                     arg_min(h, match_id) AS hamming
-              FROM m WHERE h <= 3 GROUP BY doc_id)
-            SELECT n.doc_id, n.sig AS simhash,
-                   mm.doc_id IS NOT NULL AS dup,
-                   coalesce(mm.dup_of, -1) AS dup_of,
-                   CAST(coalesce(mm.hamming, -1) AS INT) AS hamming
-            FROM newb n LEFT JOIN mm ON n.doc_id = mm.doc_id
-            ORDER BY n.doc_id"""
-
-
-# seeded duplicate construction — the SQL twin of _seeded_docs()
-_SEEDED_DOCS_SQL = """
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 10000, regexp_replace(text, '^[a-z0-9]+ ', '')
-  FROM documents WHERE doc_id < 5
-  UNION ALL
-  SELECT doc_id + 20000, text FROM documents WHERE doc_id < 5
-"""
-
-# exact word-3-gram Jaccard pairs over the seeded set — the oracle for both
-# the exact operator (d2) and the LSH-discovered, exactness-verified one (d3)
-_JACCARD_SQL = f"""
-  WITH seeded AS ({_SEEDED_DOCS_SQL}),
-  w AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                       x -> x <> '') AS ws
-    FROM seeded),
-  sh AS (
-    SELECT doc_id,
-           list_distinct(
-             CASE WHEN len(ws) >= 3 THEN
-                    [array_to_string(ws[i:i+2], ' ')
-                     FOR i IN range(1, len(ws) - 1)]
-                  WHEN len(ws) > 0 THEN [array_to_string(ws, ' ')]
-                  ELSE [] END) AS shs
-    FROM w),
-  p AS (SELECT doc_id, unnest(shs) AS s FROM sh),
-  pairs AS (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-    FROM p a JOIN p b ON a.s = b.s
-    WHERE a.doc_id < b.doc_id
-    GROUP BY 1, 2),
-  sizes AS (SELECT doc_id, len(shs) AS n_sh FROM sh)
-  SELECT id_a, id_b,
-         round(CAST(common AS DOUBLE)
-               / (sa.n_sh + sb.n_sh - common), 4) AS jaccard
-  FROM pairs
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-"""

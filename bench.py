@@ -52,7 +52,6 @@ def time_queries(spark, sf_dir: str) -> dict[str, float]:
     # agree; when they disagree by >1.5x at least one was burst-hit, so
     # keep drawing (up to 4) until two samples land within 1.5x of the
     # running minimum.
-    from fhir_data_validation_spark.pipeline import dedup as _dedup
     out = {}
     for name, fn in entry_mod.queries().items():
         walls = []
@@ -69,13 +68,6 @@ def time_queries(spark, sf_dir: str) -> dict[str, float]:
                 if sum(1 for w in walls if w <= 1.5 * lo) >= 2:
                     break
         out[name] = round(min(walls), 3)
-        # release the dedup family's persisted intermediates between
-        # queries — repeat draws intentionally share them (Spark's
-        # plan-keyed cache makes draw N>1 measure the steady state of a
-        # repeated identical query, the protocol every round has used),
-        # but the NEXT query must start clean or accumulated shingle/
-        # label caches distort its timing via eviction/spill
-        _dedup.unpersist_all()
     return out
 
 

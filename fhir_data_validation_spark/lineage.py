@@ -154,9 +154,8 @@ class ResumableRun:
     # marker append (guarded by a lock). 1 = the old serial behavior.
     max_concurrent_batches: int = 4
     # alternate lineage backend (duck-typed LineageStore contract), e.g.
-    # sources.iceberg_py.PyIcebergLineageStore for MERGE-upsert markers or
-    # sources.iceberg.IcebergLineageStore on a cluster with the runtime
-    # jar; None = parquet LineageStore under output_root/lineage
+    # sources.iceberg_py.PyIcebergLineageStore for MERGE-upsert markers;
+    # None = parquet LineageStore under output_root/lineage
     lineage_store: object | None = None
 
     def __post_init__(self):

@@ -3,11 +3,10 @@
 The north-star engine validates pre-tokenized training corpora; these
 modules add the data-processing operators a large-scale training pipeline
 needs around validation — deduplication (exact, MinHash-LSH, SimHash,
-n-gram Jaccard, embedding cosine), similarity search, text analysis
-(language id, quality scoring, token counting, fingerprinting) and
-multimodal binary-column plumbing. All are Spark-first: built-in
-functions and broadcast/bucket joins in the hot path, Arrow-batched
-pandas stages only where linear algebra genuinely needs numpy.
+n-gram Jaccard), text analysis (language id, quality scoring, token
+counting, fingerprinting), line cleaning, PII redaction, event joins,
+sequence packing and data selection. All are Spark-first: built-in
+functions and broadcast/bucket joins in the hot path.
 """
 
-from . import dedup, multimodal, similarity, text  # noqa: F401
+from . import dedup, text  # noqa: F401

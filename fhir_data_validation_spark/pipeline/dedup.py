@@ -583,9 +583,8 @@ def simhash_pairs(df: DataFrame, max_distance: int = 3,
 def signature_pairs(sigs: DataFrame, max_distance: int = 3,
                     max_bucket_size: int | None = 1000) -> DataFrame:
     """Near-duplicate pairs from ANY 64-bit signature frame ``(_id,
-    simhash)`` — the pigeonhole chunk-join core shared by text SimHash
-    (:func:`simhash_pairs`) and image perceptual hashes
-    (``multimodal.image_near_dup``). Complete for hamming ≤ 3 (4 16-bit
+    simhash)`` — the pigeonhole chunk-join core of text SimHash
+    (:func:`simhash_pairs`). Complete for hamming ≤ 3 (4 16-bit
     chunks ⇒ some chunk equal); larger ``max_distance`` values still
     rerank exactly but may miss pairs whose every chunk differs."""
     # persist the (O(docs), two-long) signature frame: the hot-bucket

@@ -2,11 +2,11 @@
 
 The reference's whole input contract is snapshot ingest
 (``Core/ValidationPipeline.cs:486-604``): one immutable bundle in, issue
-list out. ``sources/iceberg.py`` implements that over the real
-Iceberg-Spark runtime, but this container has no ``iceberg-spark-runtime``
-jar and no network to fetch one — so this module implements the Iceberg v2
+list out. On a cluster with the ``iceberg-spark-runtime`` jar, Spark
+reads a catalog table directly (``jobs/run_validation.py --input-format
+table``). Without that jar, this module implements the Iceberg v2
 TABLE FORMAT itself (https://iceberg.apache.org/spec/) from the public
-spec, on top of two things the container does have: Spark's parquet
+spec, on top of two things every Spark install has: Spark's parquet
 writer/reader and :mod:`.avro_io` (whose container framing is
 cross-checked against the official Java Avro library).
 
@@ -47,7 +47,7 @@ What is real here (all executed in tests):
   or manifests; snapshot-scoped operations (COW delete/merge, compact)
   surface :class:`CommitConflictError` instead of silently rebasing.
 
-Non-goals (use the real runtime via ``sources/iceberg.py`` on a cluster):
+Non-goals (use the real runtime through ``spark.table`` on a cluster):
 column rename/retype beyond :meth:`PyIcebergTable.rename_column` /
 :meth:`PyIcebergTable.widen_column`, catalog services beyond the
 path-based Hadoop layout, and cross-process distributed locking (the CAS

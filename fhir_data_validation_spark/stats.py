@@ -196,6 +196,21 @@ def pk_duplicates(df: DataFrame, key_col: str) -> DataFrame:
             .where(F.col("cnt") > 1))
 
 
+def token_count_ws(col: Column) -> Column:
+    """Whitespace token count; empty/blank text counts 0, NULL stays
+    NULL. Splits on FULL whitespace (``\\s``) and discards boundary
+    empties — the old trim-then-split chain stripped only SPACES
+    (Spark ``trim`` semantics), so a newline-terminated doc gained a
+    phantom trailing token, a blank-but-newline doc counted 2, and a
+    CRLF doc glued ``\\r`` onto its tokens (round-5 review batch 12)."""
+    # explicit class, not \s: Java \s includes \x0B where RE2's does
+    # not — the oracle states the identical class (round-5 batch 13)
+    toks = F.filter(F.split(col, "[ \\t\\n\\x0B\\f\\r]+"),
+                    lambda w: w != "")
+    return F.when(col.isNull(), F.lit(None).cast("int")) \
+            .otherwise(F.size(toks))
+
+
 def data_card(df: DataFrame, by: str = "source", text_col: str = "text",
               all_label: str = "<all>", exact: bool = True,
               accuracy: int = 10000) -> DataFrame:
@@ -211,8 +226,6 @@ def data_card(df: DataFrame, by: str = "source", text_col: str = "text",
     doc lengths; ``exact=False``: ``approx_percentile`` mergeable sketch,
     the 100-TB path for unbounded metrics. Null texts contribute to
     ``n_docs`` only (every other aggregate skips them)."""
-    from .pipeline.text import token_count_ws
-
     ln = F.length(F.col(text_col)).cast("double")
 
     def q(p: float):

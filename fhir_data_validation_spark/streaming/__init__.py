@@ -2,7 +2,6 @@ from .validate import validate_stream, validate_stream_foreach_batch  # noqa: F4
 from .monitor import violation_rates  # noqa: F401
 from .stateful import (running_violation_totals,  # noqa: F401
                        running_violation_totals_tws)  # noqa: F401
-from .dedupe import dedup_stream  # noqa: F401
 from .snapshot_poll import SnapshotMonitor  # noqa: F401
 from .sink import (IcebergStreamSink, audit_and_publish,  # noqa: F401
                    write_stream_to_table)

@@ -2,8 +2,7 @@
 (``sources/iceberg_py.py``): snapshot-pinned reads, incremental changelog,
 MERGE-semantics lineage, and cross-implementation Avro conformance of the
 actual manifest files against the official Java Avro library (bundled with
-Spark). Complements ``test_iceberg.py``, whose jar-backed path still
-self-skips in this container."""
+Spark)."""
 
 import json
 

@@ -25,7 +25,7 @@ def test_zip_contains_whole_package_and_nothing_else(pkg_zip):
     with zipfile.ZipFile(pkg_zip) as z:
         names = z.namelist()
     assert "fhir_data_validation_spark/__init__.py" in names
-    assert "fhir_data_validation_spark/pipeline/similarity.py" in names
+    assert "fhir_data_validation_spark/streaming/sink.py" in names
     assert all(n.startswith("fhir_data_validation_spark/") for n in names)
     assert not any("__pycache__" in n or n.endswith(".pyc") for n in names)
     # the on-disk package and the zip ship the same module set

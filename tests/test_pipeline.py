@@ -1,12 +1,10 @@
-"""Training-pipeline operator tests: text analysis, dedup family,
-similarity search, multimodal plumbing."""
+"""Training-pipeline operator tests: text analysis, the dedup family and
+regression edges of line cleaning and sequence packing."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from fhir_data_validation_spark.pipeline import (dedup, multimodal,
-                                                 similarity, text)
+from fhir_data_validation_spark.pipeline import dedup, text
 
 SF = "/root/testdata/sf0.001"
 
@@ -159,217 +157,6 @@ def test_simhash_pairs(seeded):
         assert pairs.get((base, base + 20000)) == 0
 
 
-# ------------------------------------------------------------- similarity ---
-
-@pytest.fixture(scope="module")
-def embs(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
-
-
-def test_cosine_pairs_exact(spark):
-    rows = [(1, [1.0, 0.0]), (2, [1.0, 0.01]), (3, [0.0, 1.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = similarity.cosine_pairs(df, threshold=0.99).collect()
-    assert {(p["id_a"], p["id_b"]) for p in pairs} == {(1, 2)}
-
-
-def test_embedding_near_dup_lsh_matches_exact(spark, embs):
-    seeded = embs.unionByName(
-        embs.where(F.col("vec_id") < 5)
-        .select((F.col("vec_id") + 100000).alias("vec_id"), "embedding",
-                "label"))
-    exact = {(p["id_a"], p["id_b"]) for p in
-             similarity.cosine_pairs(seeded, threshold=0.999).collect()}
-    lsh = {(p["id_a"], p["id_b"]) for p in
-           similarity.embedding_near_dup(seeded, threshold=0.999).collect()}
-    assert lsh == exact == {(i, i + 100000) for i in range(5)}
-
-
-def test_cosine_topk_string_ids(spark):
-    """Ids keep their native type through the Arrow stage — a hardcoded
-    long output schema used to crash on string-keyed corpora."""
-    rows = [(f"v{i}", [float(i == j) for j in range(4)])
-            for i in range(4)]
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    got = similarity.cosine_topk(df.where(F.col("vec_id") != "v0"),
-                                 df.where(F.col("vec_id") == "v0"), k=2)
-    out = got.collect()
-    assert len(out) == 2 and all(r["query_id"] == "v0" for r in out)
-
-
-def test_cosine_topk_matches_numpy(embs):
-    queries = embs.where(F.col("vec_id") < 3)
-    got = similarity.cosine_topk(embs.where(F.col("vec_id") >= 3),
-                                 queries, k=5)
-    rows = got.collect()
-    emb = {r["vec_id"]: np.array(r["embedding"]) for r in embs.collect()}
-    for qid in [0, 1, 2]:
-        q = emb[qid] / np.linalg.norm(emb[qid])
-        sims = sorted(((float(q @ (v / np.linalg.norm(v))), cid)
-                       for cid, v in emb.items() if cid >= 3), reverse=True)
-        want = [cid for _, cid in sims[:5]]
-        have = [r["vec_id"] for r in sorted(
-            (r for r in rows if r["query_id"] == qid),
-            key=lambda r: r["rank"])]
-        assert have == want
-
-
-def test_ann_topk_recall(embs):
-    queries = embs.where(F.col("vec_id") < 10)
-    corpus = embs.where(F.col("vec_id") >= 10)
-    exact = similarity.cosine_topk(corpus, queries, k=5).collect()
-    approx = similarity.ann_topk(corpus, queries, k=5, n_bits=4,
-                                 n_tables=16).collect()
-    exact_s = {(r["query_id"], r["vec_id"]) for r in exact}
-    approx_s = {(r["query_id"], r["vec_id"]) for r in approx}
-    recall = len(exact_s & approx_s) / len(exact_s)
-    assert recall >= 0.6  # multiprobe SRP at 8 bits on 64-dim data
-
-
-def test_ivf_topk_recall_and_exactness_at_full_probe(embs):
-    queries = embs.where(F.col("vec_id") < 10)
-    corpus = embs.where(F.col("vec_id") >= 10)
-    exact = similarity.cosine_topk(corpus, queries, k=5).collect()
-    exact_s = {(r["query_id"], r["vec_id"]) for r in exact}
-    # probing every cell ⇒ candidate set = corpus ⇒ exact result
-    full = similarity.ivf_topk(corpus, queries, k=5, n_cells=8, n_probe=8)
-    full_s = {(r["query_id"], r["vec_id"]) for r in full.collect()}
-    assert full_s == exact_s
-    # partial probing: sublinear work, bounded recall loss
-    approx = similarity.ivf_topk(corpus, queries, k=5, n_cells=8, n_probe=3)
-    approx_s = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
-    recall = len(exact_s & approx_s) / len(exact_s)
-    assert recall >= 0.5  # uniform random vectors are the worst case
-
-
-# -------------------------------------------------------------- multimodal --
-
-def test_multimodal_meta(docs):
-    mm = multimodal.synth_multimodal(docs)
-    meta = multimodal.extract_meta(mm)
-    row = meta.join(docs.select(F.col("doc_id").cast("string"), "text"),
-                    "doc_id").first()
-    assert row["n_bytes"] == len(row["text"].encode())
-    assert set(r["modality"] for r in meta.collect()) <= set(
-        multimodal.MODALITIES)
-
-
-def test_decode_default_routes_unknown_formats_to_err_lane(docs):
-    """round-5 review regressions (batch 13): the default decoder handles
-    PNG/WAV; anything else takes the error FEATURE (lenient S2 contract)
-    instead of failing the whole stage."""
-    mm = multimodal.synth_multimodal(docs)
-    rows = multimodal.decode(mm).collect()
-    assert len(rows) == mm.count()
-    assert all("no built-in codec" in r["feature"].get("error", "")
-               or "error" not in r["feature"] for r in rows)
-    assert any("error" in r["feature"] for r in rows)
-
-
-def test_decode_with_fake_decoder(docs):
-    mm = multimodal.synth_multimodal(docs)
-    out = multimodal.decode(mm, decoder=multimodal.fake_decoder)
-    rows = out.collect()
-    assert len(rows) == docs.count()
-    img = [r for r in rows if r["modality"] == "image"]
-    assert img and all("width" in r["feature"] for r in img)
-
-
-def test_frame_sample(docs):
-    mm = multimodal.synth_multimodal(docs)
-    frames = multimodal.frame_sample(mm, every_n_bytes=64, max_frames=4)
-    per_doc = frames.groupBy("doc_id").count().collect()
-    assert per_doc and all(1 <= r["count"] <= 4 for r in per_doc)
-    assert frames.where(F.col("frame_n_bytes") > 64).count() == 0
-
-
-def test_gopher_quality_rules(spark, docs):
-    """Quality-filter presets run through the engine like any rule set."""
-    from fhir_data_validation_spark import EngineConfig, ValidationEngine
-    from fhir_data_validation_spark.pipeline.presets import \
-        gopher_quality_ruleset
-    res = ValidationEngine(gopher_quality_ruleset(),
-                           config=EngineConfig(key_col="doc_id",
-                                               group_col="lang")
-                           ).validate(docs)
-    by_rule = {r["rule_id"]: r["n"] for r in
-               res.violations.groupBy("rule_id").count()
-               .withColumnRenamed("count", "n").collect()}
-    # synthetic word-soup docs: duplicate-word rule fires, wordcount doesn't
-    assert by_rule.get("QF-DUPWORDS", 0) > 0
-    assert "QF-WORDCOUNT" not in by_rule
-
-
-def test_resize_default_rejects_non_png_and_fake_resizer(docs, spark):
-    mm = multimodal.synth_multimodal(docs)
-    # round-5 batch 13: non-PNG payloads take the meta err lane, the
-    # original payload is kept, and the stage never fails
-    lenient = {r["doc_id"]: r for r in
-               multimodal.resize(mm, 32, 32).collect()}
-    img = [r for r in lenient.values() if r["modality"] == "image"]
-    assert img and all("stdlib resizer handles PNG only"
-                       in r["meta"].get("error", "") for r in img)
-    out = multimodal.resize(mm, 8, 8, resizer=multimodal.fake_resizer)
-    rows = out.collect()
-    assert len(rows) == mm.count()
-    for r in rows:
-        if r["modality"] == "image":
-            assert len(r["payload"]) == 8 * 8 * 3
-            assert r["meta"]["resized_w"] == "8"
-        else:
-            assert "resized_w" not in r["meta"]
-
-
-def test_ivf_topk_string_ids(spark):
-    """ids keep their native type through the probe table (regression:
-    hardcoded long schema broke string ids)."""
-    rows = [(f"v{i}", [float(i), 1.0]) for i in range(20)]
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    out = similarity.ivf_topk(df.where(F.col("vec_id") != "v0"),
-                              df.where(F.col("vec_id") == "v0"),
-                              k=3, n_cells=2, n_probe=2)
-    got = out.collect()
-    assert len(got) == 3 and all(r["query_id"] == "v0" for r in got)
-
-
-def test_ivf_index_save_load_roundtrip(spark, embs, tmp_path):
-    """Build once, save, load in a 'later job': identical top-k — the
-    corpus index serves many query batches without re-fitting KMeans."""
-    queries = embs.where(F.col("vec_id") < 3)
-    corpus = embs.where(F.col("vec_id") >= 3)
-    idx = similarity.IvfIndex.build(corpus, n_cells=4, seed=42)
-    before = [tuple(r) for r in
-              idx.search(queries, k=5, n_probe=2)
-              .orderBy("query_id", "rank").collect()]
-    path = str(tmp_path / "ivf_index")
-    idx.save(path)
-    loaded = similarity.IvfIndex.load(spark, path)
-    after = [tuple(r) for r in
-             loaded.search(queries, k=5, n_probe=2)
-             .orderBy("query_id", "rank").collect()]
-    assert before == after and len(before) > 0
-    assert (loaded.centroids == idx.centroids).all()
-
-
-def test_srp_index_save_load_matches_ann_topk(spark, embs, tmp_path):
-    """SRP index round-trip: loaded index reproduces ann_topk exactly
-    (hyperplanes re-derive from the persisted seed)."""
-    queries = embs.where(F.col("vec_id") < 3)
-    corpus = embs.where(F.col("vec_id") >= 3)
-    direct = [tuple(r) for r in
-              similarity.ann_topk(corpus, queries, k=5, n_bits=4,
-                                  n_tables=8, seed=7)
-              .orderBy("query_id", "rank").collect()]
-    idx = similarity.SrpIndex.build(corpus, n_bits=4, n_tables=8, seed=7)
-    path = str(tmp_path / "srp_index")
-    idx.save(path)
-    loaded = similarity.SrpIndex.load(spark, path)
-    via_index = [tuple(r) for r in
-                 loaded.search(queries, k=5)
-                 .orderBy("query_id", "rank").collect()]
-    assert via_index == direct and len(direct) > 0
-
-
 def test_dedup_unpersist_all(spark, seeded):
     dedup.jaccard_pairs(seeded, threshold=0.6).count()
     assert dedup.unpersist_all() >= 1
@@ -496,24 +283,6 @@ def test_duplicate_clusters_nonconvergence_raises(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.duplicate_clusters(pairs, max_iter=3).collect()
     dedup.unpersist_all()
-
-
-def test_c4_quality_rules(spark):
-    from fhir_data_validation_spark import ValidationEngine
-    from fhir_data_validation_spark.pipeline.presets import c4_quality_ruleset
-    df = spark.createDataFrame(
-        [("d1", "One sentence. Two here! A third one? Done.", "en"),
-         ("d2", "Too short.", "en"),
-         ("d3", "Please enable JavaScript to view. More text. And more.", "en"),
-         ("d4", "Lorem ipsum dolor sit amet. Filler here. More filler.", "en"),
-         ("d5", "function f() { return 1; }. Yes code. Three sentences.", "en")],
-        "doc_id string, text string, source string")
-    res = ValidationEngine(c4_quality_ruleset()).validate(df)
-    got = {(r["doc_id"], r["rule_id"]) for r in res.violations.collect()}
-    assert got == {("d2", "QF-C4-SENTENCES"),
-                   ("d3", "QF-C4-JS"),
-                   ("d4", "QF-C4-LOREM"),
-                   ("d5", "QF-C4-BRACE")}
 
 
 def test_dedup_token_spans_keep_first(spark):
@@ -706,52 +475,6 @@ def test_simhash_incremental(spark):
         dedup.simhash_incremental(new, index, max_distance=4)
 
 
-def test_ivf_index_add_incremental(spark, embs, tmp_path):
-    """Appending a delta to an IvfIndex (no refit) makes the new vectors
-    searchable; full-probe search over the grown index equals brute-force
-    cosine top-k over the union corpus."""
-    queries = embs.where(F.col("vec_id") < 3)
-    first = embs.where((F.col("vec_id") >= 3) & (F.col("vec_id") < 30))
-    delta = embs.where(F.col("vec_id") >= 30)
-    idx = similarity.IvfIndex.build(first, n_cells=4, seed=42)
-    grown = idx.add(delta)
-    assert grown.cells.count() == first.count() + delta.count()
-    n_cells = idx.centroids.shape[0]
-    got = [(r["query_id"], r["vec_id"], r["rank"]) for r in
-           grown.search(queries, k=5, n_probe=n_cells)
-           .orderBy("query_id", "rank").collect()]
-    want = [(r["query_id"], r["vec_id"], r["rank"]) for r in
-            similarity.cosine_topk(first.unionByName(delta), queries, k=5)
-            .orderBy("query_id", "rank").collect()]
-    assert got == want and len(got) > 0
-    # save/load of the grown index keeps serving identically
-    path = str(tmp_path / "ivf_grown")
-    grown.save(path)
-    loaded = similarity.IvfIndex.load(spark, path)
-    again = [(r["query_id"], r["vec_id"], r["rank"]) for r in
-             loaded.search(queries, k=5, n_probe=n_cells)
-             .orderBy("query_id", "rank").collect()]
-    assert again == got
-
-
-def test_srp_index_add_equals_rebuild(spark, embs):
-    """SRP hyperplanes are data-independent, so an appended index is
-    EXACTLY build() over the union — identical search results, no
-    quantizer drift."""
-    queries = embs.where(F.col("vec_id") < 3)
-    first = embs.where((F.col("vec_id") >= 3) & (F.col("vec_id") < 30))
-    delta = embs.where(F.col("vec_id") >= 30)
-    grown = similarity.SrpIndex.build(first, n_bits=4, n_tables=8,
-                                      seed=7).add(delta)
-    rebuilt = similarity.SrpIndex.build(first.unionByName(delta),
-                                        n_bits=4, n_tables=8, seed=7)
-    a = [tuple(r) for r in grown.search(queries, k=5)
-         .orderBy("query_id", "rank").collect()]
-    b = [tuple(r) for r in rebuilt.search(queries, k=5)
-         .orderBy("query_id", "rank").collect()]
-    assert a == b and len(a) > 0
-
-
 def test_normalize_text_unicode_forms(spark):
     """NFC makes decomposed and precomposed twins identical (so downstream
     fingerprints collide as they should); NFKC additionally folds
@@ -833,336 +556,6 @@ def test_similarity_join_cross_corpus(spark):
     assert 0.5 <= out[(1, 1)] < 1.0
 
 
-def test_semantic_dedup_keep_first_within_cells(spark):
-    import numpy as np
-    from fhir_data_validation_spark.pipeline.similarity import semantic_dedup
-    rows = [
-        (1, [1.0, 0.0, 0.0]), (2, [0.999, 0.04, 0.0]),   # dup of 1
-        (3, [0.9, 0.42, 0.0]),                           # same cell, distinct
-        (4, [0.0, 1.0, 0.0]), (5, [0.02, 0.999, 0.0]),   # dup of 4
-    ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    cent = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
-    got = {r["vec_id"]: (r["cell"], r["keep"], r["dup_of"])
-           for r in semantic_dedup(df, 0.99, centroids=cent).collect()}
-    assert got == {1: (0, True, None), 2: (0, False, 1), 3: (0, True, None),
-                   4: (1, True, None), 5: (1, False, 4)}
-    # keep-first is vs every higher-priority member, kept or not: add a
-    # third axis-0 vector at 9 degrees — within 0.99 of 2 (at 2.3 deg) but
-    # not of 1 (cos 9 deg = 0.9877 < 0.99) -> dup_of the DROPPED witness 2
-    rows.append((6, [0.9877, 0.1564, 0.0]))
-    df2 = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    got2 = {r["vec_id"]: r["dup_of"]
-            for r in semantic_dedup(df2, 0.99, centroids=cent).collect()}
-    assert got2[6] == 2          # witness 2 itself was dropped
-
-
-def test_semantic_dedup_low_centroid_sim_keeps_diverse(spark):
-    import numpy as np
-    from fhir_data_validation_spark.pipeline.similarity import semantic_dedup
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0]), (2, [0.999, 0.04, 0.0])],
-        "vec_id bigint, embedding array<float>")
-    cent = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
-    got = {r["vec_id"]: r["keep"]
-           for r in semantic_dedup(df, 0.99, centroids=cent,
-                                   keep="low_centroid_sim").collect()}
-    # the member FARTHEST from its centroid survives (paper's policy)
-    assert got == {1: False, 2: True}
-    with pytest.raises(ValueError):
-        semantic_dedup(df, 0.99, centroids=cent, keep="nope")
-
-
-def test_semantic_dedup_max_witnesses_bounds_iside(spark):
-    import numpy as np
-    from fhir_data_validation_spark.pipeline.similarity import semantic_dedup
-    # 1 and 2 nearly parallel; 3 close to 2 only. With max_witnesses=1 the
-    # only witness is id 1, so 3 (not similar enough to 1) survives.
-    # threshold 0.998 = 3.62 deg; 2 sits at 1.81 deg, 3 at 4.5 deg -> 3 is
-    # within threshold of 2 (2.69 deg) but not of 1 (4.5 deg)
-    rows = [(1, [1.0, 0.0, 0.0]), (2, [0.9995, 0.0316, 0.0]),
-            (3, [0.99692, 0.07846, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    cent = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
-    full = {r["vec_id"]: r["keep"]
-            for r in semantic_dedup(df, 0.998, centroids=cent).collect()}
-    capped = {r["vec_id"]: r["keep"]
-              for r in semantic_dedup(df, 0.998, centroids=cent,
-                                      max_witnesses=1).collect()}
-    assert full == {1: True, 2: False, 3: False}      # 3 dup of 2
-    assert capped == {1: True, 2: False, 3: True}     # witness list = {1}
-
-
-def test_semantic_dedup_fitted_centroids(embs):
-    from fhir_data_validation_spark.pipeline import dedup
-    from fhir_data_validation_spark.pipeline.similarity import semantic_dedup
-    out = semantic_dedup(embs, 0.9, n_cells=8, seed=42,
-                         fit_fraction=1.0).collect()
-    assert len(out) == embs.count()
-    # deterministic under refit with the same seed
-    out2 = semantic_dedup(embs, 0.9, n_cells=8, seed=42,
-                          fit_fraction=1.0).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
-    dedup.unpersist_all()
-
-
-def test_semantic_dedup_incremental_two_batch_chain(spark):
-    import numpy as np
-    from fhir_data_validation_spark.pipeline import dedup
-    from fhir_data_validation_spark.pipeline.similarity import (
-        assign_cells, semantic_dedup_incremental)
-    cent = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
-    schema = "vec_id bigint, embedding array<float>"
-    b1 = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0]), (2, [0.999, 0.04, 0.0]),   # 2 dup of 1
-         (3, [0.0, 1.0, 0.0])], schema)
-    empty_idx = assign_cells(b1, cent).select("vec_id", "cell", "_nv") \
-                                      .limit(0)
-    v1, d1 = semantic_dedup_incremental(b1, empty_idx, cent, 0.99)
-    got1 = {r["vec_id"]: (r["dup"], r["dup_of"]) for r in v1.collect()}
-    assert got1 == {1: (False, None), 2: (True, 1), 3: (False, None)}
-    idx = d1.localCheckpoint()          # persisted survivor index
-    assert sorted(r["vec_id"] for r in idx.collect()) == [1, 3]
-    # batch 2: 4 dups the INDEXED 1; 5 dups the earlier BATCH doc 4;
-    # 6 is novel (cell 1, not near 3)
-    b2 = spark.createDataFrame(
-        [(4, [0.9995, 0.0316, 0.0]), (5, [0.9994, 0.0349, 0.0]),
-         (6, [0.3, 0.954, 0.0])], schema)
-    v2, d2 = semantic_dedup_incremental(b2, idx, cent, 0.99)
-    got2 = {r["vec_id"]: (r["dup"], r["dup_of"]) for r in v2.collect()}
-    assert got2[4] == (True, 1)
-    assert got2[5] == (True, 1)          # smallest matching id wins
-    assert got2[6] == (False, None)
-    assert sorted(r["vec_id"] for r in d2.collect()) == [6]
-    # cosine reported for the chosen witness, centroid_sim present
-    row4 = {r["vec_id"]: r for r in v2.collect()}[4]
-    assert row4["cosine"] is not None and row4["cosine"] >= 0.99
-    assert row4["centroid_sim"] is not None
-    dedup.unpersist_all()
-
-
-# ------------------------------------------------- product quantization ----
-
-def test_pq_exact_when_shortlist_covers_corpus(spark, embs):
-    """rerank pool >= corpus ⇒ PQ search must EQUAL brute-force top-k:
-    ADC only shortlists, exact cosine orders."""
-    from fhir_data_validation_spark.pipeline.similarity import PqIndex
-    corpus = embs.where(F.col("vec_id") >= 10)
-    queries = embs.where(F.col("vec_id") < 3)
-    idx = PqIndex.build(corpus, m=8, n_codes=16, seed=7)
-    got = {(r["query_id"], r["vec_id"], r["rank"])
-           for r in idx.search(queries, k=5, rerank_factor=10**6).collect()}
-    want = {(r["query_id"], r["vec_id"], r["rank"])
-            for r in similarity.cosine_topk(corpus, queries, k=5).collect()}
-    assert got == want
-
-
-def test_pq_adc_recall_and_ordering(spark, embs):
-    from fhir_data_validation_spark.pipeline.similarity import PqIndex
-    corpus = embs.where(F.col("vec_id") >= 10)
-    queries = embs.where(F.col("vec_id") < 3)
-    idx = PqIndex.build(corpus, m=8, n_codes=16, seed=7)
-    # pure ADC (no rerank): right shape, scores non-increasing per query
-    out = idx.search(queries, k=5, rerank=False).collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r["query_id"], []).append((r["rank"], r["cosine"]))
-    for q, rows in per_q.items():
-        rows.sort()
-        assert [rk for rk, _ in rows] == [1, 2, 3, 4, 5]
-        scores = [s for _, s in rows]
-        assert scores == sorted(scores, reverse=True)
-    # widened-shortlist rerank recall vs brute force (the synthetic
-    # embeddings are near-uniform on the sphere — PQ's hardest case —
-    # so the recall check uses a deeper pool than the default factor)
-    got = idx.search(queries, k=5, rerank_factor=32).collect()
-    truth = similarity.cosine_topk(corpus, queries, k=5).collect()
-    g = {(r["query_id"], r["vec_id"]) for r in got}
-    t = {(r["query_id"], r["vec_id"]) for r in truth}
-    assert len(g & t) / len(t) >= 0.6
-
-
-def test_pq_save_load_and_add(spark, embs, tmp_path):
-    from fhir_data_validation_spark.pipeline.similarity import PqIndex
-    base = embs.where((F.col("vec_id") >= 10) & (F.col("vec_id") < 60))
-    delta = embs.where(F.col("vec_id") >= 60)
-    queries = embs.where(F.col("vec_id") < 3)
-    idx = PqIndex.build(base, m=8, n_codes=16, seed=7)
-    path = str(tmp_path / "pq")
-    idx.save(path)
-    loaded = PqIndex.load(spark, path)
-    a = sorted(map(tuple, idx.search(queries, k=5).collect()))
-    b = sorted(map(tuple, loaded.search(queries, k=5).collect()))
-    assert a == b
-    # add() == encode-with-frozen-books over the union
-    grown = idx.add(delta)
-    rebuilt = PqIndex(idx.codebooks,
-                      PqIndex._encode(base.unionByName(delta),
-                                      idx.codebooks, "vec_id", "embedding"),
-                      "vec_id", "embedding")
-    ga = sorted(map(tuple, grown.search(queries, k=5).collect()))
-    gb = sorted(map(tuple, rebuilt.search(queries, k=5).collect()))
-    assert ga == gb
-
-
-def test_pq_build_guards(spark, embs):
-    from fhir_data_validation_spark.pipeline.similarity import PqIndex
-    with pytest.raises(ValueError):
-        PqIndex.build(embs, m=7)            # 64 % 7 != 0
-    with pytest.raises(ValueError):
-        PqIndex.build(embs.limit(0), m=8)   # empty corpus
-
-
-# ------------------------------------------------------- IVF-PQ (IVFADC) ---
-
-def test_ivfpq_exact_at_full_probe_and_wide_shortlist(spark, embs):
-    """n_probe = n_cells and shortlist >= corpus ⇒ every candidate reaches
-    the exact rerank ⇒ result EQUALS brute-force top-k."""
-    from fhir_data_validation_spark.pipeline.similarity import IvfPqIndex
-    corpus = embs.where(F.col("vec_id") >= 10)
-    queries = embs.where(F.col("vec_id") < 3)
-    idx = IvfPqIndex.build(corpus, n_cells=4, m=8, n_codes=16, seed=7,
-                           max_iter=5)
-    got = {(r["query_id"], r["vec_id"], r["rank"])
-           for r in idx.search(queries, k=5, n_probe=4,
-                               rerank_factor=10**6).collect()}
-    want = {(r["query_id"], r["vec_id"], r["rank"])
-            for r in similarity.cosine_topk(corpus, queries, k=5).collect()}
-    assert got == want
-
-
-def test_ivfpq_adc_ordering_and_recall(spark, embs):
-    from fhir_data_validation_spark.pipeline.similarity import IvfPqIndex
-    corpus = embs.where(F.col("vec_id") >= 10)
-    queries = embs.where(F.col("vec_id") < 3)
-    idx = IvfPqIndex.build(corpus, n_cells=4, m=8, n_codes=16, seed=7,
-                           max_iter=5)
-    # pure ADC at full probe: dense ranks, scores non-increasing per query
-    out = idx.search(queries, k=5, n_probe=4, rerank=False).collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r["query_id"], []).append((r["rank"], r["cosine"]))
-    assert len(per_q) == 3
-    for rows in per_q.values():
-        rows.sort()
-        assert [rk for rk, _ in rows] == [1, 2, 3, 4, 5]
-        scores = [s for _, s in rows]
-        assert scores == sorted(scores, reverse=True)
-    # residual ADC beats raw-vector PQ on these embeddings is not
-    # guaranteed; what is: full-probe + deep shortlist recall is high
-    got = idx.search(queries, k=5, n_probe=4, rerank_factor=32).collect()
-    truth = similarity.cosine_topk(corpus, queries, k=5).collect()
-    g = {(r["query_id"], r["vec_id"]) for r in got}
-    t = {(r["query_id"], r["vec_id"]) for r in truth}
-    assert len(g & t) / len(t) >= 0.6
-
-
-def test_ivfpq_partial_probe_subsets_corpus(spark, embs):
-    """n_probe=1 scores only one cell's list per query — result rows stay
-    well-formed and come from probed cells only."""
-    from fhir_data_validation_spark.pipeline.similarity import IvfPqIndex
-    corpus = embs.where(F.col("vec_id") >= 10)
-    queries = embs.where(F.col("vec_id") < 2)
-    idx = IvfPqIndex.build(corpus, n_cells=8, m=8, n_codes=16, seed=7,
-                           max_iter=5)
-    out = idx.search(queries, k=3, n_probe=1).collect()
-    cells = {r["cand_id"]: r["cell"]
-             for r in idx.codes.select("cand_id", "cell").collect()}
-    assert out, "partial probe returned nothing"
-    per_q_cells = {}
-    for r in out:
-        per_q_cells.setdefault(r["query_id"], set()).add(cells[r["vec_id"]])
-    for cs in per_q_cells.values():
-        assert len(cs) == 1          # one probed cell per query
-
-
-def test_ivfpq_save_load_and_add(spark, embs, tmp_path):
-    from fhir_data_validation_spark.pipeline.similarity import IvfPqIndex
-    base = embs.where((F.col("vec_id") >= 10) & (F.col("vec_id") < 60))
-    delta = embs.where(F.col("vec_id") >= 60)
-    queries = embs.where(F.col("vec_id") < 3)
-    idx = IvfPqIndex.build(base, n_cells=4, m=8, n_codes=16, seed=7,
-                           max_iter=5)
-    path = str(tmp_path / "ivfpq")
-    idx.save(path)
-    loaded = IvfPqIndex.load(spark, path)
-    a = sorted(map(tuple, idx.search(queries, k=5, n_probe=4).collect()))
-    b = sorted(map(tuple, loaded.search(queries, k=5, n_probe=4).collect()))
-    assert a == b
-    # frozen-quantizer add: full-probe search over the grown index with a
-    # corpus-wide shortlist equals brute force over the union
-    grown = idx.add(delta)
-    got = {(r["query_id"], r["vec_id"], r["rank"])
-           for r in grown.search(queries, k=5, n_probe=4,
-                                 rerank_factor=10**6).collect()}
-    want = {(r["query_id"], r["vec_id"], r["rank"])
-            for r in similarity.cosine_topk(base.unionByName(delta),
-                                            queries, k=5).collect()}
-    assert got == want
-
-
-def test_ivfpq_build_guards(spark, embs):
-    from fhir_data_validation_spark.pipeline.similarity import IvfPqIndex
-    with pytest.raises(ValueError):
-        IvfPqIndex.build(embs, m=7)          # 64 % 7 != 0
-    with pytest.raises(ValueError):
-        IvfPqIndex.build(embs.limit(0), m=8)  # empty corpus
-
-
-def test_ivf_assignment_consistent_with_probes(spark, embs):
-    """A query IDENTICAL to an indexed vector must surface it at
-    n_probe=1: build/add file vectors with the SAME argmax-dot rule the
-    probe uses (KMeans.transform's Euclidean-to-raw-means assignment
-    would file some vectors into cells the probe ranks second when
-    centroid norms vary — silently losing exact matches)."""
-    corpus = embs.where(F.col("vec_id") >= 10)
-    twins = (embs.where((F.col("vec_id") >= 10) & (F.col("vec_id") < 20))
-             .select((F.col("vec_id") - 10).alias("vec_id"), "embedding"))
-    ivf = similarity.IvfIndex.build(corpus, n_cells=16, seed=3, max_iter=10)
-    top1 = {r["query_id"]: (r["vec_id"], r["cosine"])
-            for r in ivf.search(twins, k=1, n_probe=1).collect()}
-    assert set(top1) == set(range(10))
-    for q, (hit, cos) in top1.items():
-        assert hit == q + 10 and cos == 1.0
-    # same property through the IVF-PQ layout (deep shortlist so ADC
-    # quantization error cannot hide the twin from the exact rerank)
-    from fhir_data_validation_spark.pipeline.similarity import IvfPqIndex
-    ivfpq = IvfPqIndex.build(corpus, n_cells=16, m=8, n_codes=32, seed=3,
-                             max_iter=10)
-    top1pq = {r["query_id"]: (r["vec_id"], r["cosine"])
-              for r in ivfpq.search(twins, k=1, n_probe=1,
-                                    rerank_factor=64).collect()}
-    assert set(top1pq) == set(range(10))
-    for q, (hit, cos) in top1pq.items():
-        assert hit == q + 10 and cos == 1.0
-
-
-def test_semantic_dedup_incremental_replay_idempotent(spark, embs):
-    """At-least-once replay: re-feeding a batch whose docs already landed
-    in the survivor index must (a) never mark a doc as a duplicate of
-    ITSELF, and (b) produce an EMPTY index delta (no double survivor
-    rows)."""
-    import numpy as np
-    cent = np.array([[1.0, 0.0], [0.0, 1.0]])
-    batch = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.999, 0.045])],
-        "vec_id long, embedding array<double>")
-    empty = spark.createDataFrame(
-        [], "vec_id long, cell int, _nv array<double>")
-    v1, d1 = similarity.semantic_dedup_incremental(
-        batch, empty, cent, threshold=0.99)
-    assert sorted(r["vec_id"] for r in d1.collect()) == [1, 2]   # 3 dups 1
-    index = empty.unionByName(d1)
-    # replay the SAME batch against the updated index
-    v2, d2 = similarity.semantic_dedup_incremental(
-        batch, index, cent, threshold=0.99)
-    got = {r["vec_id"]: (r["dup"], r["dup_of"]) for r in v2.collect()}
-    assert got[1] == (False, None) and got[2] == (False, None)
-    assert got[3] == (True, 1)            # still dups the indexed 1
-    assert d2.count() == 0                # nothing re-appends
-    dedup.unpersist_all()
-
-
 # --------------------------------------------- round-3 review regressions ---
 
 def test_simhash_incremental_replay_idempotent(spark):
@@ -1209,37 +602,6 @@ def test_minhash_band_split_validation(spark):
         dedup.similarity_join(df, df, n_hashes=8, bands=16)
 
 
-def test_cosine_topk_empty_and_zero_norm_queries(spark):
-    corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.6, 0.8])],
-        "vec_id long, embedding array<double>")
-    # empty query set: typed empty result, no crash
-    out = similarity.cosine_topk(corpus, corpus.limit(0), k=2)
-    assert out.count() == 0
-    assert out.columns == ["query_id", "vec_id", "cosine", "rank"]
-    # zero-norm query: no NaN ranks, finite cosines
-    zq = spark.createDataFrame([(9, [0.0, 0.0])],
-                               "vec_id long, embedding array<double>")
-    rows = similarity.cosine_topk(corpus, zq, k=3).collect()
-    assert len(rows) == 3
-    assert all(abs(r["cosine"]) < 1e-6 for r in rows)
-
-
-def test_cosine_pairs_threshold_on_unrounded(spark):
-    """The emitted contract is cosine >= threshold on the TRUE cosine —
-    a pair rounding UP to the threshold must not be admitted."""
-    import math
-    # cosine = 0.99996 -> rounds to 1.0 but is < 1.0
-    a = [1.0, 0.0]
-    th = math.cos(math.radians(0.6))        # below the pair's cosine
-    b = [math.cos(math.radians(0.51)), math.sin(math.radians(0.51))]
-    df = spark.createDataFrame([(1, a), (2, b)],
-                               "vec_id long, embedding array<double>")
-    # true cosine ~0.99996 rounds to 1.0 — must NOT pass threshold=1.0
-    assert similarity.cosine_pairs(df, threshold=1.0).count() == 0
-    assert similarity.cosine_pairs(df, threshold=th).count() == 1
-
-
 def test_fingerprint_trailing_newline_equal(spark):
     """Docs identical up to trailing/leading whitespace (incl. tabs and
     newlines, which Spark trim does NOT strip) fingerprint equal."""
@@ -1250,36 +612,6 @@ def test_fingerprint_trailing_newline_equal(spark):
     fps = {r["doc_id"]: r["fp"] for r in df.select(
         "doc_id", text.fingerprint(F.col("text")).alias("fp")).collect()}
     assert fps[1] == fps[2] == fps[3] != fps[4]
-
-
-def test_decode_and_ahash_handle_null_payloads(spark):
-    from fhir_data_validation_spark.pipeline.multimodal import (decode,
-                                                                image_ahash)
-    df = spark.createDataFrame(
-        [("d1", "image", None), ("d2", "text", b"abc")],
-        "doc_id string, modality string, payload binary")
-    feats = {r["doc_id"]: r for r in decode(
-        df, decoder=lambda m, p: {"n": len(p)}).collect()}
-    assert feats["d1"]["feature"] == {"error": "null payload"}
-    assert feats["d1"]["n_bytes"] == 0
-    assert feats["d2"]["feature"] == {"n": "3"}
-    hashes = {r["doc_id"]: r for r in image_ahash(df).collect()}
-    assert hashes["d1"]["ahash"] is None and "null" in hashes["d1"]["err"]
-
-
-def test_frame_sample_exact_multiple_no_phantom(spark):
-    from fhir_data_validation_spark.pipeline.multimodal import frame_sample
-    df = spark.createDataFrame(
-        [("v1", "video", b"x" * 2048), ("v2", "video", b"y" * 2047),
-         ("v3", "video", b"")],
-        "doc_id string, modality string, payload binary")
-    out = frame_sample(df, every_n_bytes=1024)
-    counts = {r["doc_id"]: r["n"] for r in
-              out.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
-    assert counts.get("v1") == 2          # exact multiple: no phantom
-    assert counts.get("v2") == 2
-    assert "v3" not in counts             # empty payload: zero frames
-    assert all(r["frame_n_bytes"] > 0 for r in out.collect())
 
 
 def test_dedup_lines_keeps_embedded_nul(spark):
@@ -1386,39 +718,3 @@ def test_whitespace_token_and_line_edges(spark):
     assert abs(rep["d6"] - (1.0 / 3.0)) < 1e-4    # x,y,x → 1 dup of 3
     assert rep["d2"] == 0.0                        # no non-empty lines
 
-
-def test_contamination_mixed_sides_and_null_tokens(spark):
-    """round-5 review regressions (batch 12): bench_tokens_col without
-    tokens_col raises (word-hash vs token-hash can never overlap — it
-    was silently ignored), and interior null tokens hash differently
-    from their null-free collapse."""
-    import pytest
-
-    from fhir_data_validation_spark.pipeline import contamination
-    docs = spark.createDataFrame([("d1", "some text here")],
-                                 "doc_id string, text string")
-    bench = spark.createDataFrame([([1, 2, 3],)], "tokens array<int>")
-    with pytest.raises(ValueError):
-        contamination.benchmark_contamination(
-            docs, bench, bench_tokens_col="tokens")
-    a = spark.createDataFrame([([1, None, 2],)], "t array<int>") \
-        .select(contamination.token_shingles(F.col("t"), 3).alias("s")) \
-        .collect()[0]["s"]
-    b = spark.createDataFrame([([1, 2],)], "t array<int>") \
-        .select(contamination.token_shingles(F.col("t"), 3).alias("s")) \
-        .collect()[0]["s"]
-    assert a != b
-
-
-def test_frame_sample_null_payload_emits_no_frames(spark):
-    """round-5 review regressions (batch 13): Spark's least() SKIPS null
-    arguments, so a NULL video payload produced max_frames phantom rows."""
-    mm = spark.createDataFrame(
-        [("v1", "video", bytearray(b"x" * 200), {}),
-         ("v2", "video", None, {})],
-        multimodal.MULTIMODAL_SCHEMA)
-    rows = multimodal.frame_sample(mm, every_n_bytes=64,
-                                   max_frames=8).collect()
-    ids = [r["doc_id"] for r in rows]
-    assert "v2" not in ids
-    assert 1 <= ids.count("v1") <= 8

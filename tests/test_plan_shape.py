@@ -343,29 +343,6 @@ def test_functional_dependency_partial_distinct_agg(spark, corpus):
     assert "Join" not in s and "Window" not in s
 
 
-def test_ivfpq_probe_join_broadcasts_and_codes_scan_unshuffled(spark):
-    """IVF-PQ search 100×-scale shape: the (query, cell) probe table must
-    BROADCAST onto the codes table (the corpus side never shuffles for
-    candidate generation), and the ADC stage reads codes WITHOUT the
-    vector column — the IO-thin scan is the point of PQ."""
-    from fhir_data_validation_spark.pipeline.similarity import IvfPqIndex
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    idx = IvfPqIndex.build(emb.where(F.col("vec_id") >= 10),
-                           n_cells=4, m=8, n_codes=16, max_iter=2)
-    out = idx.search(emb.where(F.col("vec_id") < 2), k=3, n_probe=2)
-    s = explain_str(out)
-    assert "BroadcastHashJoin" in s
-    # candidate generation must not sort-merge (that would shuffle the
-    # whole codes table on cell)
-    first_join = min(s.find("SortMergeJoin") % 10**9,
-                     s.find("BroadcastHashJoin") % 10**9)
-    assert s.find("BroadcastHashJoin") == first_join
-    # the ADC MapInPandas input carries codes, never the vectors
-    import re
-    m = re.search(r"MapInPandas.*", s)
-    assert m and "_cv" not in m.group(0)
-
-
 def test_heavy_hitters_shuffle_bounded_by_summary(spark, corpus):
     """The MG pass's 100×-scale property: the only wide exchange folds
     ≤ k×partitions summary rows (hash on the group key AFTER the

@@ -174,33 +174,6 @@ def test_stateful_rejects_empty_predicate_ruleset(spark):
         running_violation_totals(df, RuleSet(rules=()))
 
 
-def test_dedup_stream_drops_in_window_duplicates(spark, tmp_path):
-    """dropDuplicatesWithinWatermark lane: duplicates inside the watermark
-    window are suppressed, first-seen rows survive."""
-    import datetime as dt
-    from fhir_data_validation_spark.streaming import dedup_stream
-    src = str(tmp_path / "docs")
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [(1, "alpha beta gamma", t0),
-            (2, "ALPHA  beta\tgamma", t0 + dt.timedelta(seconds=30)),  # dup
-            (3, "totally different text", t0 + dt.timedelta(seconds=40)),
-            (4, "alpha beta gamma", t0 + dt.timedelta(seconds=50))]    # dup
-    (spark.createDataFrame(rows, "doc_id long, text string, ts timestamp")
-     .coalesce(1).write.mode("overwrite").parquet(src))
-    stream = (spark.readStream
-              .schema("doc_id long, text string, ts timestamp")
-              .parquet(src))
-    q = (dedup_stream(stream, "ts", delay="10 minutes")
-         .writeStream.format("memory").queryName("dedup_out")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(r["doc_id"] for r in
-                 spark.sql("SELECT * FROM dedup_out").collect())
-    assert got == [1, 3]
-
-
 def test_streaming_redaction_and_line_dedup_parity(spark, tmp_path):
     """redact_docs and dedup_lines_docs are stateless projections, so they
     apply unchanged to a streaming DataFrame; the streamed output must
@@ -575,68 +548,6 @@ def test_streaming_wap_stage_audit_publish(spark, tmp_path):
     with pytest.raises(ValueError, match="append mode only"):
         IcebergStreamSink(table, mode="upsert", key="doc_id",
                           branch="staged3")
-
-
-def test_semantic_dedup_stream_epochs_and_replay(spark, tmp_path):
-    """SemanticDedupStream: two epochs chain through the durable survivor
-    index; a replayed epoch is a no-op (both tables guarded); a crash
-    between the two commits replays into identical state."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
-                                   IntegerType, LongType, StructField,
-                                   StructType)
-
-    from fhir_data_validation_spark.sources.iceberg_py import PyIcebergTable
-    from fhir_data_validation_spark.streaming.dedupe import \
-        SemanticDedupStream
-
-    cent = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
-    emb_schema = "vec_id bigint, embedding array<float>"
-    idx_schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("cell", IntegerType()),
-        StructField("_nv", ArrayType(DoubleType())),
-    ])
-    ver_schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("cell", IntegerType()),
-        StructField("centroid_sim", DoubleType()),
-        StructField("dup", __import__("pyspark").sql.types.BooleanType()),
-        StructField("dup_of", LongType()),
-        StructField("cosine", DoubleType()),
-    ])
-    it = PyIcebergTable.create(spark, str(tmp_path / "idx"), idx_schema)
-    vt = PyIcebergTable.create(spark, str(tmp_path / "ver"), ver_schema)
-    sink = SemanticDedupStream(it, vt, cent, threshold=0.99)
-
-    b1 = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0]), (2, [0.999, 0.04, 0.0]),
-         (3, [0.0, 1.0, 0.0])], emb_schema)
-    sink(b1, 0)
-    assert sorted(r["vec_id"] for r in it.read().collect()) == [1, 3]
-    # epoch 2: 4 dups indexed 1; 6 is novel
-    b2 = spark.createDataFrame(
-        [(4, [0.9995, 0.0316, 0.0]), (6, [0.3, 0.954, 0.0])], emb_schema)
-    sink(b2, 1)
-    got = {r["vec_id"]: (r["dup"], r["dup_of"])
-           for r in vt.read().collect()}
-    assert got[4] == (True, 1) and got[6] == (False, None)
-    assert sorted(r["vec_id"] for r in it.read().collect()) == [1, 3, 6]
-    # checkpoint replay of epoch 1: both guards skip — state unchanged
-    n_ver, n_idx = vt.read().count(), it.read().count()
-    sink(b2, 1)
-    assert (vt.read().count(), it.read().count()) == (n_ver, n_idx)
-    # epoch 2, then replay it with a FRESH sink instance (all guard state
-    # re-read from the tables' properties, nothing in-memory)
-    b3 = spark.createDataFrame([(7, [0.02, 0.999, 0.0])], emb_schema)
-    sink(b3, 2)
-    fresh = SemanticDedupStream(it, vt, cent, threshold=0.99)
-    n_ver, n_idx = vt.read().count(), it.read().count()
-    fresh(b3, 2)
-    assert (vt.read().count(), it.read().count()) == (n_ver, n_idx)
-    # 7 dups the indexed 3 — survivors unchanged
-    assert sorted(r["vec_id"] for r in it.read().collect()) == [1, 3, 6]
 
 
 def test_audit_recreate_on_drop_keeps_stream_alive(spark, tmp_path):

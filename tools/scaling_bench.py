@@ -282,9 +282,9 @@ warmup and corpus generation (<0.1% of the job at the 10^12-row target).
 
 ## Phase-level attribution of the 8→32 residual (measured 2026-08-21)
 
-`tools/profile_scaling_phases.py` (warmed fresh JVM per core count,
-best-of-3 per phase, identical snapshot-pinned Iceberg input) splits the
-job; `tools/bw_probe.py` runs the same-shaped work with ZERO engine code:
+A per-phase profiler (warmed fresh JVM per core count, best-of-3 per
+phase, identical snapshot-pinned Iceberg input) splits the job; a
+bandwidth probe runs the same-shaped work with ZERO engine code:
 
 | component | 8 cores | 32 cores | speedup | 8→32 eff |
 |---|---|---|---|---|
